@@ -934,7 +934,8 @@ def _multiset_mismatch(a: DataFrame, b: DataFrame) -> int:
     cols = list(a.columns)
     # withColumn would silently REPLACE a data column of either name and
     # corrupt the count (advice r15).
-    assert "__side" not in cols and "__d" not in cols, cols
+    if "__side" in cols or "__d" in cols:
+        raise ValueError(f"_multiset_mismatch: reserved column name in {cols}")
     tagged = a.withColumn("__side", F.lit(1)).unionByName(
         b.select(*cols).withColumn("__side", F.lit(-1))
     )

@@ -100,6 +100,12 @@ def run_pipeline(
     }
 
     pairs = fetch_archive_lists(fetcher, usernames)
+    for user, status in pairs.failed:
+        log.log(
+            "error_fetch_archives",
+            username=user,
+            http_status=None if status is None else str(status),
+        )
     fresh = [(u, a) for u, a in pairs if (u, a) not in processed]
 
     if distributed:
@@ -140,7 +146,7 @@ def run_pipeline(
         usernames=usernames,
         fetched_archives=len(fresh),
         appended_games=result.appended_games,
-        errors=len(errors),
+        errors=len(pairs.failed) + len(errors),
     )
 
 

@@ -811,6 +811,19 @@ def _hot_key_fence(
         )
 
 
+_NULL_KEY, _NAN_KEY = object(), object()
+
+
+def _run_keys(keys: list, nulls: list) -> list:
+    """Keys normalized for per-key run detection in a sorted partition.
+    Arrow hands a nullable numeric key to pandas as float64 NaN for
+    NULL and NaN alike, and NaN != NaN would make every such row its
+    own run (advice r15). Spark groups NULL and NaN keys apart, so each
+    gets its own sentinel and a NULL run next to a NaN run stays two
+    runs; the Spark-side `nulls` flags tell them apart."""
+    return [_NULL_KEY if n else _NAN_KEY if k != k else k for k, n in zip(keys, nulls)]
+
+
 def pattern_matches(
     events: DataFrame,
     steps: tuple[str, ...] = ("signup", "view", "purchase"),
@@ -854,6 +867,7 @@ def pattern_matches(
         type_col,
         tiebreak_col,
         F.unix_micros(F.col(ts_col)).alias("__us"),
+        F.col(user_col).isNull().alias("__knull"),
     )
 
     if max_events_per_key is not None:
@@ -901,17 +915,13 @@ def pattern_matches(
                 }
             )
 
-        # run detection compares NORMALIZED keys: a nullable numeric key
-        # arrives from Arrow as float64 with NaN, and NaN != NaN would
-        # make every null-key row its own run (matcher-state reset)
-        # where the old groupBy().applyInPandas grouped all null keys as
-        # one group (advice r15). Emission keeps the raw values.
-        nullkey = object()
+        # run detection compares NORMALIZED keys (see _run_keys);
+        # emission keeps the raw values
         for pdf in it:
             rows = []
             us_arr = pdf["__us"].astype("int64").tolist()
             keys_arr = pdf[user_col].tolist()
-            nk = [nullkey if (k is None or k != k) else k for k in keys_arr]
+            nk = _run_keys(keys_arr, pdf["__knull"].tolist())
             types_arr = pdf[type_col].tolist()
             i, n = 0, len(us_arr)
             while i < n:
@@ -1073,6 +1083,7 @@ def cusum_changepoints(
         key_col,
         tiebreak_col,
         F.unix_micros(F.col(ts_col)).alias("__us"),
+        F.col(key_col).isNull().alias("__knull"),
         (F.floor(F.col(value_col).cast("double") * 1_000_000.0 + 0.5))
         .cast("long")
         .alias("__x"),
@@ -1095,10 +1106,8 @@ def cusum_changepoints(
     def gen(it):
         cur_key = None
         s_pos = s_neg = 0
-        # null keys normalize to one sentinel for run detection — same
-        # NaN != NaN hazard as pattern_matches (advice r15); emitted
-        # rows keep the raw key value.
-        nullkey = object()
+        # run detection compares NORMALIZED keys (see _run_keys);
+        # emitted rows keep the raw key value
         for pdf in it:
             rows = []
             us_arr = pdf["__us"].astype("int64").tolist()
@@ -1106,7 +1115,7 @@ def cusum_changepoints(
             keys_arr = pdf[key_col].tolist()
             for key, nk, us, x in zip(
                 keys_arr,
-                (nullkey if (k is None or k != k) else k for k in keys_arr),
+                _run_keys(keys_arr, pdf["__knull"].tolist()),
                 us_arr,
                 x_arr,
             ):

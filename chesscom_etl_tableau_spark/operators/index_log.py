@@ -6,10 +6,8 @@ The raw persisted-index surfaces (`ivf_persist`/`ivf_append`/
 rewrite the live directory with dynamic partition overwrite, which
 DELETES the files they replace — correct under their documented
 exclusive-writer contract, but a concurrent probe mid-rewrite reads
-partial state. This module adds the manifest discipline the repo's
-ingest sink already uses (`plans/ingest.py::commit_append_manifest` —
-immutable data files + generation manifests published by EXCLUSIVE
-CREATE) on top of the SAME hive layout:
+partial state. This module puts the generation log the ingest sink's
+manifests use (`plans/genlog.py`) on top of the SAME hive layout:
 
     index_path/
       <part_col>=<v>/part-*.parquet          immutable data files
@@ -24,14 +22,15 @@ CREATE) on top of the SAME hive layout:
   read exactly its listed files; partition pruning happens manifest-
   side (only the requested partitions' files are handed to the scan),
   which is file-granular — strictly finer than directory pruning.
-- Publication is optimistic-concurrency on the generation number
-  (locally ``open(.., "x")``; conditional PUT on S3): exactly one
-  writer wins a generation, a loser re-reads and retries with the
-  winner's lists carried. Concurrent APPENDS serialize safely this
-  way; concurrent compact/refit remain a single-maintainer-at-a-time
-  contract (two simultaneous rewrites of the same partition would
-  both be "live" — the CAS serializes the publishes but not the
-  intent), which is the operational norm for index maintenance.
+- Publication is the generation-log protocol of `plans/genlog.py`
+  (exclusive create of gen N+1, protocol fence on every read). A lost
+  append re-reads the winner's doc and retries with its lists carried.
+  Concurrent APPENDS serialize safely this way; concurrent
+  compact/refit remain a single-maintainer-at-a-time contract (two
+  simultaneous rewrites of the same partition would both be "live" —
+  the exclusive create serializes the publishes but not the intent),
+  so they raise `GenerationConflict` on a lost race instead of
+  retrying. That is the operational norm for index maintenance.
 - `index_log_gc` deletes data files unreferenced by the retained
   generations — the only deletion on this path, run with a retention
   horizon longer than any reader pin.
@@ -49,47 +48,22 @@ follows: Iceberg/Delta snapshot isolation via manifest generations.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PROTOCOL = 1
+from chesscom_etl_tableau_spark.plans import genlog
+# re-exported: compact/refit/delete raise it on a lost race
+from chesscom_etl_tableau_spark.plans.genlog import GenerationConflict  # noqa: F401
 
-
-class GenerationConflict(RuntimeError):
-    """Another writer published this generation first."""
-
-
-def _gen_dir(index_path: str) -> str:
-    return os.path.join(index_path, "_generations")
-
-
-def _gen_file(index_path: str, gen: int) -> str:
-    return os.path.join(_gen_dir(index_path), f"gen-{gen:012d}.json")
+PROTOCOL = genlog.PROTOCOL
 
 
 def index_log_current(index_path: str) -> tuple[int, dict]:
     """(generation, doc) of the newest published generation; (0, {})
     for an unlogged index. LIST + GET only, no Spark job."""
-    d = _gen_dir(index_path)
-    try:
-        names = [n for n in os.listdir(d) if n.startswith("gen-")]
-    except FileNotFoundError:
-        return 0, {}
-    if not names:
-        return 0, {}
-    latest = max(names)  # zero-padded => lexicographic == numeric
-    gen = int(latest.removeprefix("gen-").removesuffix(".json"))
-    with open(os.path.join(d, latest)) as f:
-        doc = json.load(f)
-    if doc.get("protocol", 1) > PROTOCOL:
-        raise RuntimeError(
-            f"{index_path}: generation protocol {doc['protocol']} > "
-            f"supported {PROTOCOL}"
-        )
-    return gen, doc
+    return genlog.index_log(index_path).current()
 
 
 def index_log_doc(index_path: str, generation: int | None = None) -> dict:
@@ -102,8 +76,7 @@ def index_log_doc(index_path: str, generation: int | None = None) -> dict:
         if gen == 0:
             raise FileNotFoundError(f"{index_path}: no generation published")
         return doc
-    with open(_gen_file(index_path, generation)) as f:
-        return json.load(f)
+    return genlog.index_log(index_path).doc(generation)
 
 
 def _raw_listing(index_path: str, partition_col: str) -> dict[int, list[str]]:
@@ -131,27 +104,25 @@ def _raw_listing(index_path: str, partition_col: str) -> dict[int, list[str]]:
     return out
 
 
-def _publish(
-    index_path: str, partition_col: str, partitions: dict[int, list[str]],
-    base_gen: int,
-) -> int:
-    """Publish generation base_gen+1 by exclusive create; raises
-    GenerationConflict when another writer won it. Empty partitions are
-    dropped from the doc (an absent key IS the empty list)."""
-    os.makedirs(_gen_dir(index_path), exist_ok=True)
-    doc = {
+def _doc(partition_col: str, partitions: dict[int, list[str]]) -> dict:
+    """A generation doc. Empty partitions are dropped (an absent key IS
+    the empty list)."""
+    return {
         "protocol": PROTOCOL,
         "partition_col": partition_col,
         "partitions": {
             str(v): sorted(fs) for v, fs in sorted(partitions.items()) if fs
         },
     }
-    target = _gen_file(index_path, base_gen + 1)
-    try:
-        with open(target, "x") as f:
-            json.dump(doc, f)
-    except FileExistsError as e:
-        raise GenerationConflict(target) from e
+
+
+def _publish(
+    index_path: str, partition_col: str, partitions: dict[int, list[str]],
+    base_gen: int,
+) -> int:
+    """Publish generation base_gen+1; raises GenerationConflict when
+    another writer won it."""
+    genlog.index_log(index_path).publish(base_gen + 1, _doc(partition_col, partitions))
     return base_gen + 1
 
 
@@ -232,18 +203,14 @@ def index_log_append(
         for v in after
         if set(after.get(v, ())) - set(before.get(v, ()))
     }
-    for _ in range(max_retries):
-        gen, doc = index_log_current(index_path)
+
+    def attempt(gen: int, doc: dict, _):
         live = _live(doc)
         for v, fs in new_files.items():
             live[v] = sorted(set(live.get(v, [])) | set(fs))
-        try:
-            return _publish(index_path, partition_col, live, gen)
-        except GenerationConflict:
-            continue
-    raise RuntimeError(
-        f"{index_path}: lost {max_retries} generation races on append"
-    )
+        return _doc(partition_col, live), gen + 1
+
+    return genlog.index_log(index_path).commit(attempt, max_retries, "index_log_append")
 
 
 def compact_index_log(
@@ -466,19 +433,13 @@ def index_log_gc(
     """
     import time
 
-    gen, doc = index_log_current(index_path)
+    log = genlog.index_log(index_path)
+    gen, doc = log.current()
     if not gen:
         return 0
     partition_col = doc.get("partition_col", "bucket")
-    kept_gens = [g for g in range(max(1, gen - keep_last + 1), gen + 1)]
-    referenced: set[str] = set()
-    for g in kept_gens:
-        try:
-            gdoc = index_log_doc(index_path, g)
-        except FileNotFoundError:
-            continue
-        for fs in gdoc.get("partitions", {}).values():
-            referenced.update(fs)
+    log.expire(keep_last)
+    referenced = log.referenced()
     deleted = 0
     horizon = time.time() - min_age_sec
     for v, fs in _raw_listing(index_path, partition_col).items():
@@ -492,11 +453,6 @@ def index_log_gc(
                     continue
                 os.remove(full)
                 deleted += 1
-    for g in range(1, kept_gens[0]):
-        try:
-            os.remove(_gen_file(index_path, g))
-        except FileNotFoundError:
-            pass
     return deleted
 
 

@@ -53,52 +53,30 @@ multi-table-transaction + GDPR-delete designs.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PROTOCOL = 1
+from chesscom_etl_tableau_spark.plans import genlog
 
-
-def _forget_dir(root: str) -> str:
-    return os.path.join(root, "_forget")
-
-
-def _intent_file(root: str, n: int) -> str:
-    return os.path.join(_forget_dir(root), f"forget-{n:012d}.json")
-
-
-def _done_file(root: str, n: int) -> str:
-    return os.path.join(_forget_dir(root), f"forget-{n:012d}-done.json")
+PROTOCOL = genlog.PROTOCOL
 
 
 def forget_intents(root: str) -> list[int]:
     """All published intent numbers, ascending."""
-    try:
-        names = os.listdir(_forget_dir(root))
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(n.removeprefix("forget-").removesuffix(".json"))
-        for n in names
-        if n.startswith("forget-") and not n.endswith("-done.json")
-        and n.endswith(".json")
-    )
+    return genlog.intent_log(root).generations()
 
 
 def forget_doc(root: str, n: int) -> dict:
-    with open(_intent_file(root, n)) as f:
-        return json.load(f)
+    return genlog.intent_log(root).doc(n)
 
 
 def forget_done_doc(root: str, n: int) -> dict | None:
     """The done doc of intent n, or None while it is pending."""
     try:
-        with open(_done_file(root, n)) as f:
-            return json.load(f)
+        return genlog.done_log(root).doc(n)
     except FileNotFoundError:
         return None
 
@@ -107,9 +85,8 @@ def _surface_gens(
     corpus_path: str, lsh_path: str | None, ivf_path: str | None
 ) -> dict:
     from chesscom_etl_tableau_spark.operators import index_log as IL
-    from chesscom_etl_tableau_spark.plans import ingest as ING
 
-    gens: dict = {"corpus": ING._current_manifest_doc(corpus_path)[0]}
+    gens: dict = {"corpus": genlog.manifest_log(corpus_path).current()[0]}
     if lsh_path is not None:
         gens["lsh"] = IL.index_log_current(lsh_path)[0]
     if ivf_path is not None:
@@ -174,9 +151,9 @@ def forget_ids(
     audit trail of the request having been made."""
     spark = ids.sparkSession
     root = root or corpus_path
-    os.makedirs(_forget_dir(root), exist_ok=True)
+    intents = genlog.intent_log(root)
     txn = uuid.uuid4().hex
-    ids_dir = os.path.join(_forget_dir(root), f"ids-{txn}")
+    ids_dir = os.path.join(intents.dir, f"ids-{txn}")
     doomed = ids.select(id_col).distinct()
     doomed.write.parquet(ids_dir)
     n_ids = spark.read.parquet(ids_dir).count()
@@ -195,23 +172,11 @@ def forget_ids(
         },
         "pre": _surface_gens(corpus_path, lsh_path, ivf_path),
     }
-    existing = forget_intents(root)
-    n = (existing[-1] if existing else 0) + 1
-    for _ in range(max_retries):
-        try:
-            with open(_intent_file(root, n), "x") as f:
-                json.dump(doc, f)
-            break
-        except FileExistsError:
-            n += 1  # another forget won this number
-    else:
-        raise RuntimeError(
-            f"forget_ids: lost {max_retries} intent races under {root}"
-        )
+    # a lost intent race moves on to the number after the winner's
+    n = intents.commit(lambda last, _doc, _i: (doc, last + 1), max_retries, "forget_ids")
     counts, post = _apply_surfaces(spark, doc, corpus_path, lsh_path, ivf_path)
     done = {"protocol": PROTOCOL, "txn": txn, "deleted": counts, "post": post}
-    with open(_done_file(root, n), "x") as f:
-        json.dump(done, f)
+    genlog.done_log(root).publish(n, done)
     return {"intent": n, "deleted": counts, "pre": doc["pre"], "post": post}
 
 
@@ -241,9 +206,8 @@ def forget_resume(spark: SparkSession, root: str) -> list[int]:
             "resumed": True,
         }
         try:
-            with open(_done_file(root, n), "x") as f:
-                json.dump(done, f)
-        except FileExistsError:
+            genlog.done_log(root).publish(n, done)
+        except genlog.GenerationConflict:
             continue  # a concurrent resume finished it first
         completed.append(n)
     return completed

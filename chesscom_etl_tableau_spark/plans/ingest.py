@@ -31,12 +31,15 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 from dataclasses import dataclass
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from chesscom_etl_tableau_spark.plans import genlog
+from chesscom_etl_tableau_spark.plans.genlog import data_files, manifest_log, warehouse_log
 from chesscom_etl_tableau_spark.schemas import GAMES_SCHEMA, PROCESSED_ARCHIVES_SCHEMA, enforce_schema
 from chesscom_etl_tableau_spark.sources.archives import flatten_archives
 
@@ -67,14 +70,17 @@ def save_state(path: str, state: dict) -> None:
 
 
 def unmark_last_archive(state: dict) -> dict:
-    """I3 late-data reprocessing: drop the last processed archive per
-    user so the still-growing month is re-fetched (fetch.yml:93-129).
+    """I3 late-data reprocessing: drop each user's latest processed
+    archive so the still-growing month is re-fetched (fetch.yml:93-129).
+    Latest by URL, not by list position: archive URLs end in
+    `/games/YYYY/MM`, so they sort by month, which also reopens the
+    right month in a state file whose list was written out of order.
     Idempotent dedup makes the re-append safe."""
     out = {}
     for user, entry in state.items():
         pa = list(entry.get("processed_archives", []))
         if pa:
-            pa = pa[:-1]
+            pa.remove(max(pa))
         out[user] = {**entry, "processed_archives": pa}
     return out
 
@@ -289,51 +295,28 @@ def commit_append(
 # Object-store-safe commit: manifest-swap publish (round-4 verdict ask #3)
 # ---------------------------------------------------------------------------
 # `commit_append` above needs POSIX/HDFS atomic mkdir + same-FS rename.
-# On S3-like object stores neither exists, but conditional PUT
-# (If-None-Match, GA on S3 since 2024) plus strongly-consistent LIST
-# does — which is exactly the primitive set this protocol uses:
+# On S3-like object stores neither exists, but conditional PUT plus
+# strongly-consistent LIST does — the primitive set of the generation
+# log (`plans/genlog.py`), which this sink's manifests are:
 #
 #   sink/
 #     data/txn-<uuid>/part-*.parquet     immutable data files (PUT once)
-#     _manifests/manifest-<gen 12d>.json newline of every live data file
+#     _manifests/manifest-<gen 12d>.json every live data file
 #
-# Readers resolve the HIGHEST-generation manifest and read only the
-# files it lists; data files not referenced by a manifest are invisible
-# (a crashed writer leaks invisible garbage, reaped by `manifest_gc`).
-# Writers commit by optimistic concurrency on the manifest generation:
-# stage data, audit against the current manifest's files, then publish
-# manifest gen+1 via EXCLUSIVE CREATE (locally `open(.., "x")`; on S3 a
-# conditional PUT). Exactly one writer wins a generation; losers re-read
-# the new manifest, re-audit their keys against it, and retry — so two
-# writers appending the same key can never both publish it. No rename,
-# no mkdir-lock, no mtime heuristics anywhere on this path.
+# Readers resolve the newest manifest and read only the files it lists;
+# data files no manifest references are invisible (a crashed writer
+# leaks invisible garbage, reaped by `manifest_gc`). Writers stage data,
+# audit it against the current manifest's files, and publish gen+1; a
+# writer that loses the generation race re-reads the new manifest and
+# re-audits its keys against it — so two writers appending the same key
+# can never both publish it.
+
+MANIFEST_PROTOCOL = genlog.PROTOCOL
+ManifestProtocolError = genlog.ProtocolError
 
 
 def _manifest_dir(sink_path: str) -> str:
-    return os.path.join(sink_path, "_manifests")
-
-
-# Protocol versioning (the Delta/Iceberg forward-compat fence): every
-# manifest records the protocol version it was written under. A reader
-# built for version N refuses a doc stamped >N — failing loudly beats
-# silently ignoring table features (delete vectors, blooms) the doc's
-# writer relied on for correctness. Docs with no stamp are version 1
-# (all manifests this sink ever wrote are readable as v1).
-MANIFEST_PROTOCOL = 1
-
-
-class ManifestProtocolError(RuntimeError):
-    pass
-
-
-def _check_protocol(doc: dict, where: str) -> dict:
-    v = doc.get("protocol", 1)
-    if v > MANIFEST_PROTOCOL:
-        raise ManifestProtocolError(
-            f"{where}: manifest protocol {v} > supported {MANIFEST_PROTOCOL}; "
-            "upgrade the reader before touching this sink"
-        )
-    return doc
+    return manifest_log(sink_path).dir
 
 
 def _current_manifest_doc(sink_path: str) -> tuple[int, dict]:
@@ -342,36 +325,13 @@ def _current_manifest_doc(sink_path: str) -> tuple[int, dict]:
     "files": per-file column "stats" (min/max for file skipping),
     "blooms" (point-lookup bitsets), "delete_files"/"delete_key"
     (merge-on-read delete vectors), "protocol" (version fence)."""
-    mdir = _manifest_dir(sink_path)
-    try:
-        names = [n for n in os.listdir(mdir) if n.startswith("manifest-")]
-    except FileNotFoundError:
-        return 0, {}
-    if not names:
-        return 0, {}
-    latest = max(names)  # zero-padded gen => lexicographic == numeric
-    gen = int(latest.removeprefix("manifest-").removesuffix(".json"))
-    with open(os.path.join(mdir, latest)) as f:
-        doc = json.load(f)
-    return gen, _check_protocol(doc, sink_path)
+    return manifest_log(sink_path).current()
 
 
 def _manifest_doc(sink_path: str, generation: int | None = None) -> dict:
     """Doc of a specific published generation (raises FileNotFoundError
     if never published), or the newest ({} when empty)."""
-    if generation is None:
-        return _current_manifest_doc(sink_path)[1]
-    with open(
-        os.path.join(_manifest_dir(sink_path), f"manifest-{generation:012d}.json")
-    ) as f:
-        return _check_protocol(json.load(f), sink_path)
-
-
-def _current_manifest(sink_path: str) -> tuple[int, list[str]]:
-    """(generation, data file paths) of the newest manifest; (0, []) for
-    an empty/absent sink."""
-    gen, doc = _current_manifest_doc(sink_path)
-    return gen, list(doc.get("files", []))
+    return manifest_log(sink_path).at(generation)
 
 
 def _json_stat(v):
@@ -764,6 +724,66 @@ def read_manifest_point(
     return _apply_delete_vectors(spark, df, doc)
 
 
+def _check_delete_key(doc: dict, key_col: str, verb: str) -> None:
+    del_key = doc.get("delete_key", key_col)
+    if doc.get("delete_files") and del_key != key_col:
+        raise ValueError(
+            f"sink delete vectors are keyed by {del_key!r}, {verb} by {key_col!r}"
+        )
+
+
+def _next_manifest(
+    spark: SparkSession,
+    gen: int,
+    doc: dict,
+    txn: str,
+    carried: list[str],
+    new_files: list[str],
+    keep_deletes: bool = True,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    bloom_bits: int | None = None,
+    bloom_hashes: int | None = None,
+) -> dict:
+    """Manifest gen+1 over `carried` (files kept from `doc`) then
+    `new_files`, with doc's per-file sections carried forward. Carried
+    files keep their stats and bloom bitsets (published files are
+    immutable); new files get fresh ones for every column the sink
+    tracks plus any requested. File-scoped delete vectors carry
+    verbatim — they tombstone (key, old file) pairs, so new files,
+    re-inserts of deleted keys included, are untouched by them — unless
+    the rewrite materialized them (`keep_deletes=False`)."""
+    manifest = {
+        "generation": gen + 1,
+        "protocol": MANIFEST_PROTOCOL,
+        "files": carried + new_files,
+        "txn": txn,
+    }
+    if keep_deletes and doc.get("delete_files"):
+        manifest["delete_files"] = doc["delete_files"]
+        manifest["delete_key"] = doc["delete_key"]
+    cols = sorted(set(stats_cols or []) | set(_stats_cols_of(doc)))
+    if cols:
+        manifest["stats"] = {
+            **_carry_stats(doc, carried),
+            **_file_column_stats(spark, new_files, cols),
+        }
+    blooms = _manifest_blooms(
+        spark, doc, carried, new_files, bloom_cols, bloom_bits, bloom_hashes
+    )
+    if blooms is not None:
+        manifest["blooms"] = blooms
+    return manifest
+
+
+def _stage(df: DataFrame, staging: list[str], d: str) -> list[str]:
+    """Write `df` to staging dir `d`, registered for reaping first so a
+    failed write is reaped too. Returns the staged data files."""
+    staging.append(d)
+    df.write.parquet(d)
+    return data_files(d)
+
+
 def commit_append_manifest(
     new_rows: DataFrame,
     sink_path: str,
@@ -793,38 +813,20 @@ def commit_append_manifest(
     Returns the number of rows actually published. Raises RuntimeError
     after `max_retries` lost generation races (pathological contention).
     """
-    import shutil
-    import uuid
-
     spark = new_rows.sparkSession
     txn = uuid.uuid4().hex
     stage_dir = os.path.join(sink_path, "data", f"txn-{txn}")
-    os.makedirs(_manifest_dir(sink_path), exist_ok=True)
-    try:
-        new_rows.write.parquet(stage_dir)
-    except Exception:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        raise
-
-    def _data_files(d: str) -> list[str]:
-        return sorted(
-            os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
-        )
-
-    staged = spark.read.parquet(stage_dir)
-    extra_dirs: list[str] = []
-    try:
+    log = manifest_log(sink_path)
+    with log.reaping([]) as staging:
+        _stage(new_rows, staging, stage_dir)
+        staged = spark.read.parquet(stage_dir)
         n_staged = staged.count()
         if n_staged == 0:
             return 0
-        for _ in range(max_retries):
-            gen, doc = _current_manifest_doc(sink_path)
+
+        def attempt(gen: int, doc: dict, _):
+            _check_delete_key(doc, key_col, "append")
             files = list(doc.get("files", []))
-            del_key = doc.get("delete_key", key_col)
-            if doc.get("delete_files") and del_key != key_col:
-                raise ValueError(
-                    f"sink delete vectors are keyed by {del_key!r}, append by {key_col!r}"
-                )
             if files:
                 _assert_compatible_schema(spark, files, staged, "commit_append_manifest")
                 # Audit MUST succeed: a read failure of LIVE manifest
@@ -839,66 +841,33 @@ def commit_append_manifest(
             else:
                 survivors, n_publish = staged, n_staged
             if n_publish == 0:
-                return 0
-            publish_dir = stage_dir
+                return None, 0
+            new_files = data_files(stage_dir)
             if n_publish < n_staged:
                 # subset survived: stage the audited subset as new
                 # immutable files (old staged files stay invisible)
-                publish_dir = os.path.join(sink_path, "data", f"txn-{txn}-a{gen}")
-                extra_dirs.append(publish_dir)
-                survivors.write.parquet(publish_dir)
-            manifest = {
-                "generation": gen + 1,
-                "protocol": MANIFEST_PROTOCOL,
-                "files": files + _data_files(publish_dir),
-                "txn": txn,
-            }
-            # file-scoped delete vectors carry verbatim: they tombstone
-            # (key, old file) pairs, so newly appended files — including
-            # re-inserts of deleted keys — are untouched by them
-            if doc.get("delete_files"):
-                manifest["delete_files"] = doc["delete_files"]
-                manifest["delete_key"] = del_key
-            # per-file column stats: carried files keep theirs (files
-            # are immutable); new files get fresh mins/maxes
-            eff_cols = sorted(set(stats_cols or []) | set(_stats_cols_of(doc)))
-            if eff_cols:
-                manifest["stats"] = {
-                    **_carry_stats(doc, files),
-                    **_file_column_stats(spark, _data_files(publish_dir), eff_cols),
-                }
-            blooms = _manifest_blooms(
-                spark, doc, files, _data_files(publish_dir),
-                bloom_cols, bloom_bits, bloom_hashes,
-            )
-            if blooms is not None:
-                manifest["blooms"] = blooms
-            target = os.path.join(_manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json")
-            try:
-                # exclusive create == S3 conditional PUT (If-None-Match):
-                # exactly one writer publishes generation gen+1
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return n_publish
-            except FileExistsError:
-                publish_dir = stage_dir  # lost the race: re-audit, retry
-                continue
-        raise RuntimeError(
-            f"commit_append_manifest: lost {max_retries} generation races on {sink_path}"
-        )
-    finally:
-        # staged dirs that did not make it into the published manifest
-        # are invisible garbage — reap the ones we know about (live =
-        # data AND delete files of every generation)
-        live_set = _all_manifest_files(sink_path)
-        for d in [stage_dir, *extra_dirs]:
-            if os.path.isdir(d) and not any(f in live_set for f in _data_files(d)):
-                shutil.rmtree(d, ignore_errors=True)
+                new_files = _stage(
+                    survivors, staging, os.path.join(sink_path, "data", f"txn-{txn}-a{gen}")
+                )
+            return _next_manifest(
+                spark, gen, doc, txn, files, new_files,
+                stats_cols=stats_cols, bloom_cols=bloom_cols,
+                bloom_bits=bloom_bits, bloom_hashes=bloom_hashes,
+            ), n_publish
+
+        return log.commit(attempt, max_retries, "commit_append_manifest")
 
 
 class MergeResult(NamedTuple):
     inserted: int
     updated: int
+
+
+def _affected_files(matched: DataFrame) -> set[str]:
+    """Data files holding the `matched` rows (their `__f` column)."""
+    from urllib.parse import urlparse
+
+    return {urlparse(r["__f"]).path for r in matched.select("__f").distinct().collect()}
 
 
 def commit_merge_manifest(
@@ -921,122 +890,52 @@ def commit_merge_manifest(
     guess at). Object-store primitives only: PUT, exclusive create,
     LIST, GET — no rename. Returns (inserted, updated).
     """
-    import shutil
-    import uuid
-    from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
-
     spark = new_rows.sparkSession
     txn = uuid.uuid4().hex
     stage_dir = os.path.join(sink_path, "data", f"txn-{txn}")
-    os.makedirs(_manifest_dir(sink_path), exist_ok=True)
-    try:
-        new_rows.write.parquet(stage_dir)
-    except Exception:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        raise
-
-    def _data_files(d: str) -> list[str]:
-        try:
-            return sorted(
-                os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
-            )
-        except FileNotFoundError:
-            return []
-
-    staged = spark.read.parquet(stage_dir)
-    extra_dirs: list[str] = []
-    try:
+    log = manifest_log(sink_path)
+    with log.reaping([]) as staging:
+        _stage(new_rows, staging, stage_dir)
+        staged = spark.read.parquet(stage_dir)
         n_staged = staged.count()
         if n_staged == 0:
             return MergeResult(0, 0)
         if staged.groupBy(key_col).count().where(F.col("count") > 1).limit(1).count():
             raise ValueError(f"merge batch has duplicate {key_col} values")
-        for attempt in range(max_retries):
-            gen, doc = _current_manifest_doc(sink_path)
+
+        def attempt(gen: int, doc: dict, i: int):
+            _check_delete_key(doc, key_col, "merge")
             files = list(doc.get("files", []))
-            del_key = doc.get("delete_key", key_col)
-            if doc.get("delete_files") and del_key != key_col:
-                raise ValueError(
-                    f"sink delete vectors are keyed by {del_key!r}, merge by {key_col!r}"
-                )
             carried: list[str] = []
-            if not files:
-                manifest_files = _data_files(stage_dir)
-                new_file_list = manifest_files
-                n_ins, n_upd = n_staged, 0
-            else:
+            rewrite_files: list[str] = []
+            n_ins, n_upd = n_staged, 0
+            if files:
                 # matched = live rows only (delete vectors applied): an
                 # upsert of a tombstoned key is an INSERT
                 existing = _apply_delete_vectors(
                     spark, spark.read.parquet(*files), doc, keep_file_col="__f"
                 )
-                matched = existing.join(
-                    staged.select(key_col), key_col, "left_semi"
-                )
+                matched = existing.join(staged.select(key_col), key_col, "left_semi")
                 n_upd = matched.count()
                 n_ins = n_staged - n_upd
-                affected = {
-                    urlparse(r["__f"]).path for r in matched.select("__f").distinct().collect()
-                }
+                affected = _affected_files(matched)
                 carried = [f for f in files if f not in affected]
-                rewrite_files: list[str] = []
                 if affected:
-                    rewrite_dir = os.path.join(
-                        sink_path, "data", f"txn-{txn}-rw{gen}-{attempt}"
-                    )
-                    extra_dirs.append(rewrite_dir)
                     # the rewrite applies the delete mask too: a
                     # tombstoned row must not resurrect when its file
                     # is rewritten under a new path
-                    (
+                    rewrite_files = _stage(
                         _apply_delete_vectors(
                             spark, spark.read.parquet(*sorted(affected)), doc
-                        )
-                        .join(staged.select(key_col), key_col, "left_anti")
-                        .write.parquet(rewrite_dir)
+                        ).join(staged.select(key_col), key_col, "left_anti"),
+                        staging,
+                        os.path.join(sink_path, "data", f"txn-{txn}-rw{gen}-{i}"),
                     )
-                    rewrite_files = _data_files(rewrite_dir)
-                new_file_list = rewrite_files + _data_files(stage_dir)
-                manifest_files = carried + new_file_list
-            manifest = {
-                "generation": gen + 1,
-                "protocol": MANIFEST_PROTOCOL,
-                "files": manifest_files,
-                "txn": txn,
-            }
-            # file-scoped vectors carry verbatim (pairs for rewritten
-            # files simply never match again)
-            if doc.get("delete_files"):
-                manifest["delete_files"] = doc["delete_files"]
-                manifest["delete_key"] = del_key
-            cols = _stats_cols_of(doc)
-            if cols:
-                manifest["stats"] = {
-                    **_carry_stats(doc, carried),
-                    **_file_column_stats(spark, new_file_list, cols),
-                }
-            blooms = _manifest_blooms(spark, doc, carried, new_file_list)
-            if blooms is not None:
-                manifest["blooms"] = blooms
-            target = os.path.join(
-                _manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return MergeResult(n_ins, n_upd)
-            except FileExistsError:
-                continue  # lost the generation race: recompute and retry
-        raise RuntimeError(
-            f"commit_merge_manifest: lost {max_retries} generation races on {sink_path}"
-        )
-    finally:
-        live = _all_manifest_files(sink_path)
-        for d in [stage_dir, *extra_dirs]:
-            if os.path.isdir(d) and not any(f in live for f in _data_files(d)):
-                shutil.rmtree(d, ignore_errors=True)
+            return _next_manifest(
+                spark, gen, doc, txn, carried, rewrite_files + data_files(stage_dir)
+            ), MergeResult(n_ins, n_upd)
+
+        return log.commit(attempt, max_retries, "commit_merge_manifest")
 
 
 def commit_delete_manifest(
@@ -1053,98 +952,40 @@ def commit_delete_manifest(
     promptly when deletion is a compliance requirement, not a
     convenience). Returns the number of rows deleted.
     """
-    import shutil
-    import uuid
-    from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
-
     spark = keys.sparkSession
     doomed = keys.select(key_col).distinct()
     txn = uuid.uuid4().hex
-    extra_dirs: list[str] = []
-    try:
-        for attempt in range(max_retries):
-            gen, doc = _current_manifest_doc(sink_path)
-            files = list(doc.get("files", []))
-            if not files:
-                return 0
-            del_key = doc.get("delete_key", key_col)
-            if doc.get("delete_files") and del_key != key_col:
-                raise ValueError(
-                    f"sink delete vectors are keyed by {del_key!r}, delete by {key_col!r}"
-                )
-            # only LIVE rows count (a key already tombstoned by a
-            # delete vector needs no rewrite)
-            existing = _apply_delete_vectors(
-                spark, spark.read.parquet(*files), doc, keep_file_col="__f"
-            )
-            matched = existing.join(doomed, key_col, "left_semi")
-            n_del = matched.count()
-            if n_del == 0:
-                return 0
-            affected = {
-                urlparse(r["__f"]).path
-                for r in matched.select("__f").distinct().collect()
-            }
-            survivors = [f for f in files if f not in affected]
-            rewrite_dir = os.path.join(
-                sink_path, "data", f"txn-{txn}-del{gen}-{attempt}"
-            )
-            extra_dirs.append(rewrite_dir)
-            # apply the delete mask during the rewrite so tombstoned
-            # rows don't resurrect under the rewritten file's new path
-            (
-                _apply_delete_vectors(
-                    spark, spark.read.parquet(*sorted(affected)), doc
-                )
-                .join(doomed, key_col, "left_anti")
-                .write.parquet(rewrite_dir)
-            )
-            rewrite_files = sorted(
-                os.path.join(rewrite_dir, n)
-                for n in os.listdir(rewrite_dir)
-                if n.endswith(".parquet")
-            )
-            manifest = {
-                "generation": gen + 1,
-                "protocol": MANIFEST_PROTOCOL,
-                "files": survivors + rewrite_files,
-                "txn": txn,
-            }
-            if doc.get("delete_files"):
-                manifest["delete_files"] = doc["delete_files"]
-                manifest["delete_key"] = del_key
-            cols = _stats_cols_of(doc)
-            if cols:
-                manifest["stats"] = {
-                    **_carry_stats(doc, survivors),
-                    **_file_column_stats(spark, rewrite_files, cols),
-                }
-            blooms = _manifest_blooms(spark, doc, survivors, rewrite_files)
-            if blooms is not None:
-                manifest["blooms"] = blooms
-            target = os.path.join(
-                _manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return n_del
-            except FileExistsError:
-                continue
-        raise RuntimeError(
-            f"commit_delete_manifest: lost {max_retries} generation races on {sink_path}"
+    log = manifest_log(sink_path)
+
+    def attempt(gen: int, doc: dict, i: int):
+        files = list(doc.get("files", []))
+        if not files:
+            return None, 0
+        _check_delete_key(doc, key_col, "delete")
+        # only LIVE rows count (a key already tombstoned by a
+        # delete vector needs no rewrite)
+        existing = _apply_delete_vectors(
+            spark, spark.read.parquet(*files), doc, keep_file_col="__f"
         )
-    finally:
-        live = _all_manifest_files(sink_path)
-        for d in extra_dirs:
-            if os.path.isdir(d):
-                fs = [
-                    os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
-                ]
-                if not any(f in live for f in fs):
-                    shutil.rmtree(d, ignore_errors=True)
+        matched = existing.join(doomed, key_col, "left_semi")
+        n_del = matched.count()
+        if n_del == 0:
+            return None, 0
+        affected = _affected_files(matched)
+        # apply the delete mask during the rewrite so tombstoned
+        # rows don't resurrect under the rewritten file's new path
+        rewrite_files = _stage(
+            _apply_delete_vectors(
+                spark, spark.read.parquet(*sorted(affected)), doc
+            ).join(doomed, key_col, "left_anti"),
+            staging,
+            os.path.join(sink_path, "data", f"txn-{txn}-del{gen}-{i}"),
+        )
+        survivors = [f for f in files if f not in affected]
+        return _next_manifest(spark, gen, doc, txn, survivors, rewrite_files), n_del
+
+    with log.reaping([]) as staging:
+        return log.commit(attempt, max_retries, "commit_delete_manifest")
 
 
 def commit_delete_vector(
@@ -1166,77 +1007,38 @@ def commit_delete_vector(
     publish; prior generations keep their own (smaller) mask, so time
     travel still shows pre-delete rows. Returns the number of live
     rows the new mask removes (0 publishes nothing)."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
     spark = keys.sparkSession
     doomed = keys.select(key_col).distinct()
     txn = uuid.uuid4().hex
-    extra_dirs: list[str] = []
-    try:
-        for attempt in range(max_retries):
-            gen, doc = _current_manifest_doc(sink_path)
-            files = list(doc.get("files", []))
-            if not files:
-                return 0
-            del_key = doc.get("delete_key", key_col)
-            if doc.get("delete_files") and del_key != key_col:
-                raise ValueError(
-                    f"sink delete vectors are keyed by {del_key!r}, delete by {key_col!r}"
-                )
-            live = _apply_delete_vectors(
-                spark, spark.read.parquet(*files), doc, keep_file_col="__dv_file"
-            )
-            pairs = live.join(doomed, key_col, "left_semi").select(
-                key_col, "__dv_file"
-            )
-            # the staged vector IS the matched (key, file) pair set —
-            # recomputed per attempt because a lost race may have
-            # moved rows into new files
-            stage_dir = os.path.join(
-                sink_path, "deletes", f"txn-{txn}-{attempt}"
-            )
-            extra_dirs.append(stage_dir)
-            pairs.write.parquet(stage_dir)
-            n_del = spark.read.parquet(stage_dir).count()
-            if n_del == 0:
-                return 0
-            new_files = sorted(
-                os.path.join(stage_dir, n)
-                for n in os.listdir(stage_dir)
-                if n.endswith(".parquet")
-            )
-            manifest = dict(doc)
-            manifest["generation"] = gen + 1
-            manifest["protocol"] = MANIFEST_PROTOCOL
-            manifest["txn"] = txn
-            manifest["delete_files"] = doc.get("delete_files", []) + new_files
-            manifest["delete_key"] = key_col
-            target = os.path.join(
-                _manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return n_del
-            except FileExistsError:
-                continue  # lost the generation race: recompute and retry
-        raise RuntimeError(
-            f"commit_delete_vector: lost {max_retries} generation races on {sink_path}"
+    log = manifest_log(sink_path)
+
+    def attempt(gen: int, doc: dict, i: int):
+        files = list(doc.get("files", []))
+        if not files:
+            return None, 0
+        _check_delete_key(doc, key_col, "delete")
+        live = _apply_delete_vectors(
+            spark, spark.read.parquet(*files), doc, keep_file_col="__dv_file"
         )
-    finally:
-        live_set = _all_manifest_files(sink_path)
-        for d in extra_dirs:
-            if os.path.isdir(d):
-                staged = [
-                    os.path.join(d, n)
-                    for n in os.listdir(d)
-                    if n.endswith(".parquet")
-                ]
-                if not any(f in live_set for f in staged):
-                    shutil.rmtree(d, ignore_errors=True)
+        pairs = live.join(doomed, key_col, "left_semi").select(key_col, "__dv_file")
+        # the staged vector IS the matched (key, file) pair set —
+        # recomputed per attempt because a lost race may have moved
+        # rows into new files
+        stage_dir = os.path.join(sink_path, "deletes", f"txn-{txn}-{i}")
+        new_files = _stage(pairs, staging, stage_dir)
+        n_del = spark.read.parquet(stage_dir).count()
+        if n_del == 0:
+            return None, 0
+        manifest = dict(doc)
+        manifest["generation"] = gen + 1
+        manifest["protocol"] = MANIFEST_PROTOCOL
+        manifest["txn"] = txn
+        manifest["delete_files"] = doc.get("delete_files", []) + new_files
+        manifest["delete_key"] = key_col
+        return manifest, n_del
+
+    with log.reaping([]) as staging:
+        return log.commit(attempt, max_retries, "commit_delete_vector")
 
 
 def commit_compact_manifest(
@@ -1261,66 +1063,26 @@ def commit_compact_manifest(
     column stats for whatever columns the sink tracks — so a compacted
     sink reads with zero anti-joins and full file skipping.
     """
-    import shutil
-    import uuid
+    log = manifest_log(sink_path)
 
-    for _ in range(max_retries):
-        gen, doc = _current_manifest_doc(sink_path)
+    def attempt(gen: int, doc: dict, _):
         files = list(doc.get("files", []))
         if not files or (len(files) <= target_files and not doc.get("delete_files")):
-            return 0
+            return None, 0
         txn = uuid.uuid4().hex
-        rewrite_dir = os.path.join(sink_path, "data", f"txn-{txn}-compact{gen}")
-        _apply_delete_vectors(spark, spark.read.parquet(*files), doc).repartition(
-            target_files
-        ).write.parquet(rewrite_dir)
-        new_files = sorted(
-            os.path.join(rewrite_dir, n)
-            for n in os.listdir(rewrite_dir)
-            if n.endswith(".parquet")
+        new_files = _stage(
+            _apply_delete_vectors(spark, spark.read.parquet(*files), doc).repartition(
+                target_files
+            ),
+            staging,
+            os.path.join(sink_path, "data", f"txn-{txn}-compact{gen}"),
         )
-        manifest = {
-            "generation": gen + 1,
-            "protocol": MANIFEST_PROTOCOL,
-            "files": new_files,
-            "txn": txn,
-        }
-        cols = _stats_cols_of(doc)
-        if cols:
-            manifest["stats"] = _file_column_stats(spark, new_files, cols)
-        blooms = _manifest_blooms(spark, doc, [], new_files)
-        if blooms is not None:
-            manifest["blooms"] = blooms
-        target = os.path.join(_manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json")
-        try:
-            with open(target, "x") as f:
-                json.dump(manifest, f)
-            return len(files)
-        except FileExistsError:
-            # lost the race: this rewrite is stale — reap it and retry
-            shutil.rmtree(rewrite_dir, ignore_errors=True)
-            continue
-    raise RuntimeError(
-        f"commit_compact_manifest: lost {max_retries} generation races on {sink_path}"
-    )
+        return _next_manifest(
+            spark, gen, doc, txn, [], new_files, keep_deletes=False
+        ), len(files)
 
-
-def _all_manifest_files(sink_path: str) -> set[str]:
-    """Union of data files referenced by ANY published generation —
-    the live set for gc once MERGE can retire files from the current
-    manifest while older snapshots still reference them."""
-    mdir = _manifest_dir(sink_path)
-    try:
-        names = [n for n in os.listdir(mdir) if n.startswith("manifest-")]
-    except FileNotFoundError:
-        return set()
-    out: set[str] = set()
-    for n in names:
-        with open(os.path.join(mdir, n)) as f:
-            doc = json.load(f)
-        out.update(doc["files"])
-        out.update(doc.get("delete_files", []))
-    return out
+    with log.reaping([]) as staging:
+        return log.commit(attempt, max_retries, "commit_compact_manifest")
 
 
 def manifest_expire(sink_path: str, keep_last: int = 1) -> int:
@@ -1328,17 +1090,7 @@ def manifest_expire(sink_path: str, keep_last: int = 1) -> int:
     `keep_last` manifest generations (their exclusive data files become
     gc-reapable). Bounds time-travel history — and therefore storage —
     after copy-on-write merges. Returns manifests removed."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    mdir = _manifest_dir(sink_path)
-    try:
-        names = sorted(n for n in os.listdir(mdir) if n.startswith("manifest-"))
-    except FileNotFoundError:
-        return 0
-    doomed = names[:-keep_last]
-    for n in doomed:
-        os.remove(os.path.join(mdir, n))
-    return len(doomed)
+    return manifest_log(sink_path).expire(keep_last)
 
 
 def manifest_gc(sink_path: str) -> int:
@@ -1350,32 +1102,9 @@ def manifest_gc(sink_path: str) -> int:
     staged-but-unpublished txns are older than the writers' staging
     window — production deployments should add an age threshold; kept
     minimal here."""
-    import shutil
-
-    live_set = _all_manifest_files(sink_path)
-    removed = 0
-    for root in ("data", "deletes"):
-        data_root = os.path.join(sink_path, root)
-        if not os.path.isdir(data_root):
-            continue
-        for txn_dir in os.listdir(data_root):
-            full = os.path.join(data_root, txn_dir)
-            files = [
-                os.path.join(full, n) for n in os.listdir(full) if n.endswith(".parquet")
-            ]
-            if not files:
-                continue
-            if not any(f in live_set for f in files):
-                shutil.rmtree(full, ignore_errors=True)
-                removed += len(files)
-            else:
-                # COW merge/delete retire INDIVIDUAL files out of a txn
-                # dir while siblings stay live — reap at file grain
-                for f in files:
-                    if f not in live_set:
-                        os.remove(f)
-                        removed += 1
-    return removed
+    return manifest_log(sink_path).gc(
+        [os.path.join(sink_path, "data"), os.path.join(sink_path, "deletes")]
+    )
 
 
 def _dv_pairs_for_files(spark, doc: dict, files: set[str]):
@@ -1542,29 +1271,13 @@ def refresh_incremental_agg(
       keeps, and groups whose count reaches zero drop out;
     - no prior view -> full build from the snapshot.
 
+    A refresh that loses the view's generation race to a concurrent
+    refresher raises RuntimeError (its staging is reaped).
+
     Returns {"mode": "noop"|"incremental"|"cdc"|"full",
     "source_generation"}.
     """
-    import shutil
-    import uuid
-
-    vgen, vdoc = _current_manifest_doc(view_path)
-    last_src = vdoc.get("source_generation", 0)
-    sgen, sdoc = _current_manifest_doc(sink_path)
-    if sgen == last_src:
-        return {"mode": "noop", "source_generation": sgen}
-    new_files = list(sdoc.get("files", []))
-    mode = "full"
-    delta_files: list[str] = []
-    if last_src and vdoc.get("files"):
-        old_doc = _manifest_doc(sink_path, last_src)
-        old_files = old_doc.get("files", [])
-        same_dvs = old_doc.get("delete_files", []) == sdoc.get("delete_files", [])
-        if same_dvs and set(old_files) <= set(new_files):
-            mode = "incremental"
-            delta_files = [f for f in new_files if f not in set(old_files)]
-        else:
-            mode = "cdc"
+    log = manifest_log(view_path)
 
     def _agg(df):
         return df.groupBy(group_col).agg(
@@ -1572,67 +1285,76 @@ def refresh_incremental_agg(
             F.sum(sum_col).cast("long").alias("total"),
         )
 
-    if mode == "incremental":
-        if delta_files:
-            delta = _agg(spark.read.parquet(*delta_files))
+    def attempt(vgen: int, vdoc: dict, _):
+        last_src = vdoc.get("source_generation", 0)
+        sgen, sdoc = _current_manifest_doc(sink_path)
+        if sgen == last_src:
+            return None, {"mode": "noop", "source_generation": sgen}
+        new_files = list(sdoc.get("files", []))
+        mode = "full"
+        delta_files: list[str] = []
+        if last_src and vdoc.get("files"):
+            old_doc = _manifest_doc(sink_path, last_src)
+            old_files = old_doc.get("files", [])
+            same_dvs = old_doc.get("delete_files", []) == sdoc.get("delete_files", [])
+            if same_dvs and set(old_files) <= set(new_files):
+                mode = "incremental"
+                delta_files = [f for f in new_files if f not in set(old_files)]
+            else:
+                mode = "cdc"
+
+        if mode == "incremental":
+            if delta_files:
+                delta = _agg(spark.read.parquet(*delta_files))
+                current = spark.read.parquet(*vdoc["files"])
+                fresh = (
+                    current.unionByName(delta)
+                    .groupBy(group_col)
+                    .agg(
+                        F.sum("n_rows").alias("n_rows"),
+                        F.sum("total").cast("long").alias("total"),
+                    )
+                )
+            else:
+                fresh = spark.read.parquet(*vdoc["files"])
+        elif mode == "cdc":
+            feed = manifest_change_feed(spark, sink_path, last_src, sgen, key_col)
+            sign = F.when(
+                F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
+            ).otherwise(F.lit(-1))
+            deltas = feed.groupBy(group_col).agg(
+                F.sum(sign).alias("n_rows"),
+                F.sum(sign * F.col(sum_col)).cast("long").alias("total"),
+            )
             current = spark.read.parquet(*vdoc["files"])
             fresh = (
-                current.unionByName(delta)
+                current.unionByName(deltas)
                 .groupBy(group_col)
                 .agg(
                     F.sum("n_rows").alias("n_rows"),
                     F.sum("total").cast("long").alias("total"),
                 )
+                .where(F.col("n_rows") > 0)
             )
         else:
-            fresh = spark.read.parquet(*vdoc["files"])
-    elif mode == "cdc":
-        feed = manifest_change_feed(spark, sink_path, last_src, sgen, key_col)
-        sign = F.when(
-            F.col("change_type").isin("insert", "update_postimage"), F.lit(1)
-        ).otherwise(F.lit(-1))
-        deltas = feed.groupBy(group_col).agg(
-            F.sum(sign).alias("n_rows"),
-            F.sum(sign * F.col(sum_col)).cast("long").alias("total"),
-        )
-        current = spark.read.parquet(*vdoc["files"])
-        fresh = (
-            current.unionByName(deltas)
-            .groupBy(group_col)
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("total").cast("long").alias("total"),
-            )
-            .where(F.col("n_rows") > 0)
-        )
-    else:
-        snap = read_manifest_sink(spark, sink_path)
-        fresh = _agg(snap)
+            snap = read_manifest_sink(spark, sink_path)
+            fresh = _agg(snap)
 
-    txn = uuid.uuid4().hex
-    data_dir = os.path.join(view_path, "data", f"txn-{txn}")
-    os.makedirs(_manifest_dir(view_path), exist_ok=True)
-    fresh.coalesce(1).write.parquet(data_dir)
-    files = sorted(
-        os.path.join(data_dir, n) for n in os.listdir(data_dir) if n.endswith(".parquet")
-    )
-    manifest = {
-        "generation": vgen + 1,
-        "protocol": MANIFEST_PROTOCOL,
-        "files": files,
-        "txn": txn,
-        "source_generation": sgen,
-    }
-    target = os.path.join(_manifest_dir(view_path), f"manifest-{vgen + 1:012d}.json")
-    try:
-        with open(target, "x") as f:
-            json.dump(manifest, f)
-    except FileExistsError:
-        # a concurrent refresher already published a view for some
-        # fact generation; this staging is garbage — reap and report
-        shutil.rmtree(data_dir, ignore_errors=True)
-        raise RuntimeError(f"refresh_incremental_agg: lost view race on {view_path}")
-    return {"mode": mode, "source_generation": sgen}
+        txn = uuid.uuid4().hex
+        files = _stage(
+            fresh.coalesce(1), staging, os.path.join(view_path, "data", f"txn-{txn}")
+        )
+        manifest = {
+            "generation": vgen + 1,
+            "protocol": MANIFEST_PROTOCOL,
+            "files": files,
+            "txn": txn,
+            "source_generation": sgen,
+        }
+        return manifest, {"mode": mode, "source_generation": sgen}
+
+    with log.reaping([]) as staging:
+        return log.commit(attempt, 1, "refresh_incremental_agg")
 
 
 # --- cross-table transactions: the warehouse manifest ---------------------
@@ -1648,29 +1370,7 @@ def refresh_incremental_agg(
 
 
 def _warehouse_mdir(warehouse_path: str) -> str:
-    return os.path.join(warehouse_path, "_txns")
-
-
-def _current_warehouse_doc(warehouse_path: str) -> tuple[int, dict]:
-    try:
-        names = [n for n in os.listdir(_warehouse_mdir(warehouse_path)) if n.startswith("txn-")]
-    except FileNotFoundError:
-        return 0, {}
-    if not names:
-        return 0, {}
-    latest = max(names)
-    gen = int(latest.removeprefix("txn-").removesuffix(".json"))
-    with open(os.path.join(_warehouse_mdir(warehouse_path), latest)) as f:
-        return gen, _check_protocol(json.load(f), warehouse_path)
-
-
-def _warehouse_doc(warehouse_path: str, generation: int | None = None) -> dict:
-    if generation is None:
-        return _current_warehouse_doc(warehouse_path)[1]
-    with open(
-        os.path.join(_warehouse_mdir(warehouse_path), f"txn-{generation:012d}.json")
-    ) as f:
-        return _check_protocol(json.load(f), warehouse_path)
+    return warehouse_log(warehouse_path).dir
 
 
 def commit_tables(
@@ -1690,94 +1390,52 @@ def commit_tables(
     `key_cols` maps table name -> dedup key (tables absent from the
     map append without a key audit). Lost generation races re-audit
     and retry, like the single-table commits."""
-    import shutil
-    import uuid
-
     if not tables:
         return {}
     spark = next(iter(tables.values())).sparkSession
     key_cols = key_cols or {}
     txn = uuid.uuid4().hex
-    os.makedirs(_warehouse_mdir(warehouse_path), exist_ok=True)
+    log = warehouse_log(warehouse_path)
 
-    def _data_files(d: str) -> list[str]:
-        try:
-            return sorted(
-                os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
-            )
-        except FileNotFoundError:
-            return []
+    def _data_dir(name: str) -> str:
+        return os.path.join(warehouse_path, "tables", name, "data")
 
-    stage: dict[str, str] = {}
-    extra_dirs: list[str] = []
-    try:
+    def attempt(gen: int, doc: dict, i: int):
+        prior = doc.get("tables", {})
+        new_tables: dict[str, dict] = {n: dict(t) for n, t in prior.items()}
+        published: dict[str, int] = {}
+        for name in tables:
+            stage_dir = os.path.join(_data_dir(name), f"txn-{txn}")
+            staged = spark.read.parquet(stage_dir)
+            old_files = prior.get(name, {}).get("files", [])
+            _assert_compatible_schema(spark, old_files, staged, f"commit_tables[{name}]")
+            key = key_cols.get(name)
+            new_files = data_files(stage_dir)
+            if key and old_files:
+                existing = spark.read.parquet(*old_files).select(key)
+                survivors = staged.join(existing, key, "left_anti")
+                n_pub = survivors.count()
+                if n_pub < staged.count():
+                    new_files = _stage(
+                        survivors, staging,
+                        os.path.join(_data_dir(name), f"txn-{txn}-a{gen}-{i}"),
+                    )
+            else:
+                n_pub = staged.count()
+            new_tables[name] = {"files": old_files + (new_files if n_pub else [])}
+            published[name] = n_pub
+        manifest = {
+            "generation": gen + 1,
+            "protocol": MANIFEST_PROTOCOL,
+            "txn": txn,
+            "tables": new_tables,
+        }
+        return manifest, published
+
+    with log.reaping([]) as staging:
         for name, df in tables.items():
-            d = os.path.join(warehouse_path, "tables", name, "data", f"txn-{txn}")
-            df.write.parquet(d)
-            stage[name] = d
-        for attempt in range(max_retries):
-            gen, doc = _current_warehouse_doc(warehouse_path)
-            prior = doc.get("tables", {})
-            new_tables: dict[str, dict] = {
-                n: dict(t) for n, t in prior.items()
-            }
-            published: dict[str, int] = {}
-            for name, d in stage.items():
-                staged = spark.read.parquet(d)
-                old_files = prior.get(name, {}).get("files", [])
-                _assert_compatible_schema(
-                    spark, old_files, staged, f"commit_tables[{name}]"
-                )
-                key = key_cols.get(name)
-                publish_dir = d
-                if key and old_files:
-                    existing = spark.read.parquet(*old_files).select(key)
-                    survivors = staged.join(existing, key, "left_anti")
-                    n_pub = survivors.count()
-                    if n_pub < staged.count():
-                        publish_dir = os.path.join(
-                            warehouse_path, "tables", name, "data",
-                            f"txn-{txn}-a{gen}-{attempt}",
-                        )
-                        extra_dirs.append(publish_dir)
-                        survivors.write.parquet(publish_dir)
-                else:
-                    n_pub = staged.count()
-                new_tables[name] = {
-                    "files": old_files + (_data_files(publish_dir) if n_pub else [])
-                }
-                published[name] = n_pub
-            manifest = {
-                "generation": gen + 1,
-                "protocol": MANIFEST_PROTOCOL,
-                "txn": txn,
-                "tables": new_tables,
-            }
-            target = os.path.join(
-                _warehouse_mdir(warehouse_path), f"txn-{gen + 1:012d}.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return published
-            except FileExistsError:
-                continue  # lost the race: re-audit against the new state
-        raise RuntimeError(
-            f"commit_tables: lost {max_retries} generation races on {warehouse_path}"
-        )
-    finally:
-        live: set[str] = set()
-        try:
-            for n in os.listdir(_warehouse_mdir(warehouse_path)):
-                if n.startswith("txn-"):
-                    with open(os.path.join(_warehouse_mdir(warehouse_path), n)) as f:
-                        for t in json.load(f).get("tables", {}).values():
-                            live.update(t.get("files", []))
-        except FileNotFoundError:
-            pass
-        for d in [*stage.values(), *extra_dirs]:
-            if os.path.isdir(d) and not any(f in live for f in _data_files(d)):
-                shutil.rmtree(d, ignore_errors=True)
+            _stage(df, staging, os.path.join(_data_dir(name), f"txn-{txn}"))
+        return log.commit(attempt, max_retries, "commit_tables")
 
 
 def read_warehouse_table(
@@ -1791,7 +1449,7 @@ def read_warehouse_table(
     snapshot — the whole point of the shared txn doc. Returns None for
     a table with no files at that generation; raises FileNotFoundError
     for a generation never published."""
-    doc = _warehouse_doc(warehouse_path, generation)
+    doc = warehouse_log(warehouse_path).at(generation)
     files = doc.get("tables", {}).get(table, {}).get("files", [])
     if not files:
         return None
@@ -1799,64 +1457,26 @@ def read_warehouse_table(
 
 
 def warehouse_tables(warehouse_path: str, generation: int | None = None) -> list[str]:
-    return sorted(_warehouse_doc(warehouse_path, generation).get("tables", {}))
+    return sorted(warehouse_log(warehouse_path).at(generation).get("tables", {}))
 
 
 def warehouse_expire(warehouse_path: str, keep_last: int = 1) -> int:
     """Snapshot expiry for the warehouse: drop all but the newest
     `keep_last` txn docs (their exclusive data files become
     gc-reapable). The warehouse twin of `manifest_expire`."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    mdir = _warehouse_mdir(warehouse_path)
-    try:
-        names = sorted(n for n in os.listdir(mdir) if n.startswith("txn-"))
-    except FileNotFoundError:
-        return 0
-    doomed = names[:-keep_last]
-    for n in doomed:
-        os.remove(os.path.join(mdir, n))
-    return len(doomed)
+    return warehouse_log(warehouse_path).expire(keep_last)
 
 
 def warehouse_gc(warehouse_path: str) -> int:
     """Reap data files referenced by NO remaining warehouse txn doc
     (crashed stagings and expired snapshots). File-grain, like
     `manifest_gc`; returns files removed."""
-    import shutil
-
-    live: set[str] = set()
-    mdir = _warehouse_mdir(warehouse_path)
-    try:
-        for n in os.listdir(mdir):
-            if n.startswith("txn-"):
-                with open(os.path.join(mdir, n)) as f:
-                    for t in json.load(f).get("tables", {}).values():
-                        live.update(t.get("files", []))
-    except FileNotFoundError:
-        return 0
-    removed = 0
     tables_root = os.path.join(warehouse_path, "tables")
     if not os.path.isdir(tables_root):
         return 0
-    for tbl in os.listdir(tables_root):
-        data_root = os.path.join(tables_root, tbl, "data")
-        if not os.path.isdir(data_root):
-            continue
-        for txn_dir in os.listdir(data_root):
-            full = os.path.join(data_root, txn_dir)
-            files = [
-                os.path.join(full, n) for n in os.listdir(full) if n.endswith(".parquet")
-            ]
-            if files and not any(f in live for f in files):
-                shutil.rmtree(full, ignore_errors=True)
-                removed += len(files)
-            else:
-                for f in files:
-                    if f not in live:
-                        os.remove(f)
-                        removed += 1
-    return removed
+    return warehouse_log(warehouse_path).gc(
+        os.path.join(tables_root, t, "data") for t in os.listdir(tables_root)
+    )
 
 
 def ingest_archives(
@@ -1962,7 +1582,8 @@ def ingest_archives(
         new_rows.unpersist()
 
     watermarks: dict[str, int] = {}
-    for row in stats:
+    # URL order is month order (see unmark_last_archive)
+    for row in sorted(stats, key=lambda r: r["archive_url"]):
         user = row["username"]
         entry = state.setdefault(user, {"last_end_time": 0, "processed_archives": []})
         if row["archive_url"] not in entry["processed_archives"]:

@@ -52,11 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chesscom_etl_tableau_spark.plans.ingest import (
-    MANIFEST_PROTOCOL,
-    _check_protocol,
-    _manifest_dir,
-)
+from chesscom_etl_tableau_spark.plans import genlog
 
 METADATA_FORMAT = "spark-graft-manifest/1"
 
@@ -199,17 +195,9 @@ def _resolve_io(spark: SparkSession, sink_path: str, hadoop: bool):
     return _OsIO, _require_local(sink_path)
 
 
-def _read_manifest(io, sink_path: str, generation: int) -> dict:
-    return _check_protocol(
-        json.loads(
-            io.read_text(
-                os.path.join(
-                    _manifest_dir(sink_path), f"manifest-{generation:012d}.json"
-                )
-            )
-        ),
-        sink_path,
-    )
+def _log(io, sink_path: str) -> genlog.GenLog:
+    """The sink's manifest log, listed and read through `io`."""
+    return genlog.manifest_log(sink_path, listdir=io.listdir, read_text=io.read_text)
 
 
 def _require_local(sink_path: str) -> str:
@@ -244,19 +232,6 @@ def _require_local(sink_path: str) -> str:
             "got a remote URI"
         )
     return sink_path
-
-
-def _published_generations(sink_path: str, io=None) -> list[int]:
-    if io is None:
-        io, sink_path = _OsIO, _require_local(sink_path)
-    mdir = _manifest_dir(sink_path)
-    try:
-        names = [n for n in io.listdir(mdir) if n.startswith("manifest-")]
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(n.removeprefix("manifest-").removesuffix(".json")) for n in names
-    )
 
 
 # Below this many files a Spark stage costs more than it saves: footer
@@ -329,10 +304,11 @@ def snapshot_summaries(
     ``hadoop=True`` routes all metadata IO through the Hadoop
     FileSystem API (any scheme the session's Hadoop conf resolves)."""
     io, sink_path = _resolve_io(spark, sink_path, hadoop)
-    gens = _published_generations(sink_path, io)
+    log = _log(io, sink_path)
+    gens = log.generations()
     if not gens:
         return []
-    docs = {g: _read_manifest(io, sink_path, g) for g in gens}
+    docs = {g: log.doc(g) for g in gens}
     all_files = sorted({f for d in docs.values() for f in d.get("files", [])})
     rows_by_file = _footer_rows(spark, all_files, io if hadoop else None)
     current = gens[-1]
@@ -343,9 +319,7 @@ def snapshot_summaries(
         out.append(
             {
                 "snapshot_id": g,
-                "manifest": os.path.join(
-                    _manifest_dir(sink_path), f"manifest-{g:012d}.json"
-                ),
+                "manifest": log.path(g),
                 "n_data_files": len(files),
                 "n_delete_files": len(doc.get("delete_files", [])),
                 "total_records": sum(rows_by_file[f] for f in files),
@@ -416,7 +390,7 @@ def export_metadata_json(
     current = summaries[-1]["snapshot_id"]
     doc = {
         "format": METADATA_FORMAT,
-        "protocol": MANIFEST_PROTOCOL,
+        "protocol": genlog.PROTOCOL,
         "location": sink_path,
         "current_snapshot_id": current,
         "snapshots": summaries,
@@ -557,10 +531,11 @@ def export_delta_log(
     import uuid
 
     io, sink_path = _resolve_io(spark, sink_path, hadoop)
-    gens = _published_generations(sink_path, io)
+    log = _log(io, sink_path)
+    gens = log.generations()
     if not gens:
         raise ValueError(f"{sink_path}: no published snapshots to export")
-    docs = {g: _read_manifest(io, sink_path, g) for g in gens}
+    docs = {g: log.doc(g) for g in gens}
     for g in gens:
         if docs[g].get("delete_files"):
             raise ValueError(
@@ -654,15 +629,7 @@ def export_delta_log(
                         "schemaString": schema_json,
                         "partitionColumns": [],
                         "configuration": {},
-                        "createdTime": int(
-                            io.getmtime(
-                                os.path.join(
-                                    _manifest_dir(sink_path),
-                                    "manifest-000000000001.json",
-                                )
-                            )
-                            * 1000
-                        ),
+                        "createdTime": int(io.getmtime(log.path(1)) * 1000),
                     }
                 }
             )
@@ -686,15 +653,7 @@ def export_delta_log(
                     "remove": {
                         "path": f,
                         # the rewrite's commit time = its manifest mtime
-                        "deletionTimestamp": int(
-                            io.getmtime(
-                                os.path.join(
-                                    _manifest_dir(sink_path),
-                                    f"manifest-{g:012d}.json",
-                                )
-                            )
-                            * 1000
-                        ),
+                        "deletionTimestamp": int(io.getmtime(log.path(g)) * 1000),
                         "dataChange": True,
                     }
                 }

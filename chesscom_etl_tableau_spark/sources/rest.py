@@ -109,14 +109,26 @@ def archives_list_url(username: str) -> str:
     return f"https://api.chess.com/pub/player/{username}/games/archives"
 
 
-def fetch_archive_lists(fetcher: RetryingFetcher, usernames: list[str]) -> list[tuple[str, str]]:
-    """S1: (username, archive_url) pairs; failed users are skipped (I7)."""
-    out: list[tuple[str, str]] = []
+class ArchiveList(list):
+    """(username, archive_url) pairs, plus `failed`: one
+    (username, http_status) per user whose archive list could not be
+    fetched (status None for a network-level error)."""
+
+    def __init__(self, pairs=(), failed=()):
+        super().__init__(pairs)
+        self.failed: list[tuple[str, int | None]] = list(failed)
+
+
+def fetch_archive_lists(fetcher: RetryingFetcher, usernames: list[str]) -> ArchiveList:
+    """S1: (username, archive_url) pairs; failed users are skipped and
+    reported in `.failed` for the caller to log (I7)."""
+    out = ArchiveList()
     for user in usernames:
         try:
             payload = fetcher.fetch_json(archives_list_url(user))
-        except FetchError:
-            continue  # logged by caller; user retried next run
+        except FetchError as e:
+            out.failed.append((user, e.status))  # user retried next run
+            continue
         for url in payload.get("archives", []):
             if url:
                 out.append((user, url))

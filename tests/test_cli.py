@@ -210,3 +210,64 @@ class TestEndToEndDashboard:
         # Slicer composition narrows every visual consistently (F7).
         sliced = summary_card(fact, Slicers(date_start="2024-01-02", date_end="2024-01-04")).first()
         assert sliced["total_games"] == 3
+
+
+class TestRunPipelineFaults:
+    def test_late_games_in_open_month_land_next_day(self, spark, tmp_path):
+        users = ["alice", "bob", "carol", "dave"]
+        months = ["2024/01", "2024/02", "2024/03"]
+        archives = {
+            u: [f"https://api.chess.com/pub/player/{u}/games/{m}" for m in months]
+            for u in users
+        }
+        games = {
+            url: [_game(f"{u}-{i}", 1704067200 + 86400 * 31 * i)]
+            for u in users
+            for i, url in enumerate(archives[u])
+        }
+        out = str(tmp_path / "out")
+        day0 = run_pipeline(
+            spark, users, out, transport=_scripted_transport(archives, games), delay_s=0.0
+        )
+        assert day0.appended_games == 12
+        # day 1: each user's open month (2024/03) gained a late game
+        late = {}
+        for u in users:
+            url = archives[u][-1]
+            late[u] = f"https://game/{u}-late"
+            games[url] = games[url] + [_game(f"{u}-late", 1709500000)]
+        day1 = run_pipeline(
+            spark, users, out, transport=_scripted_transport(archives, games), delay_s=0.0
+        )
+        assert day1.appended_games == len(users)
+        urls = {r["game_url"] for r in spark.read.parquet(f"{out}/games").collect()}
+        assert set(late.values()) <= urls
+        assert len(urls) == 16
+
+    def test_archive_list_failure_is_logged(self, spark, tmp_path, monkeypatch):
+        from functools import partial
+
+        from chesscom_etl_tableau_spark import cli
+        from chesscom_etl_tableau_spark.sources.rest import RetryingFetcher
+
+        monkeypatch.setattr(
+            cli, "RetryingFetcher", partial(RetryingFetcher, sleep=lambda s: None)
+        )
+        inner = _scripted_transport(
+            {"alice": ["https://a/2024/01"]}, {"https://a/2024/01": [_game(1)]}
+        )
+
+        def transport(url):
+            if url == "https://api.chess.com/pub/player/bob/games/archives":
+                return 503, ""
+            return inner(url)
+
+        out = str(tmp_path / "out")
+        s = run_pipeline(spark, ["alice", "bob"], out, transport=transport, delay_s=0.0)
+        assert s.appended_games == 1
+        assert s.errors == 1
+        rows = [
+            r for r in spark.read.parquet(f"{out}/status").collect()
+            if r["stage"] == "error_fetch_archives"
+        ]
+        assert [(r["username"], r["http_status"]) for r in rows] == [("bob", "503")]

@@ -123,3 +123,11 @@ class TestIngest:
             f.write("{corrupt")
         assert load_state(p) == {}  # tolerant, fetch_and_post.py:275-284
         assert load_state(str(tmp_path / "missing.json")) == {}
+
+
+def test_unmark_reopens_latest_month_of_out_of_order_list():
+    base = "https://api.chess.com/pub/player/u/games/"
+    pa = [base + m for m in ("2024/03", "2024/11", "2024/01", "2024/02")]
+    state = {"u": {"last_end_time": 5, "processed_archives": pa}}
+    kept = unmark_last_archive(state)["u"]["processed_archives"]
+    assert kept == [base + m for m in ("2024/03", "2024/01", "2024/02")]

@@ -529,7 +529,7 @@ class TestWarehouseTransactions:
         assert f.count() == 150
         assert f.groupBy("game_url").count().where(F.col("count") > 1).count() == 0
 
-    def test_generation_race_retries_and_both_commits_land(
+    def test_commit_after_rival_generation_reads_its_state(
         self, spark, tmp_path, no_rename
     ):
         import os as _os
@@ -543,13 +543,15 @@ class TestWarehouseTransactions:
         wh = str(tmp_path / "wh")
         facts, dim = self._batch(spark, 0, 10)
         commit_tables({"facts": facts.localCheckpoint()}, wh)
-        # another writer steals generation 2 right before our publish
+        # another writer published generation 2 BEFORE this commit
+        # starts, so the commit reads it as current and never loses a
+        # race (tests/test_genlog.py races between read and create)
         mdir = _warehouse_mdir(wh)
         with open(_os.path.join(mdir, f"txn-{2:012d}.json"), "x") as fh:
             fh.write('{"generation": 2, "tables": {"facts": {"files": []}}}')
         out = commit_tables({"dim": dim.localCheckpoint()}, wh)
         assert out == {"dim": 10}
-        # our commit landed as generation 3, reading the thief's state
+        # our commit landed as generation 3, on top of the rival's state
         assert read_warehouse_table(spark, wh, "dim", generation=3).count() == 10
 
     def test_time_travel_is_cross_table_consistent(self, spark, tmp_path, no_rename):

@@ -366,3 +366,40 @@ class TestDuckDBOracleParity:
         )
         assert len(got) > 0
         assert got == oracle
+
+
+class TestNullAndNanKeyRuns:
+    """A NULL-key run next to a NaN-key run in one sorted partition is
+    two runs, as Spark groups the keys (pandas sees NaN for both)."""
+
+    @pytest.fixture
+    def one_partition(self, spark):
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        yield
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    def test_pattern_does_not_span_null_and_nan_keys(self, spark, one_partition):
+        events = spark.createDataFrame(
+            [
+                (1, None, "2024-01-01 00:00:00", "signup"),
+                (2, None, "2024-01-01 00:01:00", "view"),
+                (3, float("nan"), "2024-01-01 00:02:00", "purchase"),
+            ],
+            "event_id long, user_id double, ts string, event_type string",
+        ).select("event_id", "user_id", F.col("ts").cast("timestamp").alias("ts"), "event_type")
+        assert pattern_matches(events, STEPS).count() == 0
+
+    def test_cusum_resets_between_null_and_nan_keys(self, spark, one_partition):
+        from chesscom_etl_tableau_spark.operators.analytics import cusum_changepoints
+
+        series = spark.createDataFrame(
+            [
+                (1, None, "2024-01-01 00:00:00", 1.0),
+                (2, None, "2024-01-01 00:01:00", 1.0),
+                (3, float("nan"), "2024-01-01 00:02:00", 1.0),
+            ],
+            "event_id long, user_id double, ts string, value double",
+        ).select("event_id", "user_id", F.col("ts").cast("timestamp").alias("ts"), "value")
+        # one merged run would reach 3 > 2.5; two runs stay at 2 and 1
+        assert cusum_changepoints(series, 0.0, 0.0, 2.5).count() == 0

@@ -218,17 +218,21 @@ class TestIndexGenerationLog:
         # current generation unaffected
         assert IL.index_log_read(spark, path).count() == emb.count()
 
-    def test_append_retries_lost_generation_race(self, spark, tmp_path):
+    def test_append_after_rival_generation_lands_on_top(self, spark, tmp_path):
         import json
         import os
+
+        from chesscom_etl_tableau_spark.plans.genlog import index_log
 
         IL, SIM, emb, cents, queries, path, gen = self._fixture(
             spark, str(tmp_path)
         )
-        # simulate a rival winning generation gen+1: pre-publish a doc
-        # carrying the current lists (a pure no-op commit)
+        # a rival published generation gen+1 (a pure no-op commit)
+        # BEFORE this append starts: the append reads it as current and
+        # publishes gen+2 on its first try. The lost-race retry itself
+        # is exercised in tests/test_genlog.py.
         cur = IL.index_log_doc(path, gen)
-        with open(IL._gen_file(path, gen + 1), "x") as f:
+        with open(index_log(path).path(gen + 1), "x") as f:
             json.dump(cur, f)
         more = SIM.assign_buckets(
             emb.select(F.col("vec_id") + 100, "embedding").toDF(
@@ -237,7 +241,7 @@ class TestIndexGenerationLog:
             cents,
         )
         g_new = IL.index_log_append(spark, path, more, "bucket")
-        assert g_new == gen + 2  # lost the race once, retried, won next
+        assert g_new == gen + 2  # landed on top of the rival
         assert IL.index_log_read(spark, path).count() == emb.count() + more.count()
 
     def test_refit_drops_no_directories(self, spark, tmp_path):

@@ -188,3 +188,14 @@ class TestTaggedJaccardEquivalence:
         assert got_true == want_true
         assert got_false == want_false
         assert len(got_true) > 0 and len(got_false) > 0
+
+
+class TestMultisetMismatchGuard:
+    def test_reserved_column_raises_value_error(self, spark):
+        import __spark_entry__ as E
+
+        a = spark.createDataFrame([(1, 2)], "x long, __side long")
+        with pytest.raises(ValueError, match="reserved column"):
+            E._multiset_mismatch(a, a)
+        b = spark.createDataFrame([(1,), (1,), (2,)], "x long")
+        assert E._multiset_mismatch(b, b.limit(1)) == 2
