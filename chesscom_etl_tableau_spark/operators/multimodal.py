@@ -5,10 +5,14 @@ Design for 100 TB of media:
 - The fact table stores `content: binary` next to a `media: struct`
   metadata column; Parquet stores the binary column contiguously and
   column pruning means metadata-only queries never touch the bytes.
-- Decode / feature-extract / resize / frame-sample run as Arrow-batched
-  `mapInPandas` stages: Python touches each binary exactly once per
-  stage, and batch size is bounded by `spark.sql.execution.arrow.
-  maxRecordsPerBatch` so executor memory stays flat.
+- Decode / feature-extract / resize / hash / VAD kernels all run in ONE
+  Arrow blob stage, `_blob_stage`: a single `mapInPandas` that hands
+  each blob to a per-blob Python kernel exactly once and builds the
+  output batch with nullable pandas dtypes derived from the output
+  schema. Batch size is bounded by `spark.sql.execution.arrow.
+  maxRecordsPerBatch` so executor memory stays flat. Each
+  `X_features` / `synth_X` pair shares its kernel and differs only in
+  where the blob comes from (the binary column, or `_blob_for(id)`).
 - Formats whose byte layout needs no codec LIBRARY are decoded for
   real, in pure Python/numpy: BMP + PPM pixels, GIF via a from-scratch
   LZW decoder (`_gif_lzw_decode`), WAV PCM samples via `np.frombuffer`.
@@ -28,6 +32,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -76,6 +81,60 @@ DECODE_OUT_SCHEMA = StructType(
 )
 
 _NO_PIXELS = (None,) * 9
+
+
+def _blob_stage(
+    df: DataFrame,
+    schema: StructType,
+    kernel,
+    id_col: str,
+    content_col: str | None = None,
+    fan_out: bool = False,
+) -> DataFrame:
+    """The one Arrow stage every blob kernel in this module runs in.
+
+    Selects `id_col` (plus `content_col` when given) and maps each
+    Arrow batch through `kernel`, once per blob. The blob is the
+    content value (`b""` for NULL) or, without a content column, the
+    fixture blob `_blob_for(id)`. `kernel(blob)` returns the row's
+    values after the id, in `schema` order; with `fan_out` it returns
+    a list of such rows, zero or more per blob. The id lands in the
+    schema's first field. Blobs never leave their scan partition.
+    """
+    import pandas as pd
+
+    # Nullable pandas dtypes, derived once per stage from the schema.
+    # NULL alone would survive a plain dtype (PySpark masks isnull() on
+    # the way to Arrow); the reason is exactness: a Python int list
+    # holding None becomes float64, exact only below 2**53
+    # (pd.Series([2**60 + 1, None]) loses the value, dtype="Int64"
+    # keeps it). String and binary columns stay object.
+    nullable = {LongType: "Int64", IntegerType: "Int64", DoubleType: "Float64", BooleanType: "boolean"}
+    names = schema.fieldNames()
+    dtypes = [nullable.get(type(f.dataType), "object") for f in schema.fields]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = pdf[id_col].tolist()
+            if content_col is None:
+                blobs = map(_blob_for, ids)
+            else:
+                blobs = (b"" if v is None else bytes(v) for v in pdf[content_col])
+            if fan_out:
+                rows = [(i, *r) for i, blob in zip(ids, blobs) for r in kernel(blob)]
+            else:
+                rows = [(i, *kernel(blob)) for i, blob in zip(ids, blobs)]
+            columns = zip(*rows) if rows else [()] * len(names)
+            yield pd.DataFrame(
+                {n: pd.Series(c, dtype=t) for n, c, t in zip(names, columns, dtypes)}
+            )
+
+    from chesscom_etl_tableau_spark.util import ensure_parallelism
+
+    # One Python worker per partition: spread narrow sources before the
+    # Arrow exchange so kernel parallelism matches the cluster.
+    selected = df.select(id_col) if content_col is None else df.select(id_col, content_col)
+    return ensure_parallelism(selected).mapInPandas(run, schema=schema)
 
 
 def _gif_lzw_decode(stream: bytes, min_code_size: int, max_pixels: int):
@@ -412,69 +471,17 @@ def audio_spectral(data: bytes, period_samples: int = 128):
 
 _NO_SPECTRAL = (None,) * 7
 
-_SPECTRAL_COLS = tuple(f.name for f in SPECTRAL_OUT_SCHEMA.fields)
-
-
-def _spectral_frame(pd, out: dict):
-    def dtype_for(k: str):
-        if k == "doc_id":
-            return None
-        if k in ("peak_at_fundamental", "parseval_holds"):
-            return "boolean"
-        return "Int64"
-
-    return pd.DataFrame({k: pd.Series(v, dtype=dtype_for(k)) for k, v in out.items()})
-
-
-def spectral_features(
-    media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
-    """Arrow-batched FFT spectral analysis over a binary media column —
-    the frequency-domain sibling of `audio_features`. numpy's rfft runs
-    per blob inside the same mapInPandas stage (no shuffle: blobs never
-    leave their scan partition); non-WAV blobs yield NULLs."""
-    import pandas as pd
-
-    def analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in _SPECTRAL_COLS}
-            for doc_id, blob in zip(pdf[id_col], pdf[content_col]):
-                data = bytes(blob) if blob is not None else b""
-                out["doc_id"].append(int(doc_id))
-                for col, val in zip(_SPECTRAL_COLS[1:], audio_spectral(data)):
-                    out[col].append(val)
-            yield _spectral_frame(pd, out)
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(media_df.select(id_col, content_col)).mapInPandas(
-        analyze, schema=SPECTRAL_OUT_SCHEMA
-    )
-
 
 def synth_spectral_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fixture blob-gen + FFT analysis fused into one Arrow stage (the
     `synth_audio_stats` shape); only the WAV residue class
-    (doc_id % 4 == 3) carries PCM payloads."""
-    import pandas as pd
+    (doc_id % 4 == 3) carries PCM payloads. numpy's rfft runs per blob
+    (no shuffle: blobs never leave their scan partition); non-WAV blobs
+    yield NULLs."""
+    return _blob_stage(
+        docs.where(F.col(id_col) % 4 == 3), SPECTRAL_OUT_SCHEMA, audio_spectral, id_col
+    )
 
-    def gen_analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in _SPECTRAL_COLS}
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                out["doc_id"].append(doc_id)
-                for col, val in zip(
-                    _SPECTRAL_COLS[1:], audio_spectral(_blob_for(doc_id))
-                ):
-                    out[col].append(val)
-            yield _spectral_frame(pd, out)
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.where(F.col(id_col) % 4 == 3).select(id_col)
-    ).mapInPandas(gen_analyze, schema=SPECTRAL_OUT_SCHEMA)
 
 _NO_AUDIO = (None,) * 5
 
@@ -627,49 +634,19 @@ def synth_audio_resample(
     binary column comes off the parquet scan and this is a single
     mapInPandas over it. Only the WAV residue class (doc_id % 4 == 3)
     carries PCM payloads."""
-    import pandas as pd
-
-    def gen_analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in _RESAMPLE_COLS}
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                out["doc_id"].append(doc_id)
-                for col, val in zip(
-                    _RESAMPLE_COLS[1:],
-                    audio_resample_stats(_blob_for(doc_id), target_rate),
-                ):
-                    out[col].append(val)
-            yield _resample_frame(pd, out)
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.where(F.col(id_col) % 4 == 3).select(id_col)
-    ).mapInPandas(gen_analyze, schema=RESAMPLE_OUT_SCHEMA)
+    return _blob_stage(
+        docs.where(F.col(id_col) % 4 == 3),
+        RESAMPLE_OUT_SCHEMA,
+        lambda blob: audio_resample_stats(blob, target_rate),
+        id_col,
+    )
 
 
 def audio_features(media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content") -> DataFrame:
     """Arrow-batched PCM analysis over a binary media column — the
     audio twin of `decode_features`. Total over arbitrary bytes:
     non-WAV blobs yield NULL stats rather than errors."""
-    import pandas as pd
-
-    def analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in _AUDIO_COLS}
-            for doc_id, blob in zip(pdf[id_col], pdf[content_col]):
-                data = bytes(blob) if blob is not None else b""
-                out["doc_id"].append(int(doc_id))
-                for col, val in zip(_AUDIO_COLS[1:], audio_stats(data)):
-                    out[col].append(val)
-            yield _audio_frame(pd, out)
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(media_df.select(id_col, content_col)).mapInPandas(
-        analyze, schema=AUDIO_OUT_SCHEMA
-    )
+    return _blob_stage(media_df, AUDIO_OUT_SCHEMA, audio_stats, id_col, content_col)
 
 
 def synth_audio_stats(
@@ -680,51 +657,12 @@ def synth_audio_stats(
     the binary column comes off the parquet scan and this is a single
     mapInPandas over it. Only the WAV residue class of the fixture
     round-robin (doc_id % 4 == 3) carries PCM payloads."""
-    import pandas as pd
-
-    def gen_analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in _AUDIO_COLS}
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                out["doc_id"].append(doc_id)
-                for col, val in zip(
-                    _AUDIO_COLS[1:], audio_stats(_blob_for(doc_id), decimate)
-                ):
-                    out[col].append(val)
-            yield _audio_frame(pd, out)
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.where(F.col(id_col) % 4 == 3).select(id_col)
-    ).mapInPandas(gen_analyze, schema=AUDIO_OUT_SCHEMA)
-
-
-_AUDIO_COLS = tuple(f.name for f in AUDIO_OUT_SCHEMA.fields)
-_RESAMPLE_COLS = tuple(f.name for f in RESAMPLE_OUT_SCHEMA.fields)
-
-
-def _resample_frame(pd, out: dict):
-    def dtype_for(k: str):
-        if k in ("rms", "peak_abs"):
-            return "Float64"
-        if k == "doc_id":
-            return None
-        return "Int64"
-
-    return pd.DataFrame({k: pd.Series(v, dtype=dtype_for(k)) for k, v in out.items()})
-
-
-def _audio_frame(pd, out: dict):
-    def dtype_for(k: str):
-        if k == "rms":
-            return "Float64"
-        if k == "doc_id":
-            return None
-        return "Int64"
-
-    return pd.DataFrame({k: pd.Series(v, dtype=dtype_for(k)) for k, v in out.items()})
+    return _blob_stage(
+        docs.where(F.col(id_col) % 4 == 3),
+        AUDIO_OUT_SCHEMA,
+        lambda blob: audio_stats(blob, decimate),
+        id_col,
+    )
 
 
 def _decode_image(data: bytes) -> tuple[int, int]:
@@ -847,33 +785,21 @@ def _blob_for(doc_id: int) -> bytes:
     )
 
 
-_DECODE_COLS = tuple(f.name for f in DECODE_OUT_SCHEMA.fields)
-_PIXEL_COLS = (
-    "mean_r", "mean_g", "mean_b", "min_px", "max_px",
-    "lum_b0", "lum_b1", "lum_b2", "lum_b3",
-)
-
-
-def _append_pixel_stats(out: dict, data: bytes) -> None:
-    for col, val in zip(_PIXEL_COLS, pixel_stats(data)):
-        out[col].append(val)
-
-
-def _decode_frame(pd, out: dict):
-    """Build the Arrow-bound frame with NULLABLE dtypes everywhere a
-    column can be absent (plain float64 would turn None into NaN, which
-    Arrow ships as NaN — not SQL NULL — and breaks the oracle compare)."""
-
-    def dtype_for(k: str):
-        if k in ("format", "feature"):
-            return "object"
-        if k in ("mean_r", "mean_g", "mean_b"):
-            return "Float64"
-        if k in ("doc_id", "n_bytes", "checksum_crc32", "fake_width", "fake_height"):
-            return None
-        return "Int64"
-
-    return pd.DataFrame({k: pd.Series(v, dtype=dtype_for(k)) for k, v in out.items()})
+def _decode_row(data: bytes):
+    """The decode kernel: every DECODE_OUT_SCHEMA value after doc_id.
+    Recognized containers (BMP/PPM/GIF/WAV) get real header metadata
+    via `parse_media`; anything else falls back to the checksum-derived
+    pseudo-size so the kernel is total over arbitrary bytes."""
+    fmt, w, h, dur = parse_media(data)
+    return (
+        fmt, w, h, dur,
+        len(data),
+        binascii.crc32(data),
+        *_decode_image(data),
+        # "feature": a tiny stable descriptor (first 8 bytes hex).
+        binascii.hexlify(data[:8]).decode(),
+        *pixel_stats(data),
+    )
 
 
 def attach_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -894,6 +820,14 @@ def attach_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
+_MEDIA_BLOB_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("content", BinaryType()),
+    ]
+)
+
+
 def attach_media_blob(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fixture adapter for real-container decoding: (doc_id, content)
     where content is a genuine BMP/PPM/GIF/WAV blob built
@@ -901,22 +835,7 @@ def attach_media_blob(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     binary column arrives from the lakehouse; this stage exists so the
     header parsers can be exercised — and oracle-checked — without any
     media fixtures in the environment."""
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "content": [_blob_for(int(i)) for i in pdf[id_col]],
-                }
-            )
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(docs.select(id_col)).mapInPandas(
-        gen, schema="doc_id long, content binary"
-    )
+    return _blob_stage(docs, _MEDIA_BLOB_SCHEMA, lambda blob: (blob,), id_col)
 
 
 def synth_decode_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -927,73 +846,13 @@ def synth_decode_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     pipeline does not have, so the benched/registered query uses this
     fused shape. Identical output to the composed form (asserted in
     tests)."""
-    import pandas as pd
-
-    def gen_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in _DECODE_COLS}
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                data = _blob_for(doc_id)
-                fmt, w, h, dur = parse_media(data)
-                fw, fh = _decode_image(data)
-                out["doc_id"].append(doc_id)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["duration_ms"].append(dur)
-                out["n_bytes"].append(len(data))
-                out["checksum_crc32"].append(binascii.crc32(data))
-                out["fake_width"].append(fw)
-                out["fake_height"].append(fh)
-                out["feature"].append(binascii.hexlify(data[:8]).decode())
-                _append_pixel_stats(out, data)
-            yield _decode_frame(pd, out)
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(docs.select(id_col)).mapInPandas(
-        gen_decode, schema=DECODE_OUT_SCHEMA
-    )
+    return _blob_stage(docs, DECODE_OUT_SCHEMA, _decode_row, id_col)
 
 
 def decode_features(media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content") -> DataFrame:
-    """Arrow-batched decode/feature-extract over the binary column.
-
-    Recognized containers (BMP/PPM/GIF/WAV) get real header metadata
-    via `parse_media`; anything else falls back to the checksum-derived
-    pseudo-size so the stage is total over arbitrary bytes.
-    """
-    import pandas as pd
-
-    def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in _DECODE_COLS}
-            for doc_id, blob in zip(pdf[id_col], pdf[content_col]):
-                data = bytes(blob) if blob is not None else b""
-                fmt, w, h, dur = parse_media(data)
-                fw, fh = _decode_image(data)
-                out["doc_id"].append(doc_id)
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["duration_ms"].append(dur)
-                out["n_bytes"].append(len(data))
-                out["checksum_crc32"].append(binascii.crc32(data))
-                out["fake_width"].append(fw)
-                out["fake_height"].append(fh)
-                # "feature": a tiny stable descriptor (first 8 bytes hex).
-                out["feature"].append(binascii.hexlify(data[:8]).decode() if data else "")
-                _append_pixel_stats(out, data)
-            yield _decode_frame(pd, out)
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    # One Python worker per partition: spread narrow sources before the
-    # Arrow exchange so decode parallelism matches the cluster.
-    return ensure_parallelism(media_df.select(id_col, content_col)).mapInPandas(
-        decode_batches, schema=DECODE_OUT_SCHEMA
-    )
+    """Arrow-batched decode/feature-extract over the binary column
+    (`_decode_row` per blob; a NULL blob decodes as empty bytes)."""
+    return _blob_stage(media_df, DECODE_OUT_SCHEMA, _decode_row, id_col, content_col)
 
 
 def frame_sample_plan(media_df: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -1096,6 +955,25 @@ def resize_nearest(arr, out_w: int, out_h: int):
     return arr[np.ix_(ys, xs)]
 
 
+def _resize_row(data: bytes, out_w: int, out_h: int):
+    """The resize kernel: format, then (for a raster) the resized
+    size, per-channel mean and the top-left / bottom-right pixels."""
+    fmt = parse_media(data)[0]
+    arr = decode_raster(data)
+    if arr is None:
+        return (fmt,) + (None,) * 11
+    rs = resize_nearest(arr, out_w, out_h).astype("int64")
+    n = out_w * out_h
+    means = [
+        _math.floor(float(rs[:, :, c].sum()) / n * 1e6 + 0.5) / 1e6 for c in range(3)
+    ]
+    return (
+        fmt, out_w, out_h, *means,
+        *(int(v) for v in rs[0, 0]),
+        *(int(v) for v in rs[-1, -1]),
+    )
+
+
 def synth_resize_stats(
     docs: DataFrame, id_col: str = "doc_id", out_w: int = 8, out_h: int = 8
 ) -> DataFrame:
@@ -1105,61 +983,12 @@ def synth_resize_stats(
     to (out_w, out_h), and summarized — per-channel mean plus the
     top-left and bottom-right pixels, which pin the sampling positions
     AND the row orientation for the oracle."""
-    import math
-
-    import pandas as pd
-
-    cols = tuple(f.name for f in RESIZE_OUT_SCHEMA.fields)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                data = _blob_for(doc_id)
-                fmt, _, _, _ = parse_media(data)
-                arr = decode_raster(data)
-                out["doc_id"].append(doc_id)
-                out["format"].append(fmt)
-                if arr is None:
-                    for k in cols[2:]:
-                        out[k].append(None)
-                    continue
-                rs = resize_nearest(arr, out_w, out_h).astype("int64")
-                n = out_w * out_h
-                means = [
-                    math.floor(float(rs[:, :, c].sum()) / n * 1e6 + 0.5) / 1e6
-                    for c in range(3)
-                ]
-                out["out_w"].append(out_w)
-                out["out_h"].append(out_h)
-                out["mean_r"].append(means[0])
-                out["mean_g"].append(means[1])
-                out["mean_b"].append(means[2])
-                for k, v in zip(("tl_r", "tl_g", "tl_b"), rs[0, 0]):
-                    out[k].append(int(v))
-                for k, v in zip(("br_r", "br_g", "br_b"), rs[-1, -1]):
-                    out[k].append(int(v))
-            yield pd.DataFrame(
-                {
-                    k: pd.Series(
-                        v,
-                        dtype=(
-                            "object" if k == "format"
-                            else "Float64" if k.startswith("mean_")
-                            else None if k == "doc_id"
-                            else "Int64"
-                        ),
-                    )
-                    for k, v in out.items()
-                }
-            )
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.where(F.col(id_col) % 4 != 3).select(id_col)
-    ).mapInPandas(gen, schema=RESIZE_OUT_SCHEMA)
+    return _blob_stage(
+        docs.where(F.col(id_col) % 4 != 3),
+        RESIZE_OUT_SCHEMA,
+        lambda blob: _resize_row(blob, out_w, out_h),
+        id_col,
+    )
 
 
 def dhash_hex(arr) -> str:
@@ -1191,29 +1020,26 @@ DHASH_OUT_SCHEMA = StructType(
 )
 
 
+def _raster_hash(hash_hex):
+    """Kernel factory: decode the raster, then one hash column (NULL
+    when the blob is not a raster)."""
+
+    def kernel(data: bytes):
+        arr = decode_raster(data)
+        return (None if arr is None else hash_hex(arr),)
+
+    return kernel
+
+
 def synth_dhash(docs: DataFrame, id_col: str = "doc_id", residue: int = 2) -> DataFrame:
     """Perceptual hashes for the raster fixture blobs of one format
     residue class (default 2 = GIF, the only fixture whose pixels vary
     by row): blob-gen -> REAL decode (LZW for GIF) -> dhash, fused in
     one Arrow stage. The downstream near-dup join runs on the hash
     column only — image bytes never shuffle."""
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                arr = decode_raster(_blob_for(doc_id))
-                ids.append(doc_id)
-                hashes.append(None if arr is None else dhash_hex(arr))
-            yield pd.DataFrame({"doc_id": ids, "dhash": hashes})
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.where(F.col(id_col) % 4 == residue).select(id_col)
-    ).mapInPandas(gen, schema=DHASH_OUT_SCHEMA)
+    return _blob_stage(
+        docs.where(F.col(id_col) % 4 == residue), DHASH_OUT_SCHEMA, _raster_hash(dhash_hex), id_col
+    )
 
 
 def dhash_neardup_stats(
@@ -1483,23 +1309,9 @@ def synth_phash(docs: DataFrame, id_col: str = "doc_id", residue: int = 2) -> Da
     DCT pHash, fused in one Arrow stage — same plumbing contract as
     `synth_dhash` (image bytes never shuffle; the near-dup join sees
     only the 16-char hash column)."""
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                arr = decode_raster(_blob_for(doc_id))
-                ids.append(doc_id)
-                hashes.append(None if arr is None else phash_hex(arr))
-            yield pd.DataFrame({"doc_id": ids, "phash": hashes})
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.where(F.col(id_col) % 4 == residue).select(id_col)
-    ).mapInPandas(gen, schema=PHASH_OUT_SCHEMA)
+    return _blob_stage(
+        docs.where(F.col(id_col) % 4 == residue), PHASH_OUT_SCHEMA, _raster_hash(phash_hex), id_col
+    )
 
 
 def phash_bands(
@@ -1675,34 +1487,12 @@ def synth_audio_vad(
     column comes off the parquet scan and this is one mapInPandas over
     it — frame reshaping and run-length math never leave the executor,
     and only 6 small columns shuffle."""
-    import pandas as pd
-
-    cols = ("doc_id", "n_frames", "n_active", "n_segments", "longest_run", "active_ratio")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                out["doc_id"].append(doc_id)
-                for col, val in zip(cols[1:], vad_stats(_blob_for(doc_id), frame, thr_mean_abs)):
-                    out[col].append(val)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "n_frames": pd.Series(out["n_frames"], dtype="Int64"),
-                    "n_active": pd.Series(out["n_active"], dtype="Int64"),
-                    "n_segments": pd.Series(out["n_segments"], dtype="Int64"),
-                    "longest_run": pd.Series(out["longest_run"], dtype="Int64"),
-                    "active_ratio": pd.Series(out["active_ratio"], dtype="float64"),
-                }
-            )
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.where(F.col(id_col) % 4 == 3).select(id_col)
-    ).mapInPandas(gen, schema=VAD_OUT_SCHEMA)
+    return _blob_stage(
+        docs.where(F.col(id_col) % 4 == 3),
+        VAD_OUT_SCHEMA,
+        lambda blob: vad_stats(blob, frame, thr_mean_abs),
+        id_col,
+    )
 
 
 VAD_SEG_SCHEMA = StructType(
@@ -1745,26 +1535,13 @@ def synth_audio_vad_segments(
     """Fixture blob-gen + VAD segment extraction in ONE Arrow stage —
     same plumbing contract as `synth_audio_vad`, fanning out one row
     per active run instead of one aggregate row per document."""
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "seg_id", "start_frame", "end_frame", "seg_frames")}
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                for g, s, e, n in vad_segments(_blob_for(doc_id), frame, thr_mean_abs):
-                    rows["doc_id"].append(doc_id)
-                    rows["seg_id"].append(g)
-                    rows["start_frame"].append(s)
-                    rows["end_frame"].append(e)
-                    rows["seg_frames"].append(n)
-            yield pd.DataFrame({k: pd.Series(v, dtype="int64") for k, v in rows.items()})
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.where(F.col(id_col) % 4 == 3).select(id_col)
-    ).mapInPandas(gen, schema=VAD_SEG_SCHEMA)
+    return _blob_stage(
+        docs.where(F.col(id_col) % 4 == 3),
+        VAD_SEG_SCHEMA,
+        lambda blob: vad_segments(blob, frame, thr_mean_abs),
+        id_col,
+        fan_out=True,
+    )
 
 
 PATCH_OUT_SCHEMA = StructType(
@@ -1798,38 +1575,23 @@ def synth_patch_stats(
     stats fused in ONE Arrow stage (mapInPandas); image bytes never
     shuffle; one Python touch per blob; output rows = 16 per image.
     """
-    import pandas as pd
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def patches(data: bytes):
+        arr = decode_raster(data)
+        if arr is None:
+            return []
+        lum = arr.astype("int64").sum(axis=2) // 3
+        h, w = lum.shape
+        rows = []
+        for i in range(grid):
+            for j in range(grid):
+                block = lum[
+                    i * h // grid : (i + 1) * h // grid,
+                    j * w // grid : (j + 1) * w // grid,
+                ]
+                rows.append((i, j, int(block.size), int(block.sum()) // int(block.size)))
+        return rows
 
-        for pdf in batches:
-            out = {
-                "doc_id": [], "patch_row": [], "patch_col": [],
-                "n_px": [], "mean_lum": [],
-            }
-            for raw_id in pdf[id_col]:
-                doc_id = int(raw_id)
-                arr = decode_raster(_blob_for(doc_id))
-                if arr is None:
-                    continue
-                lum = arr.astype("int64").sum(axis=2) // 3
-                h, w = lum.shape
-                for i in range(grid):
-                    for j in range(grid):
-                        block = lum[
-                            i * h // grid : (i + 1) * h // grid,
-                            j * w // grid : (j + 1) * w // grid,
-                        ]
-                        out["doc_id"].append(doc_id)
-                        out["patch_row"].append(i)
-                        out["patch_col"].append(j)
-                        out["n_px"].append(int(block.size))
-                        out["mean_lum"].append(int(block.sum()) // int(block.size))
-            yield pd.DataFrame(out)
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(
-        docs.where(F.col(id_col) % 4 == residue).select(id_col)
-    ).mapInPandas(gen, schema=PATCH_OUT_SCHEMA)
+    return _blob_stage(
+        docs.where(F.col(id_col) % 4 == residue), PATCH_OUT_SCHEMA, patches, id_col, fan_out=True
+    )

@@ -87,7 +87,7 @@ def cosine(a: Column, b: Column) -> Column:
 # PQ vectors); at another width the unrolled branch simply never fires.
 # ---------------------------------------------------------------------------
 
-_UNROLL_DIM = int(os.environ.get("SPARK_GRAFT_UNROLL_DIM", "64"))
+_UNROLL_DIM = 64
 
 
 def _dot_unrolled(a: Column, b: Column, d: int) -> Column:

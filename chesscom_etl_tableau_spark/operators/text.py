@@ -66,10 +66,6 @@ def punct_count(text: Column) -> Column:
     return F.size(F.coalesce(F.regexp_extract_all(text, F.lit(r"([!-/:-@\[-`{-~])"), F.lit(1)), F.array()))
 
 
-def stopword_count(text: Column) -> Column:
-    return F.size(F.filter(word_tokens(text), lambda t: t.isin(*STOPWORDS)))
-
-
 def quality_metrics(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Per-document quality features + a composite [0,1] quality score.
 

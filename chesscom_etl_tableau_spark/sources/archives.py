@@ -17,12 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chesscom_etl_tableau_spark.functions.pgn import game_result
-from chesscom_etl_tableau_spark.schemas import ARCHIVE_SCHEMA, GAMES_SCHEMA, enforce_schema
-
-
-def read_archives_json(spark, path: str) -> DataFrame:
-    """Read archive JSON files with the explicit nested schema (no inference)."""
-    return spark.read.schema(ARCHIVE_SCHEMA).json(path)
+from chesscom_etl_tableau_spark.schemas import GAMES_SCHEMA, enforce_schema
 
 
 def flatten_archives(archives: DataFrame) -> DataFrame:

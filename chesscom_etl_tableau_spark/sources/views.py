@@ -7,7 +7,7 @@ same Catalyst plans serve both front ends.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from chesscom_etl_tableau_spark.sources.tables import load_table
 
@@ -29,8 +29,3 @@ def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = T
     """Create/replace one temp view per testdata table."""
     for name in tables:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def register_games_view(games: DataFrame, name: str = "games") -> None:
-    """Expose a games fact DataFrame (e.g. the ingest sink) to SQL."""
-    games.createOrReplaceTempView(name)

@@ -18,6 +18,17 @@ from chesscom_etl_tableau_spark.schemas import ARCHIVE_SCHEMA
 from chesscom_etl_tableau_spark.session import get_spark
 
 
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Name the slow tier the default profile skipped (pytest.ini
+    deselects `slow`), so a green default run is not read as the full
+    suite."""
+    slow = [it for it in terminalreporter.stats.get("deselected", []) if it.get_closest_marker("slow")]
+    if slow:
+        terminalreporter.write_line(
+            f"{len(slow)} slow-marked tests deselected; full suite: python -m pytest tests/ -q -m \"\""
+        )
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = get_spark("tests", shuffle_partitions=4)

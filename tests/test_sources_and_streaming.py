@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from chesscom_etl_tableau_spark.operators.multimodal import (
     attach_binary,
+    audio_features,
     decode_features,
     frame_sample_plan,
 )
@@ -231,6 +232,28 @@ class TestMultimodal:
         assert feats[2]["n_bytes"] == 0 and feats[3]["n_bytes"] == 0
         # Stubbed decode is deterministic (same bytes -> same fake dims).
         assert feats[2]["fake_width"] == feats[3]["fake_width"]
+
+    def test_null_content_ships_sql_null(self, spark):
+        """A NULL blob decodes as empty bytes, and every column a kernel
+        leaves empty arrives as SQL NULL (None), never NaN."""
+        media = spark.createDataFrame(
+            [(1, None), (2, bytearray(b"not a media blob"))], "doc_id long, content binary"
+        )
+        decoded = {r["doc_id"]: r for r in decode_features(media).collect()}
+        audio = {r["doc_id"]: r for r in audio_features(media).collect()}
+        assert sorted(decoded) == sorted(audio) == [1, 2]
+        assert decoded[1]["n_bytes"] == 0 and decoded[1]["checksum_crc32"] == 0
+        assert decoded[1]["feature"] == ""
+        assert decoded[2]["n_bytes"] == len(b"not a media blob")
+        empty = (
+            "format", "width", "height", "duration_ms",
+            "mean_r", "mean_g", "mean_b", "min_px", "max_px",
+            "lum_b0", "lum_b1", "lum_b2", "lum_b3",
+        )
+        for r in decoded.values():
+            assert all(r[c] is None for c in empty), r
+        for r in audio.values():
+            assert all(v is None for v in r[1:]), r
 
     def test_metadata_only_query_prunes_binary(self, spark):
         docs = spark.createDataFrame([(1, "abc")], "doc_id long, text string")
