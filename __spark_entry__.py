@@ -955,33 +955,8 @@ def _q_dedup_incremental_near(spark, sf_dir):
     batch = docs.where(F.col("doc_id") % 5 == 4)
     index = D.dedup_index_frame(corpus)
     got = D.incremental_near_dup_pairs(batch, corpus, index, threshold=0.5)
-
-    bsh = D._doc_shingles(batch, "text", "doc_id", 3)
-    csh = D._doc_shingles(corpus, "text", "doc_id", 3)
-    bs = bsh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_b"))
-    cs = csh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_c"))
-    inter = (
-        bsh.select(F.col("doc").alias("batch_id"), "shingle")
-        .join(csh.select(F.col("doc").alias("corpus_id"), "shingle"), "shingle")
-        .groupBy("batch_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    exact = (
-        inter.join(bs.select(F.col("doc").alias("batch_id"), "n_b"), "batch_id")
-        .join(cs.select(F.col("doc").alias("corpus_id"), "n_c"), "corpus_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.try_divide(
-                    F.col("n_common") * F.lit(1.0),
-                    F.col("n_b") + F.col("n_c") - F.col("n_common"),
-                ),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= 0.5)
-        .select("batch_id", "corpus_id", "jaccard")
-    )
+    # batch and corpus are disjoint, so the self-pair fence drops nothing
+    exact = D.exact_jaccard_batch_pairs(batch, corpus, threshold=0.5)
     return _lsh_contract(
         exact, got.select("batch_id", "corpus_id"),
         ["batch_id", "corpus_id"], "jaccard", 0.7,
@@ -1019,37 +994,9 @@ def _q_dedup_lsh_persist(spark, sf_dir):
             .select("batch_id", F.col("index_id").alias("corpus_id"))
             .localCheckpoint()
         )
-        corpus_c = corpus.join(
-            cands.select(F.col("corpus_id").alias("doc_id")), "doc_id", "left_semi"
-        )
-        bsh = D._doc_shingles(batch, "text", "doc_id", 3)
-        csh = D._doc_shingles(corpus_c, "text", "doc_id", 3)
-        bs = bsh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_b"))
-        cs = csh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_c"))
-        inter = (
-            cands.join(bsh.select(F.col("doc").alias("batch_id"), "shingle"), "batch_id")
-            .join(
-                csh.select(F.col("doc").alias("corpus_id"), "shingle"),
-                ["corpus_id", "shingle"],
-            )
-            .groupBy("batch_id", "corpus_id")
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-        verified = (
-            inter.join(bs.select(F.col("doc").alias("batch_id"), "n_b"), "batch_id")
-            .join(cs.select(F.col("doc").alias("corpus_id"), "n_c"), "corpus_id")
-            .where(
-                F.round(
-                    F.try_divide(
-                        F.col("n_common") * F.lit(1.0),
-                        F.col("n_b") + F.col("n_c") - F.col("n_common"),
-                    ),
-                    6,
-                )
-                >= 0.5
-            )
-            .select("batch_id", "corpus_id")
-        )
+        verified = D._verify_candidates(
+            cands, batch, corpus, "text", "doc_id", 3, 0.5
+        ).select("batch_id", "corpus_id")
         # bounded by the near-dup pair count; collected so the returned
         # (lazy) contract frame carries no reference to the temp index
         found_rows = verified.collect()
@@ -1059,32 +1006,7 @@ def _q_dedup_lsh_persist(spark, sf_dir):
         [(r["batch_id"], r["corpus_id"]) for r in found_rows] or [],
         "batch_id long, corpus_id long",
     )
-    bsh = D._doc_shingles(batch, "text", "doc_id", 3)
-    csh = D._doc_shingles(corpus, "text", "doc_id", 3)
-    bs = bsh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_b"))
-    cs = csh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_c"))
-    inter = (
-        bsh.select(F.col("doc").alias("batch_id"), "shingle")
-        .join(csh.select(F.col("doc").alias("corpus_id"), "shingle"), "shingle")
-        .groupBy("batch_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    exact = (
-        inter.join(bs.select(F.col("doc").alias("batch_id"), "n_b"), "batch_id")
-        .join(cs.select(F.col("doc").alias("corpus_id"), "n_c"), "corpus_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.try_divide(
-                    F.col("n_common") * F.lit(1.0),
-                    F.col("n_b") + F.col("n_c") - F.col("n_common"),
-                ),
-                6,
-            ),
-        )
-        .where(F.col("jaccard") >= 0.5)
-        .select("batch_id", "corpus_id", "jaccard")
-    )
+    exact = D.exact_jaccard_batch_pairs(batch, corpus, threshold=0.5)
     return _lsh_contract(
         exact, found, ["batch_id", "corpus_id"], "jaccard", 0.7
     )
@@ -3127,10 +3049,11 @@ def _q_mm_decode_features(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return MM.synth_decode_features(docs).select(
         "doc_id", "format", "width", "height", "duration_ms", "n_bytes",
-        # pixel-level stats (r5): real for the uncompressed raster
-        # formats (BMP/PPM), NULL for gif/wav — the oracle recomputes
-        # the per-channel means / min-max / luminance histogram from
-        # the same closed-form pixel values the generator writes.
+        # pixel-level stats (r5): real for the raster formats (BMP/PPM,
+        # and GIF through the LZW decoder), NULL for wav — the oracle
+        # recomputes the per-channel means / min-max / luminance
+        # histogram from the same closed-form pixel values the
+        # generator writes.
         "mean_r", "mean_g", "mean_b", "min_px", "max_px",
         "lum_b0", "lum_b1", "lum_b2", "lum_b3",
     )

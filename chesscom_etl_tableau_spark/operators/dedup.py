@@ -10,8 +10,12 @@ Scale design:
   md5 key; map-side combine collapses most groups before the exchange.
 - N-gram Jaccard: inverted-index self-join on shingles. The classic
   skew hazard is a stop-shingle shared by millions of docs; we drop
-  shingles with document-frequency above `max_shingle_df` (standard
-  practice, and AQE skew-join splits whatever remains).
+  shingles with document-frequency above `max_shingle_df` (`_rare`;
+  standard practice, and AQE skew-join splits whatever remains).
+- Every exact set-similarity pair set (self pairs, LSH-candidate
+  verify, batch-vs-corpus, tagged unions, per-source vocabularies) is
+  counted by one kernel, `_overlap`: shared-shingle count plus both set
+  sizes per pair, scored by `_ratio` (round-6 division).
 - MinHash-LSH: signature = h min-aggregates over the exploded shingles
   (one shuffle); banding -> candidate pairs via an equi-join on
   (band_id, band_hash) — this replaces the O(n^2) pair space with
@@ -77,6 +81,74 @@ def _doc_shingles(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFr
     )
 
 
+def _rare(sh: DataFrame, max_shingle_df: int | None) -> DataFrame:
+    """The document-frequency cap: keep (doc, shingle) rows whose shingle
+    occurs in at most `max_shingle_df` rows (None keeps all)."""
+    if max_shingle_df is None:
+        return sh
+    rare = (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .where(F.col("df") <= max_shingle_df)
+        .select("shingle")
+    )
+    return sh.join(rare, "shingle", "left_semi")
+
+
+def _overlap(
+    left: DataFrame,
+    right: DataFrame,
+    a: str,
+    b: str,
+    pairs: DataFrame | None = None,
+    where: "F.Column | None" = None,
+    keys: tuple[str, ...] = (),
+) -> DataFrame:
+    """The shingle-overlap kernel of every exact set-similarity pair set:
+    columns a, b, *keys, n_common, n_l, n_r from two (doc, shingle)
+    frames, n_common = shared rows of the pair, n_l / n_r = the two set
+    sizes. Column order is the joins' own; callers select their output.
+
+    Pairs come from ONE inverted join on `shingle` (filtered by
+    `where`), or, given a `pairs` frame of (a, b) candidates, from
+    joining each side's shingles onto the candidates — then only
+    candidate pairs are ever counted. `keys` are columns of `right`
+    that split its sets (a tagged union counts each tag separately).
+    Sizes are one groupBy per distinct side, renamed per role, so a
+    self-pair query (`left is right`) builds a single size aggregate.
+    """
+    lsh = left.select(F.col("doc").alias(a), "shingle")
+    rsh = right.select(F.col("doc").alias(b), "shingle", *keys)
+    if pairs is None:
+        joined = lsh.join(rsh, "shingle")
+    else:
+        joined = pairs.join(lsh, a).join(rsh, [b, "shingle"])
+    if where is not None:
+        joined = joined.where(where)
+    inter = joined.groupBy(a, b, *keys).agg(F.count(F.lit(1)).alias("n_common"))
+
+    def sizes(sh: DataFrame, ks: tuple[str, ...]) -> DataFrame:
+        return sh.groupBy("doc", *ks).agg(F.count(F.lit(1)).alias("n"))
+
+    sl = sizes(left, ())
+    sr = sl if right is left and not keys else sizes(right, keys)
+    return (
+        inter.join(sl.select(F.col("doc").alias(a), F.col("n").alias("n_l")), a)
+        .join(sr.select(F.col("doc").alias(b), *keys, F.col("n").alias("n_r")), [b, *keys])
+    )
+
+
+def _ratio(den: "F.Column") -> "F.Column":
+    """n_common / den rounded to 6 places — the score of every `_overlap`
+    frame (the DuckDB oracles round the same way)."""
+    return F.round(F.try_divide(F.col("n_common") * F.lit(1.0), den), 6)
+
+
+def _jaccard() -> "F.Column":
+    """|A∩B| / |A∪B| of an `_overlap` frame, |A∪B| = n_l + n_r - n_common."""
+    return _ratio(F.col("n_l") + F.col("n_r") - F.col("n_common"))
+
+
 def ngram_jaccard_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -96,41 +168,15 @@ def ngram_jaccard_pairs(
     unguarded join is the scale-killer; pass None for exact Jaccard
     over all shingles. The DuckDB oracles mirror the same cap.
     """
-    sh = _doc_shingles(docs, text_col, id_col, k)
-    if max_shingle_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") <= max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(rare, "shingle", "left_semi")
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, F.col("a.shingle") == F.col("b.shingle"))
-        .where(F.col("a.doc") < F.col("b.doc"))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_shingles").alias("n_b"))
+    sh = _rare(_doc_shingles(docs, text_col, id_col, k), max_shingle_df)
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.try_divide(
-                    F.col("n_common") * F.lit(1.0),
-                    F.col("n_a") + F.col("n_b") - F.col("n_common"),
-                ),
-                6,
-            ),
-        )
+        _overlap(sh, sh, "doc_a", "doc_b", where=F.col("doc_a") < F.col("doc_b"))
+        .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard")
+        .select(
+            "doc_a", "doc_b", "n_common",
+            F.col("n_l").alias("n_a"), F.col("n_r").alias("n_b"), "jaccard",
+        )
     )
 
 
@@ -154,40 +200,15 @@ def ngram_containment_pairs(
     `ngram_jaccard_pairs` — only the denominator changes, so the scale
     argument carries over unchanged.
     """
-    sh = _doc_shingles(docs, text_col, id_col, k)
-    if max_shingle_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") <= max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(rare, "shingle", "left_semi")
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_shingles"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, F.col("a.shingle") == F.col("b.shingle"))
-        .where(F.col("a.doc") < F.col("b.doc"))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc").alias("doc_a"), F.col("n_shingles").alias("n_a"))
-    sb = sizes.select(F.col("doc").alias("doc_b"), F.col("n_shingles").alias("n_b"))
+    sh = _rare(_doc_shingles(docs, text_col, id_col, k), max_shingle_df)
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "containment",
-            F.round(
-                F.try_divide(
-                    F.col("n_common") * F.lit(1.0), F.least(F.col("n_a"), F.col("n_b"))
-                ),
-                6,
-            ),
-        )
+        _overlap(sh, sh, "doc_a", "doc_b", where=F.col("doc_a") < F.col("doc_b"))
+        .withColumn("containment", _ratio(F.least(F.col("n_l"), F.col("n_r"))))
         .where(F.col("containment") >= threshold)
-        .select("doc_a", "doc_b", "n_common", "n_a", "n_b", "containment")
+        .select(
+            "doc_a", "doc_b", "n_common",
+            F.col("n_l").alias("n_a"), F.col("n_r").alias("n_b"), "containment",
+        )
     )
 
 
@@ -256,9 +277,15 @@ def minhash_lsh_candidates(
     """LSH banding: docs whose signature agrees on ALL rows of any band.
 
     Explode each signature into `bands` (band_id, band_key) rows, then
-    self-join per bucket. Pairs may match in multiple bands — distinct.
+    self-join per bucket.
     """
-    banded = _banded(signatures, bands)
+    return _bucket_pairs(_banded(signatures, bands))
+
+
+def _bucket_pairs(banded: DataFrame) -> DataFrame:
+    """(doc_a, doc_b), a < b, of docs sharing any (band_id, band_key)
+    bucket — one self-join per bucket; pairs may match in several bands,
+    hence the distinct."""
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -295,22 +322,9 @@ def minhash_dedup_pairs(
     sigs = minhash_signatures(docs, text_col, id_col, k, num_hashes)
     cands = minhash_lsh_candidates(sigs, bands)
     sh = _doc_shingles(docs, text_col, id_col, k)
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n"))
-    a_sh = sh.select(F.col("doc").alias("doc_a"), "shingle")
-    b_sh = sh.select(F.col("doc").alias("doc_b"), "shingle")
-    inter = (
-        cands.join(a_sh, "doc_a")
-        .join(b_sh, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     return (
-        inter.join(sizes.select(F.col("doc").alias("doc_a"), F.col("n").alias("n_a")), "doc_a")
-        .join(sizes.select(F.col("doc").alias("doc_b"), F.col("n").alias("n_b")), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.try_divide(F.col("n_common") * F.lit(1.0), F.col("n_a") + F.col("n_b") - F.col("n_common")), 6),
-        )
+        _overlap(sh, sh, "doc_a", "doc_b", pairs=cands)
+        .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
@@ -366,17 +380,7 @@ def simhash_candidates(sim: DataFrame, band_bits: int = 15, bands: int = 4) -> D
             )
         ).alias("band_id", "band_key"),
     )
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
+    return _bucket_pairs(banded)
 
 
 # ---------------------------------------------------------------------------
@@ -485,33 +489,34 @@ def incremental_near_dup_pairs(
     cands = (
         bb.join(ib, ["band_id", "band_key"]).select("batch_id", "corpus_id").distinct()
     )
+    return _verify_candidates(cands, batch, corpus, text_col, id_col, k, threshold)
 
+
+def _verify_candidates(
+    cands: DataFrame,
+    batch: DataFrame,
+    corpus: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    threshold: float,
+) -> DataFrame:
+    """Exact-Jaccard verify of (batch_id, corpus_id) candidates:
+    (batch_id, corpus_id, jaccard) with round-6 jaccard >= threshold.
+    `corpus` is semi-joined down to candidate ids before shingling, so
+    the cost scales with the candidate count, not the corpus size."""
     corpus_c = corpus.join(
         cands.select(F.col("corpus_id").alias(id_col)), id_col, "left_semi"
     )
-    bsh = _doc_shingles(batch, text_col, id_col, k)
-    csh = _doc_shingles(corpus_c, text_col, id_col, k)
-    b_sizes = bsh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_b"))
-    c_sizes = csh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_c"))
-    inter = (
-        cands.join(bsh.select(F.col("doc").alias("batch_id"), "shingle"), "batch_id")
-        .join(csh.select(F.col("doc").alias("corpus_id"), "shingle"), ["corpus_id", "shingle"])
-        .groupBy("batch_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     return (
-        inter.join(b_sizes.select(F.col("doc").alias("batch_id"), "n_b"), "batch_id")
-        .join(c_sizes.select(F.col("doc").alias("corpus_id"), "n_c"), "corpus_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.try_divide(
-                    F.col("n_common") * F.lit(1.0),
-                    F.col("n_b") + F.col("n_c") - F.col("n_common"),
-                ),
-                6,
-            ),
+        _overlap(
+            _doc_shingles(batch, text_col, id_col, k),
+            _doc_shingles(corpus_c, text_col, id_col, k),
+            "batch_id",
+            "corpus_id",
+            pairs=cands,
         )
+        .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
         .select("batch_id", "corpus_id", "jaccard")
     )
@@ -536,38 +541,16 @@ def source_overlap(
     before the self-join, so join input is bounded by vocabulary size,
     and with G groups each shingle contributes at most G(G-1)/2 pairs.
     """
-    toks = ensure_parallelism(docs).select(
-        F.col(group_col).alias("grp"),
-        word_tokens(F.col(text_col)).alias("__toks"),
-    )
-    from chesscom_etl_tableau_spark.operators.text import shingles_from_tokens
-
-    gsh = (
-        toks.where(F.size("__toks") > 0)
-        .select("grp", F.explode(shingles_from_tokens(F.col("__toks"), k)).alias("shingle"))
-        .distinct()
-    )
-    sizes = gsh.groupBy("grp").agg(F.count(F.lit(1)).alias("n"))
-    a, b = gsh.alias("a"), gsh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.grp") < F.col("b.grp")))
-        .groupBy(F.col("a.grp").alias("source_a"), F.col("b.grp").alias("source_b"))
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    return (
-        inter.join(sizes.select(F.col("grp").alias("source_a"), F.col("n").alias("n_a")), "source_a")
-        .join(sizes.select(F.col("grp").alias("source_b"), F.col("n").alias("n_b")), "source_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.try_divide(
-                    F.col("n_shared") * F.lit(1.0),
-                    F.col("n_a") + F.col("n_b") - F.col("n_shared"),
-                ),
-                6,
-            ),
-        )
-        .select("source_a", "source_b", "n_shared", "n_a", "n_b", "jaccard")
+    gsh = _doc_shingles(docs, text_col, group_col, k).distinct()
+    return _overlap(
+        gsh, gsh, "source_a", "source_b", where=F.col("source_a") < F.col("source_b")
+    ).select(
+        "source_a",
+        "source_b",
+        F.col("n_common").alias("n_shared"),
+        F.col("n_l").alias("n_a"),
+        F.col("n_r").alias("n_b"),
+        _jaccard().alias("jaccard"),
     )
 
 
@@ -1051,28 +1034,11 @@ def exact_jaccard_batch_pairs(
         if corpus_shingles is not None
         else _doc_shingles(corpus, text_col, id_col, k)
     )
-    bs = bsh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_b"))
-    cs = csh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_c"))
-    inter = (
-        bsh.select(F.col("doc").alias("batch_id"), "shingle")
-        .join(csh.select(F.col("doc").alias("corpus_id"), "shingle"), "shingle")
-        .where(F.col("batch_id") != F.col("corpus_id"))
-        .groupBy("batch_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     return (
-        inter.join(bs.select(F.col("doc").alias("batch_id"), "n_b"), "batch_id")
-        .join(cs.select(F.col("doc").alias("corpus_id"), "n_c"), "corpus_id")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.try_divide(
-                    F.col("n_common") * F.lit(1.0),
-                    F.col("n_b") + F.col("n_c") - F.col("n_common"),
-                ),
-                6,
-            ),
+        _overlap(
+            bsh, csh, "batch_id", "corpus_id", where=F.col("batch_id") != F.col("corpus_id")
         )
+        .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
         .select("batch_id", "corpus_id", "jaccard")
     )
@@ -1100,40 +1066,16 @@ def exact_jaccard_tagged_pairs(
 
     Output: (batch_id, corpus_id, jaccard, tag_col), self-pairs
     excluded exactly as in `exact_jaccard_batch_pairs`."""
-    sizes = other_shingles.groupBy("doc", tag_col).agg(
-        F.count(F.lit(1)).alias("n_o")
-    )
-    b_sizes = batch_shingles.groupBy("doc").agg(F.count(F.lit(1)).alias("n_b"))
-    inter = (
-        batch_shingles.select(F.col("doc").alias("batch_id"), "shingle")
-        .join(
-            other_shingles.select(
-                F.col("doc").alias("corpus_id"), "shingle", tag_col
-            ),
-            "shingle",
-        )
-        .where(F.col("batch_id") != F.col("corpus_id"))
-        .groupBy("batch_id", "corpus_id", tag_col)
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
     return (
-        inter.join(
-            b_sizes.select(F.col("doc").alias("batch_id"), "n_b"), "batch_id"
+        _overlap(
+            batch_shingles,
+            other_shingles,
+            "batch_id",
+            "corpus_id",
+            where=F.col("batch_id") != F.col("corpus_id"),
+            keys=(tag_col,),
         )
-        .join(
-            sizes.select(F.col("doc").alias("corpus_id"), tag_col, "n_o"),
-            ["corpus_id", tag_col],
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.try_divide(
-                    F.col("n_common") * F.lit(1.0),
-                    F.col("n_b") + F.col("n_o") - F.col("n_common"),
-                ),
-                6,
-            ),
-        )
+        .withColumn("jaccard", _jaccard())
         .where(F.col("jaccard") >= threshold)
         .select("batch_id", "corpus_id", "jaccard", tag_col)
     )

@@ -10,13 +10,20 @@ and a courtesy delay between requests (fetch_and_post.py:57-87,
   transport is injected (a callable url -> (status, body)), so tests
   run hermetically and production can plug urllib/requests.
 - `fetch_archive_lists` / `fetch_archives`: driver-side fetch for a
-  small user set -> `spark.createDataFrame` with the explicit nested
-  schema.
+  small user set.
 - `distributed_fetch_archives`: the scale path — archive URLs become a
   DataFrame and each *partition* fetches its URLs inside
   `mapInPandas` (Arrow-batched), so 1000 executors fetch in parallel
   while per-task rate limiting keeps any one host polite. Use
   `repartition(n)` on the URL list to set fetch parallelism.
+
+Both paths run one per-URL loop (`_fetch_records`) that emits
+(username, archive_url, games_json, error) records, and both parse
+them with one `parse_fetched`: `from_json` lands every game of an
+archive, with NULL in a field whose value does not fit the schema (a
+string `end_time` or rating), so one malformed game cannot fail the
+run — the reference likewise keeps a game whose `end_time` does not
+parse (fetch_and_post.py:119-129).
 
 Failure isolation (I7): a URL that exhausts retries yields an error
 record instead of failing the job; errors land in the status log and
@@ -136,27 +143,39 @@ def fetch_archive_lists(fetcher: RetryingFetcher, usernames: list[str]) -> Archi
     return out
 
 
+_FETCHED_SCHEMA = "username string, archive_url string, games_json string, error string"
+
+
+def _fetch_records(
+    fetcher: RetryingFetcher, user_archives
+) -> Iterator[tuple[str, str, str | None, str | None]]:
+    """The per-URL loop of both fetch paths: one (username, archive_url,
+    games_json, error) record per archive, exactly one of games_json /
+    error set; paced after every request, failed or not."""
+    for user, url in user_archives:
+        try:
+            payload = fetcher.fetch_json(url)
+            yield user, url, json.dumps(payload.get("games", [])), None
+        except FetchError as e:
+            yield user, url, None, str(e)
+        fetcher.paced()
+
+
 def fetch_archives(
     spark: SparkSession,
     fetcher: RetryingFetcher,
     user_archives: list[tuple[str, str]],
 ) -> tuple[DataFrame, list[tuple[str, str, str]]]:
-    """S2 driver-side: fetch each archive's games JSON -> nested DataFrame.
+    """S2 driver-side: fetch each archive's games JSON -> archives frame.
 
     Returns (archives_df, errors) where errors = (user, url, message).
     Suitable for small fetch sets; use `distributed_fetch_archives` for
     wide fan-out.
     """
-    rows, errors = [], []
-    for user, url in user_archives:
-        try:
-            payload = fetcher.fetch_json(url)
-            rows.append({"username": user, "archive_url": url, "games": payload.get("games", [])})
-        except FetchError as e:
-            errors.append((user, url, str(e)))
-        fetcher.paced()
-    df = spark.createDataFrame(rows, ARCHIVE_SCHEMA) if rows else spark.createDataFrame([], ARCHIVE_SCHEMA)
-    return df, errors
+    records = list(_fetch_records(fetcher, user_archives))
+    archives_df, _ = parse_fetched(spark.createDataFrame(records, _FETCHED_SCHEMA))
+    errors = [(user, url, err) for user, url, _, err in records if err is not None]
+    return archives_df, errors
 
 
 def distributed_fetch_archives(
@@ -176,34 +195,21 @@ def distributed_fetch_archives(
     """
     import pandas as pd
 
-    out_schema = "username string, archive_url string, games_json string, error string"
-
     def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         fetcher = RetryingFetcher(
             transport_factory(), max_retries=max_retries, backoff_s=backoff_s, delay_s=delay_s
         )
         for pdf in batches:
-            users, urls, bodies, errs = [], [], [], []
-            for user, url in zip(pdf["username"], pdf["archive_url"]):
-                try:
-                    payload = fetcher.fetch_json(url)
-                    bodies.append(json.dumps(payload.get("games", [])))
-                    errs.append(None)
-                except FetchError as e:
-                    bodies.append(None)
-                    errs.append(str(e))
-                users.append(user)
-                urls.append(url)
-                fetcher.paced()
-            yield pd.DataFrame(
-                {"username": users, "archive_url": urls, "games_json": bodies, "error": errs}
+            yield pd.DataFrame.from_records(
+                list(_fetch_records(fetcher, zip(pdf["username"], pdf["archive_url"]))),
+                columns=["username", "archive_url", "games_json", "error"],
             )
 
-    return url_df.mapInPandas(fetch_partition, schema=out_schema)
+    return url_df.mapInPandas(fetch_partition, schema=_FETCHED_SCHEMA)
 
 
 def parse_fetched(fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split distributed-fetch output into (archives_df, errors_df)."""
+    """Split fetch records (`_FETCHED_SCHEMA`) into (archives_df, errors_df)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import ArrayType
 

@@ -9,12 +9,13 @@ column names, and an order-insensitive value multiset. Use:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from chesscom_etl_tableau_spark.session import get_spark

@@ -271,3 +271,28 @@ class TestRunPipelineFaults:
             if r["stage"] == "error_fetch_archives"
         ]
         assert [(r["username"], r["http_status"]) for r in rows] == [("bob", "503")]
+
+    def test_malformed_game_fields_land_as_null(self, spark, tmp_path):
+        # One game with a string end_time, one with a string rating: the
+        # run lands every game, with NULL in the field that does not fit.
+        bad_time = _game(2)
+        bad_time["end_time"] = "n/a"
+        bad_rating = _game(3, 1704070800)
+        bad_rating["white"]["rating"] = "1500"
+        t = _scripted_transport(
+            {"alice": ["https://a/2024/01"]},
+            {"https://a/2024/01": [_game(1), bad_time, bad_rating]},
+        )
+        out = str(tmp_path / "out")
+        s = run_pipeline(spark, ["alice"], out, transport=t, delay_s=0.0)
+        assert s.appended_games == 3
+        assert s.errors == 0
+        rows = {r["game_url"]: r for r in spark.read.parquet(f"{out}/games").collect()}
+        assert set(rows) == {f"https://game/{i}" for i in (1, 2, 3)}
+        assert rows["https://game/2"]["end_time_utc"] is None
+        assert rows["https://game/2"]["white_rating"] == 1500
+        assert rows["https://game/3"]["white_rating"] is None
+        assert rows["https://game/3"]["black_rating"] == 1480
+        assert rows["https://game/3"]["end_time_utc"] is not None
+        state = json.loads((tmp_path / "out" / "state.json").read_text())
+        assert state["alice"]["last_end_time"] == 1704070800

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import math
+import re
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,6 +83,140 @@ class TestSimHash:
         assert sh[1] != sh[5]
         cands = {(r["doc_a"], r["doc_b"]) for r in D.simhash_candidates(D.simhash(docs)).collect()}
         assert {(1, 2), (1, 3), (2, 3)} <= cands
+
+
+# Edge inputs of the shingle-overlap family: NULL and empty text (no
+# shingles), docs shorter than k (one whole-doc shingle), and a doc
+# whose shingles repeat (sets, not bags).
+_EDGE_ROWS = [
+    (1, "a b c d e", "s1"),
+    (2, "a b c d e f", "s2"),
+    (3, "x y", "s1"),
+    (4, "X, y!", "s3"),
+    (5, "a b c a b c a b c", "s2"),
+    (6, "", "s3"),
+    (7, None, "s3"),
+    (8, "c d e f g", "s1"),
+]
+_EDGE_BATCH = {1, 3, 5, 6}
+
+
+def _shingle_set(text, k=3):
+    toks = re.findall(r"[a-z0-9]+", (text or "").lower())
+    if len(toks) < k:
+        return {" ".join(toks)} if toks else set()
+    return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+
+
+def _r6(n, d):
+    return float((Decimal(n) / Decimal(d)).quantize(Decimal("0.000001"), ROUND_HALF_UP))
+
+
+def _overlaps(left, right, keep):
+    """{(a, b): (n_common, n_a, n_b)} over pairs sharing a shingle."""
+    return {
+        (a, b): (len(sa & sb), len(sa), len(sb))
+        for a, sa in left.items()
+        for b, sb in right.items()
+        if keep(a, b) and sa & sb
+    }
+
+
+def _jac(c, na, nb):
+    return _r6(c, na + nb - c)
+
+
+class TestOverlapFamilyEdgeInputs:
+    """Every routed shingle-overlap function against plain-Python sets."""
+
+    @pytest.fixture(scope="class")
+    def edge(self, spark):
+        return spark.createDataFrame(_EDGE_ROWS, "doc_id bigint, text string, source string")
+
+    @staticmethod
+    def _sets(ids=None, cap=None):
+        sets = {i: _shingle_set(t) for i, t, _ in _EDGE_ROWS if ids is None or i in ids}
+        if cap is not None:
+            df = {}
+            for st in sets.values():
+                for s in st:
+                    df[s] = df.get(s, 0) + 1
+            sets = {i: {s for s in st if df[s] <= cap} for i, st in sets.items()}
+        return sets
+
+    @pytest.mark.parametrize("cap", [None, 2])
+    def test_containment(self, edge, cap):
+        got = D.ngram_containment_pairs(edge, k=3, threshold=0.0, max_shingle_df=cap)
+        assert got.columns == ["doc_a", "doc_b", "n_common", "n_a", "n_b", "containment"]
+        sets = self._sets(cap=cap)
+        want = {
+            (a, b, c, na, nb, _r6(c, min(na, nb)))
+            for (a, b), (c, na, nb) in _overlaps(sets, sets, lambda a, b: a < b).items()
+        }
+        assert {tuple(r) for r in got.collect()} == want
+        if cap is None:  # the short docs match each other; repeats count once
+            assert (3, 4, 1, 1, 1, 1.0) in want and (1, 5, 1, 3, 3, 0.333333) in want
+
+    def test_jaccard(self, edge):
+        got = D.ngram_jaccard_pairs(edge, k=3, threshold=0.0, max_shingle_df=None)
+        sets = self._sets()
+        want = {
+            (a, b, c, na, nb, _jac(c, na, nb))
+            for (a, b), (c, na, nb) in _overlaps(sets, sets, lambda a, b: a < b).items()
+        }
+        assert {tuple(r) for r in got.collect()} == want
+
+    def test_source_overlap(self, edge):
+        got = D.source_overlap(edge, k=3)
+        assert got.columns == ["source_a", "source_b", "n_shared", "n_a", "n_b", "jaccard"]
+        vocab = {}
+        for _, text, src in _EDGE_ROWS:
+            vocab.setdefault(src, set()).update(_shingle_set(text))
+        want = {
+            (a, b, c, na, nb, _jac(c, na, nb))
+            for (a, b), (c, na, nb) in _overlaps(vocab, vocab, lambda a, b: a < b).items()
+        }
+        assert {tuple(r) for r in got.collect()} == want
+
+    def test_batch_pairs_exclude_self(self, edge):
+        batch = edge.where(F.col("doc_id").isin(*_EDGE_BATCH))
+        got = D.exact_jaccard_batch_pairs(batch, edge, threshold=0.0)
+        want = {
+            (b, c, _jac(*v))
+            for (b, c), v in _overlaps(
+                self._sets(_EDGE_BATCH), self._sets(), lambda b, c: b != c
+            ).items()
+        }
+        assert (1, 1) not in {w[:2] for w in want}
+        assert {tuple(r) for r in got.collect()} == want
+
+    def test_tagged_pairs(self, edge):
+        batch = edge.where(F.col("doc_id").isin(*_EDGE_BATCH))
+        prior = edge.where(~F.col("doc_id").isin(*_EDGE_BATCH))
+        bsh = D._doc_shingles(batch, "text", "doc_id", 3)
+        other = bsh.withColumn("__c", F.lit(False)).unionByName(
+            D._doc_shingles(prior, "text", "doc_id", 3).withColumn("__c", F.lit(True))
+        )
+        got = D.exact_jaccard_tagged_pairs(bsh, other, threshold=0.0)
+        want = set()
+        for tag, ids in ((False, _EDGE_BATCH), (True, {i for i, _, _ in _EDGE_ROWS} - _EDGE_BATCH)):
+            pairs = _overlaps(self._sets(_EDGE_BATCH), self._sets(ids), lambda b, c: b != c)
+            want |= {(b, c, _jac(*v), tag) for (b, c), v in pairs.items()}
+        assert {tuple(r) for r in got.collect()} == want
+
+    def test_candidate_path(self, spark, edge):
+        batch = edge.where(F.col("doc_id").isin(*_EDGE_BATCH))
+        # (5, 8) share no shingle and doc 6 has none: both drop out
+        cand_ids = [(1, 2), (1, 8), (3, 4), (5, 8), (6, 1)]
+        cands = spark.createDataFrame(cand_ids, "batch_id bigint, corpus_id bigint")
+        got = D._verify_candidates(cands, batch, edge, "text", "doc_id", 3, 0.0)
+        allp = _overlaps(self._sets(), self._sets(), lambda a, b: a != b)
+        want = {(b, c, _jac(*allp[(b, c)])) for b, c in cand_ids if (b, c) in allp}
+        assert {tuple(r) for r in got.collect()} == want
+        assert {w[:2] for w in want} == {(1, 2), (1, 8), (3, 4)}
+        lsh = {tuple(r) for r in D.minhash_dedup_pairs(edge, threshold=0.0).collect()}
+        assert (3, 4, 1.0) in lsh  # identical sets share every band
+        assert all(j == _jac(*allp[(a, b)]) for a, b, j in lsh)
 
 
 @pytest.fixture(scope="module")
