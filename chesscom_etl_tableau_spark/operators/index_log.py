@@ -13,9 +13,11 @@ manifests use (`plans/genlog.py`) on top of the SAME hive layout:
       <part_col>=<v>/part-*.parquet          immutable data files
       _generations/gen-000000000012.json     per-partition LIVE file lists
 
-- Every maintenance commit (append / compact / refit) only ever ADDS
-  data files (``mode("append")`` — Spark part-file names are unique)
-  and then publishes generation N+1 listing the new live set. Nothing
+- Every maintenance commit (append / compact / refit / delete) only
+  ever ADDS data files — `_write_files`, the one clustered
+  ``mode("append")`` write, returns the files it added per partition
+  (Spark part-file names are unique) — and then publishes generation
+  N+1 listing the new live set. Nothing
   is deleted at commit time, so a reader that pinned generation N keeps
   a consistent, immutable view for as long as its files survive gc.
 - Readers resolve the newest generation (or pin one explicitly) and
@@ -53,9 +55,16 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chesscom_etl_tableau_spark.operators.similarity import (
+    _drifted_buckets,
+    _recenter,
+    _topk_over_scan,
+    ivf_bucket_residuals,
+)
 from chesscom_etl_tableau_spark.plans import genlog
 # re-exported: compact/refit/delete raise it on a lost race
 from chesscom_etl_tableau_spark.plans.genlog import GenerationConflict  # noqa: F401
+from chesscom_etl_tableau_spark.util import cluster_for_partitioned_write
 
 PROTOCOL = genlog.PROTOCOL
 
@@ -81,8 +90,10 @@ def index_log_doc(index_path: str, generation: int | None = None) -> dict:
 
 def _raw_listing(index_path: str, partition_col: str) -> dict[int, list[str]]:
     """Relative data-file paths per integer partition value, from the
-    directory itself (not the log). Non-integer partition dirs are
-    skipped (the `index_partition_files` rule)."""
+    directory itself (not the log) — the one hive-partition walk
+    (`similarity.index_partition_files` is a view over it). Non-integer
+    partition dirs (a null bucket's __HIVE_DEFAULT_PARTITION__, a string
+    partition column) are skipped, so they are never rewritten."""
     out: dict[int, list[str]] = {}
     prefix = f"{partition_col}="
     if not os.path.isdir(index_path):
@@ -102,6 +113,28 @@ def _raw_listing(index_path: str, partition_col: str) -> dict[int, list[str]]:
             if f.endswith(".parquet")
         )
     return out
+
+
+def _write_files(
+    df: DataFrame, index_path: str, partition_col: str
+) -> dict[int, list[str]]:
+    """Write `df` as an additive hive append (clustered by the partition
+    column, optimization r15, guide §6) and return the data files it
+    added, per partition value — the before/after listing diff. The
+    diff can also hold a concurrent append's files, not yet published:
+    listing them is harmless (a file listed twice is one live file),
+    deleting them is not, so a commit that loses its race leaves its
+    files to `index_log_gc`'s orphan horizon."""
+    before = _raw_listing(index_path, partition_col)
+    cluster_for_partitioned_write(df, partition_col).write.mode(
+        "append"
+    ).partitionBy(partition_col).parquet(index_path)
+    added = {}
+    for v, fs in _raw_listing(index_path, partition_col).items():
+        new = sorted(set(fs) - set(before.get(v, ())))
+        if new:
+            added[v] = new
+    return added
 
 
 def _doc(partition_col: str, partitions: dict[int, list[str]]) -> dict:
@@ -189,20 +222,7 @@ def index_log_append(
     accidentally lists a concurrent appender's files harmless (both
     docs listing a file is one live file). Returns the generation
     published."""
-    from chesscom_etl_tableau_spark.util import cluster_for_partitioned_write
-
-    before = _raw_listing(index_path, partition_col)
-    # clustered parallel write (optimization r15, guide §6) — see
-    # cluster_for_partitioned_write
-    cluster_for_partitioned_write(df, partition_col).write.mode(
-        "append"
-    ).partitionBy(partition_col).parquet(index_path)
-    after = _raw_listing(index_path, partition_col)
-    new_files = {
-        v: sorted(set(after.get(v, ())) - set(before.get(v, ())))
-        for v in after
-        if set(after.get(v, ())) - set(before.get(v, ()))
-    }
+    new_files = _write_files(df, index_path, partition_col)
 
     def attempt(gen: int, doc: dict, _):
         live = _live(doc)
@@ -242,22 +262,12 @@ def compact_index_log(
     )
     if not cand:
         return 0, gen
-    from chesscom_etl_tableau_spark.util import cluster_for_partitioned_write
-
     rows = index_log_read(spark, index_path, gen, cand).localCheckpoint()
-    before = _raw_listing(index_path, partition_col)
-    (
-        cluster_for_partitioned_write(rows, partition_col)
-        .write.mode("append")
-        .partitionBy(partition_col)
-        .parquet(index_path)
-    )
-    after = _raw_listing(index_path, partition_col)
+    added = _write_files(rows, index_path, partition_col)
     retired = 0
     for v in cand:
-        new = sorted(set(after.get(v, ())) - set(before.get(v, ())))
         retired += len(live[v])
-        live[v] = new
+        live[v] = added.get(v, [])
     new_gen = _publish(index_path, partition_col, live, gen)
     return retired, new_gen
 
@@ -283,20 +293,12 @@ def ivf_refit_drifted_log(
     doc), and a concurrent probe pinned at the pre-refit generation
     reads exactly the pre-refit index. Returns
     (updated_centroids, drifted_bucket_ids, generation_published)."""
-    from chesscom_etl_tableau_spark.operators.similarity import (
-        _drifted_buckets,
-        assign_buckets,
-        ivf_bucket_residuals,
-        micro_mean_centroids,
-    )
-
     gen, doc = index_log_current(index_path)
     if not gen:
         raise RuntimeError(f"{index_path}: not generation-logged (init first)")
     if doc.get("partition_col", "bucket") != "bucket":
-        # The IVF machinery below (assign_buckets / micro_mean_centroids /
-        # ivf_bucket_residuals) emits and reads a literal `bucket`
-        # column; a log under any other partition column would append
+        # The IVF machinery below (_recenter / ivf_bucket_residuals)
+        # emits and reads a literal `bucket` column; a log under any other partition column would append
         # into a bucket=... layout the before/after listing never sees,
         # silently dropping the drifted partitions (advice r14).
         raise ValueError(
@@ -318,37 +320,16 @@ def ivf_refit_drifted_log(
     )
     if not drifted:
         return centroids, [], gen
-    moving = (
-        index_log_read(spark, index_path, gen, drifted)
-        .select(id_col, vec_col)
-        .localCheckpoint()
+    reassigned, updated = _recenter(
+        index_log_read(spark, index_path, gen, drifted), centroids, drifted,
+        id_col, vec_col,
     )
-    refit = (
-        micro_mean_centroids(
-            index_log_read(spark, index_path, gen, drifted), vec_col
-        )
-        .select("centroid_id", vec_col)
-        .localCheckpoint()
-    )
-    reassigned = assign_buckets(moving, refit, id_col, vec_col)
     live = _live(doc)
-    partition_col = doc.get("partition_col", "bucket")
-    from chesscom_etl_tableau_spark.util import cluster_for_partitioned_write
-
-    before = _raw_listing(index_path, partition_col)
-    cluster_for_partitioned_write(reassigned, partition_col).write.mode(
-        "append"
-    ).partitionBy(partition_col).parquet(index_path)
-    after = _raw_listing(index_path, partition_col)
     for b in drifted:
         live[b] = []  # replaced wholesale below (possibly emptied)
-    for v in after:
-        new = sorted(set(after.get(v, ())) - set(before.get(v, ())))
-        if new:
-            live[v] = sorted(set(live.get(v, [])) | set(new)) if v not in drifted else new
-    new_gen = _publish(index_path, partition_col, live, gen)
-    frozen = centroids.where(~F.col("centroid_id").isin(drifted))
-    updated = frozen.select("centroid_id", vec_col).unionByName(refit)
+    for v, new in _write_files(reassigned, index_path, "bucket").items():
+        live[v] = sorted(set(live.get(v, [])) | set(new))
+    new_gen = _publish(index_path, "bucket", live, gen)
     return updated, sorted(drifted), new_gen
 
 
@@ -396,18 +377,9 @@ def index_log_delete_ids(
     keep = index_log_read(spark, index_path, gen, touched).join(
         F.broadcast(ids.select(id_col)), id_col, "left_anti"
     ).localCheckpoint()
-    from chesscom_etl_tableau_spark.util import cluster_for_partitioned_write
-
-    before = _raw_listing(index_path, partition_col)
-    (
-        cluster_for_partitioned_write(keep, partition_col)
-        .write.mode("append")
-        .partitionBy(partition_col)
-        .parquet(index_path)
-    )
-    after = _raw_listing(index_path, partition_col)
+    added = _write_files(keep, index_path, partition_col)
     for v in touched:
-        live[v] = sorted(set(after.get(v, ())) - set(before.get(v, ())))
+        live[v] = added.get(v, [])
     new_gen = _publish(index_path, partition_col, live, gen)
     return n_deleted, new_gen
 
@@ -504,10 +476,6 @@ def ivf_topk_generation(
     granular, finer than the directory pruning the raw probe relies
     on). A concurrent compact/refit publishing N+1 cannot change this
     result until gc reaps generation N's files."""
-    from chesscom_etl_tableau_spark.operators.similarity import (
-        _topk_over_scan,
-    )
-
     return _topk_over_scan(
         spark,
         lambda needed: index_log_read(spark, index_path, generation, needed),

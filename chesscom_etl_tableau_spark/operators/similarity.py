@@ -1,19 +1,29 @@
 """Similarity search over embedding columns (BASELINE.json north star).
 
-Two paths over `embeddings(vec_id, embedding: array<float>, label)`:
+Four top-k paths over `embeddings(vec_id, embedding: array<float>, label)`:
 
-- `cosine_topk`: brute-force exact top-k. The query set is small and
+- exact (`cosine_topk`, `hard_negatives`): the query set is small and
   broadcast; the corpus streams through one narrow stage computing the
   dot product with `aggregate(zip_with(...))` (JVM-side, no Python).
-  Ranking uses a per-query window over the (tiny) per-query candidate
-  space. Exact, and the right baseline for recall measurement.
+  Exact, and the baseline for recall measurement.
+- IVF (`ivf_topk`, `ivf_topk_persisted`): a deterministic centroid set
+  partitions the corpus into `nlist` buckets (argmax cosine, one
+  broadcast join); a query probes only its `nprobe` nearest buckets —
+  at 100 TB a ~nprobe/nlist fraction of the corpus, pruned by the
+  persisted `bucket` partition column.
+- PQ (`pq_topk`): ADC scoring of decoded product codes, then an exact
+  re-rank of k * refine_factor candidates.
+- IVF-PQ (`ivfpq_topk`, `ivfpq_topk_persisted`): IVF probing over
+  residual PQ codes, then the same exact re-rank.
 
-- `ivf_topk`: IVF-style approximate search. A deterministic set of
-  centroid vectors partitions the corpus into `nlist` buckets
-  (assignment = argmax cosine to centroid, one broadcast join); a query
-  probes only its `nprobe` nearest buckets. At 100 TB this turns a full
-  corpus scan per query into a ~nprobe/nlist fraction, and the bucket
-  assignment is precomputable/persistable as a partition column.
+Every path shares one search core (REPOSE's shape: a partition-pruned
+probe, then a local exact top-k): `_top_k` is the one per-group rank
+(score descending, id ascending), `_probes` routes each query to its
+`nprobe` buckets, `_pruned` turns that routing into a `bucket IN (...)`
+scan of a persisted index, `_ivf_score` / `_adc_topk` score a probed
+index and `_refine` is the exact stage 2. Index maintenance shares
+`_residuals` (vector minus its bucket centroid), `_recenter` (partial
+refit) and `_overwrite_partitions` (dynamic partition rewrite).
 
 All arithmetic is done in float64 after an explicit cast (float32
 accumulation drifts across engines; double accumulation left-to-right
@@ -136,6 +146,19 @@ def _dot_pairwise(a: Column, b: Column, unroll: bool) -> Column:
     return dot_u(a, b) if unroll else dot(a, b)
 
 
+def _top_k(
+    df: DataFrame, part: str, order, tie: str, k: int, rank: str = "rank"
+) -> DataFrame:
+    """The one per-group rank of every search here: rows of each `part`
+    group ordered by `order` (a column name or expression) descending,
+    ties by `tie` ascending, the first `k` kept with their 1-based
+    `rank`. Scores are 6-decimal-rounded before they get here, so the
+    order is engine-reproducible."""
+    order = F.col(order) if isinstance(order, str) else order
+    w = Window.partitionBy(part).orderBy(order.desc(), F.col(tie).asc())
+    return df.withColumn(rank, F.row_number().over(w)).where(F.col(rank) <= k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -172,11 +195,8 @@ def cosine_topk(
             6,
         ).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
+    return _top_k(scored, query_id_col, "cosine_sim", id_col, k).select(
+        query_id_col, id_col, "cosine_sim", "rank"
     )
 
 
@@ -230,13 +250,8 @@ def hard_negatives(
             ).alias("cosine_sim"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("anchor_id", id_col, "neg_label", "cosine_sim", "rank")
+    return _top_k(scored, "anchor_id", "cosine_sim", id_col, k).select(
+        "anchor_id", id_col, "neg_label", "cosine_sim", "rank"
     )
 
 
@@ -264,14 +279,9 @@ def assign_buckets(
     # stable across engines (raw float64 cosines can differ in the last
     # ulp between implementations), which makes IVF bucket assignment —
     # and therefore recall measurements — oracle-reproducible.
-    w = Window.partitionBy(id_col).orderBy(
-        F.round(F.col("__sim"), 6).desc(), F.col(centroid_id_col).asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(id_col, vec_col, F.col(centroid_id_col).alias("bucket"))
-    )
+    return _top_k(
+        scored, id_col, F.round(F.col("__sim"), 6), centroid_id_col, 1, "__rn"
+    ).select(id_col, vec_col, F.col(centroid_id_col).alias("bucket"))
 
 
 def embedding_cosine_pairs(
@@ -696,7 +706,24 @@ def _topk_over_scan(
     the probed buckets reach the plan — directory partition pruning for
     the raw index (`ivf_topk_persisted`), manifest-side file selection
     for a pinned generation (`index_log.ivf_topk_generation`). Probe
-    math is identical either way."""
+    math is identical either way, and identical to `ivf_topk`'s."""
+    probes = _probes(centroids, queries, nprobe, vec_col, query_id_col)
+    return _ivf_score(
+        _pruned(spark, probes, scan), k, id_col, vec_col, query_id_col
+    )
+
+
+def _probes(
+    centroids: DataFrame,
+    queries: DataFrame,
+    nprobe: int,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """Query -> bucket routing of every IVF and IVF-PQ probe: each
+    query's `nprobe` nearest centroids by 6-decimal-rounded cosine, ties
+    by centroid id. Rows (query_id, __qvec, bucket), |queries| x nprobe;
+    `bucket` keeps the centroid-id type."""
     cent = centroids.select(F.col("centroid_id"), F.col(vec_col).alias("__cvec"))
     q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
     qc = q.crossJoin(F.broadcast(cent)).select(
@@ -705,35 +732,36 @@ def _topk_over_scan(
         "centroid_id",
         cosine(F.col("__qvec"), F.col("__cvec")).alias("__sim"),
     )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("__sim"), 6).desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= nprobe)
-        .select(query_id_col, "__qvec", F.col("centroid_id").alias("bucket"))
-    )
-    probe_rows = probes.collect()  # tiny: |queries| x nprobe
-    needed = sorted({r["bucket"] for r in probe_rows})
+    return _top_k(
+        qc, query_id_col, F.round(F.col("__sim"), 6), "centroid_id", nprobe, "__rn"
+    ).select(query_id_col, "__qvec", F.col("centroid_id").alias("bucket"))
 
-    index = scan(needed)
-    probe_df = spark.createDataFrame(
-        [(r[query_id_col], r["__qvec"], r["bucket"]) for r in probe_rows],
-        f"{query_id_col} long, __qvec array<double>, bucket int",
+
+def _pruned(spark, probes: DataFrame, scan) -> DataFrame:
+    """A persisted index's probed rows joined to their queries. The
+    routing is collected driver-side (tiny: |queries| x nprobe) so that
+    `scan(needed_buckets)` can prune; it goes back into the plan as a
+    broadcast frame with the routing's own schema, so ids and centroid
+    ids of any integer width survive the round trip."""
+    rows = probes.collect()
+    index = scan(sorted({r["bucket"] for r in rows}))
+    return index.join(
+        F.broadcast(spark.createDataFrame(rows, probes.schema)), "bucket"
     )
-    scored = index.join(F.broadcast(probe_df), "bucket").where(
-        F.col(id_col) != F.col(query_id_col)
-    )
-    scored = scored.select(
+
+
+def _ivf_score(
+    probed: DataFrame, k: int, id_col: str, vec_col: str, query_id_col: str
+) -> DataFrame:
+    """Exact top-k over the rows an IVF probe reached (`probed`: index
+    rows joined to their queries' `__qvec`), self-matches dropped."""
+    scored = probed.where(F.col(id_col) != F.col(query_id_col)).select(
         query_id_col,
         id_col,
         F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("cosine_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
+    return _top_k(scored, query_id_col, "cosine_sim", id_col, k).select(
+        query_id_col, id_col, "cosine_sim", "rank"
     )
 
 
@@ -742,32 +770,18 @@ def index_partition_files(index_path: str, partition_col: str) -> dict:
     directory: {partition value -> sorted parquet file names}. A pure
     filesystem listing — no data read, no Spark job. Local-FS walk here
     (the fixture/bench scope); a cluster deployment swaps in the Hadoop
-    FileSystem listing, the interface is the same."""
-    import os
+    FileSystem listing, the interface is the same.
 
-    out: dict = {}
-    prefix = f"{partition_col}="
-    if not os.path.isdir(index_path):
-        return out
-    for d in sorted(os.listdir(index_path)):
-        if not d.startswith(prefix):
-            continue
-        pdir = os.path.join(index_path, d)
-        if not os.path.isdir(pdir):
-            continue
-        suffix = d[len(prefix):]
-        try:
-            key = int(suffix)
-        except ValueError:
-            # Non-integer partition value (a null bucket's
-            # __HIVE_DEFAULT_PARTITION__, or a string partition column):
-            # skip rather than abort the whole compaction/refit — these
-            # partitions are simply never compacted (advice r13).
-            continue
-        out[key] = sorted(
-            f for f in os.listdir(pdir) if f.endswith(".parquet")
-        )
-    return out
+    A view over `index_log._raw_listing`, the one hive-partition walk:
+    non-integer partition values (a null bucket's
+    __HIVE_DEFAULT_PARTITION__, a string partition column) are skipped,
+    so those partitions are simply never compacted or refit."""
+    from chesscom_etl_tableau_spark.operators.index_log import _raw_listing
+
+    return {
+        v: [os.path.basename(f) for f in fs]
+        for v, fs in _raw_listing(index_path, partition_col).items()
+    }
 
 
 def compact_partitioned_index(
@@ -817,18 +831,39 @@ def compact_partitioned_index(
         .where(F.col(partition_col).isin(cand))
         .localCheckpoint()
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            rows.repartition(len(cand), F.col(partition_col))
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(index_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    _overwrite_partitions(
+        spark, rows.repartition(len(cand), F.col(partition_col)), index_path,
+        partition_col,
+    )
     return retired
+
+
+def _overwrite_partitions(
+    spark, df: DataFrame, path: str, partition_col: str, emptied=()
+) -> None:
+    """Rewrite in place only the partitions `df` holds (dynamic partition
+    overwrite: each is swapped per partition by the commit protocol),
+    then drop the directory of every `emptied` value `df` no longer
+    holds — dynamic overwrite leaves partitions absent from the data
+    as they were. `df` must not read the files it replaces: pin it
+    first. Exclusive-writer contract (`compact_partitioned_index`)."""
+    import shutil
+
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(mode, "static")
+    spark.conf.set(mode, "dynamic")
+    try:
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    finally:
+        spark.conf.set(mode, prev)
+    if not emptied:
+        return
+    written = {int(r[0]) for r in df.select(partition_col).distinct().collect()}
+    for v in emptied:
+        if v not in written:
+            shutil.rmtree(
+                os.path.join(path, f"{partition_col}={v}"), ignore_errors=True
+            )
 
 
 def micro_mean_centroids(
@@ -938,8 +973,7 @@ def ivf_refit_drifted(
     directory is dropped explicitly (dynamic overwrite only replaces
     partitions present in the written data).
     """
-    import os
-    import shutil
+    from chesscom_etl_tableau_spark.util import cluster_for_partitioned_write
 
     current = spark.read.parquet(index_path)
     cur_resid = ivf_bucket_residuals(current, centroids, vec_col)
@@ -948,38 +982,45 @@ def ivf_refit_drifted(
     )
     if not drifted:
         return centroids, []
-    moving = (
-        current.where(F.col("bucket").isin(drifted))
-        .select(id_col, vec_col)
-        .localCheckpoint()
+    reassigned, updated = _recenter(
+        current.where(F.col("bucket").isin(drifted)), centroids, drifted,
+        id_col, vec_col,
     )
-    # localCheckpoint: both frames' lineage points at the very files the
-    # write below replaces — pin them before the overwrite
+    _overwrite_partitions(
+        spark,
+        cluster_for_partitioned_write(reassigned.localCheckpoint(), "bucket"),
+        index_path, "bucket", drifted,
+    )
+    return updated, drifted
+
+
+def _recenter(
+    members: DataFrame,
+    centroids: DataFrame,
+    drifted: list,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The partial refit of every drift-triggered refit (IVF, IVF-PQ and
+    the generation-logged one): one exact micro-integer Lloyd update
+    re-centers the drifted buckets over their current `members` (rows
+    with bucket, id and vector), ONLY those members are reassigned
+    among ONLY the refitted centroids, and every other bucket keeps its
+    frozen centroid. Members and refit centroids are pinned
+    (localCheckpoint): their lineage reads the index files the caller's
+    rewrite replaces. Returns (reassigned (id, vec, bucket), updated
+    centroids = frozen rows + refit rows, same ids)."""
+    members = members.select("bucket", id_col, vec_col).localCheckpoint()
     refit = (
-        micro_mean_centroids(current.where(F.col("bucket").isin(drifted)), vec_col)
+        micro_mean_centroids(members, vec_col)
         .select("centroid_id", vec_col)
         .localCheckpoint()
     )
-    reassigned = assign_buckets(moving, refit, id_col, vec_col).localCheckpoint()
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        from chesscom_etl_tableau_spark.util import cluster_for_partitioned_write
-
-        cluster_for_partitioned_write(reassigned, "bucket").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(index_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    written = {int(r["bucket"]) for r in reassigned.select("bucket").distinct().collect()}
-    for b in drifted:
-        if b not in written:
-            shutil.rmtree(
-                os.path.join(index_path, f"bucket={b}"), ignore_errors=True
-            )
+    reassigned = assign_buckets(
+        members.select(id_col, vec_col), refit, id_col, vec_col
+    )
     frozen = centroids.where(~F.col("centroid_id").isin(drifted))
-    updated = frozen.select("centroid_id", vec_col).unionByName(refit)
-    return updated, drifted
+    return reassigned, frozen.select("centroid_id", vec_col).unionByName(refit)
 
 
 def _dim_of(df: DataFrame, vec_col: str) -> int:
@@ -1098,33 +1139,10 @@ def ivf_topk(
     so each query reads ~nprobe/nlist of the data (partition pruning).
     """
     bucketed = assign_buckets(corpus, centroids, id_col, vec_col)
-    cent = centroids.select(F.col("centroid_id"), F.col(vec_col).alias("__cvec"))
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
-    qc = q.crossJoin(F.broadcast(cent)).select(
+    probes = _probes(centroids, queries, nprobe, vec_col, query_id_col)
+    return _ivf_score(
+        bucketed.join(F.broadcast(probes), "bucket"), k, id_col, vec_col,
         query_id_col,
-        "__qvec",
-        "centroid_id",
-        cosine(F.col("__qvec"), F.col("__cvec")).alias("__sim"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("__sim"), 6).desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= nprobe)
-        .select(query_id_col, "__qvec", F.col("centroid_id").alias("bucket"))
-    )
-    scored = bucketed.join(F.broadcast(probes), "bucket").where(F.col(id_col) != F.col(query_id_col))
-    scored = scored.select(
-        query_id_col,
-        id_col,
-        F.round(cosine(F.col(vec_col), F.col("__qvec")), 6).alias("cosine_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
     )
 
 
@@ -1371,37 +1389,106 @@ def pq_topk(
         id_col,
         F.round(cosine(F.col("__rvec"), F.col("__qvec")), 6).alias("approx_sim"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sim").desc(), F.col(id_col).asc()
-    )
     if not refine_factor:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .select(query_id_col, id_col, "approx_sim", "rank")
+        return _top_k(scored, query_id_col, "approx_sim", id_col, k).select(
+            query_id_col, id_col, "approx_sim", "rank"
         )
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k * refine_factor)
-        .select(query_id_col, id_col)
+    cand = _top_k(
+        scored, query_id_col, "approx_sim", id_col, k * refine_factor, "__rn"
+    ).select(query_id_col, id_col)
+    return _refine(
+        cand, corpus, queries, k, id_col, vec_col, query_id_col, "approx_sim"
     )
+
+
+def _refine(
+    cand: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+    sim: str = "cosine_sim",
+) -> DataFrame:
+    """Exact stage 2 of every two-stage search (PQ, IVF-PQ): join the
+    (query, id) candidates back to their float vectors — k * rf rows
+    per query, never a corpus scan — and re-rank by exact cosine,
+    reported as `sim`."""
+    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
     refined = (
-        cand.join(corpus.select(F.col(id_col), F.col(vec_col).alias("__cvec")), id_col)
+        cand.join(corpus.select(F.col(id_col), F.col(vec_col).alias("__fvec")), id_col)
         .join(F.broadcast(q), query_id_col)
         .select(
             query_id_col,
             id_col,
-            F.round(cosine(F.col("__cvec"), F.col("__qvec")), 6).alias("approx_sim"),
+            F.round(cosine(F.col("__fvec"), F.col("__qvec")), 6).alias(sim),
         )
     )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sim").desc(), F.col(id_col).asc()
+    return _top_k(refined, query_id_col, sim, id_col, k).select(
+        query_id_col, id_col, sim, "rank"
     )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "approx_sim", "rank")
+
+
+def _bucket_vecs(centroids: DataFrame, vec_col: str) -> DataFrame:
+    """Broadcast side of every residual and ADC join: each centroid
+    keyed as the bucket it defines, its vector cast to double."""
+    return F.broadcast(
+        centroids.select(
+            F.col("centroid_id").alias("bucket"),
+            _as_double(F.col(vec_col)).alias("__cvec"),
+        )
     )
+
+
+def _residuals(
+    assigned: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, bucket, __res): each assigned vector minus its bucket's
+    centroid — what IVF-PQ encodes, at build, append and refit alike."""
+    return assigned.join(_bucket_vecs(centroids, vec_col), "bucket").select(
+        id_col,
+        "bucket",
+        F.zip_with(
+            _as_double(F.col(vec_col)), F.col("__cvec"), lambda x, c: x - c
+        ).alias("__res"),
+    )
+
+
+def _adc_topk(
+    probed: DataFrame,
+    centroids: DataFrame,
+    codebooks: list[list[list[float]]],
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    refine_factor: int,
+    id_col: str,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """IVF-PQ search over a probed code table (`probed`: code rows
+    joined to their queries' `__qvec`). ADC stage: decode codes ->
+    residual, add the bucket centroid back, score against the probing
+    query; codebooks and centroids are both literal/broadcast planes,
+    so the only shuffle is the rank. The k * refine_factor best
+    candidates per query then go through `_refine`."""
+    approx_vec = F.zip_with(
+        pq_decode_expr(F.col("codes"), codebooks), F.col("__cvec"), lambda r, c: r + c
+    )
+    scored = (
+        probed.join(_bucket_vecs(centroids, vec_col), "bucket")
+        .where(F.col(id_col) != F.col(query_id_col))
+        .select(
+            query_id_col,
+            id_col,
+            F.round(cosine(approx_vec, F.col("__qvec")), 6).alias("approx_sim"),
+        )
+    )
+    cand = _top_k(
+        scored, query_id_col, "approx_sim", id_col, k * max(refine_factor, 1), "__rn"
+    ).select(query_id_col, id_col)
+    return _refine(cand, corpus, queries, k, id_col, vec_col, query_id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1453,21 +1540,8 @@ def ivfpq_build(
         corpus, nlist=nlist, seed=seed, id_col=id_col, vec_col=vec_col,
         max_iter=ivf_max_iter, train_cap=train_cap, corpus_rows=corpus_rows,
     )
-    bucketed = assign_buckets(corpus, cents, id_col, vec_col)
-    res = bucketed.join(
-        F.broadcast(
-            cents.select(
-                F.col("centroid_id").alias("bucket"),
-                _as_double(F.col(vec_col)).alias("__cvec"),
-            )
-        ),
-        "bucket",
-    ).select(
-        id_col,
-        "bucket",
-        F.zip_with(
-            _as_double(F.col(vec_col)), F.col("__cvec"), lambda x, c: x - c
-        ).alias("__res"),
+    res = _residuals(
+        assign_buckets(corpus, cents, id_col, vec_col), cents, id_col, vec_col
     )
     # The residual frame feeds the m codebook fits AND the encode pass;
     # left lazy, each consumer would recompute assign_buckets' shuffle.
@@ -1532,72 +1606,10 @@ def ivfpq_topk(
         vec_col=vec_col, dim=dim, train_cap=train_cap, corpus_rows=corpus_rows,
         ivf_max_iter=ivf_max_iter, pq_max_iter=pq_max_iter,
     )
-    cent = cents.select(
-        F.col("centroid_id"), _as_double(F.col(vec_col)).alias("__cvec")
-    )
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
-    qc = q.crossJoin(F.broadcast(cent)).select(
-        query_id_col,
-        "__qvec",
-        "centroid_id",
-        cosine(F.col("__qvec"), F.col("__cvec")).alias("__sim"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("__sim"), 6).desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= nprobe)
-        .select(query_id_col, "__qvec", F.col("centroid_id").alias("bucket"))
-    )
-    # ADC stage: decode codes -> residual, add the bucket centroid back,
-    # score against the probing query. Codebooks and centroids are both
-    # literal/broadcast planes — the only shuffle is the final rank.
-    approx_vec = F.zip_with(
-        pq_decode_expr(F.col("codes"), books), F.col("__cvec"), lambda r, c: r + c
-    )
-    scored = (
-        index.join(F.broadcast(probes), "bucket")
-        .join(
-            F.broadcast(
-                cents.select(
-                    F.col("centroid_id").alias("bucket"),
-                    _as_double(F.col(vec_col)).alias("__cvec"),
-                )
-            ),
-            "bucket",
-        )
-        .where(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine(approx_vec, F.col("__qvec")), 6).alias("approx_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sim").desc(), F.col(id_col).asc()
-    )
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k * max(refine_factor, 1))
-        .select(query_id_col, id_col)
-    )
-    refined = (
-        cand.join(corpus.select(F.col(id_col), F.col(vec_col).alias("__fvec")), id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine(F.col("__fvec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
+    probes = _probes(cents, queries, nprobe, vec_col, query_id_col)
+    return _adc_topk(
+        index.join(F.broadcast(probes), "bucket"), cents, books, corpus,
+        queries, k, refine_factor, id_col, vec_col, query_id_col,
     )
 
 
@@ -1665,18 +1677,9 @@ def ivfpq_append(
     sustained appended-error well above it says the frozen codebooks
     no longer fit the incoming residual distribution and a refit is
     due (the coarse-drift twin signal is ivf_append's)."""
-    cent = F.broadcast(
-        centroids.select(
-            F.col("centroid_id").alias("bucket"),
-            _as_double(F.col(vec_col)).alias("__cvec"),
-        )
-    )
-    res = assign_buckets(batch, centroids, id_col, vec_col).join(cent, "bucket").select(
-        id_col,
-        "bucket",
-        F.zip_with(
-            _as_double(F.col(vec_col)), F.col("__cvec"), lambda x, c: x - c
-        ).alias("__res"),
+    res = _residuals(
+        assign_buckets(batch, centroids, id_col, vec_col), centroids, id_col,
+        vec_col,
     )
     enc = pq_encode(res, codebooks, id_col=id_col, vec_col="__res", keep=("bucket", "__res"))
     err = F.aggregate(
@@ -1742,8 +1745,7 @@ def ivfpq_refit_drifted(
     drifted partitions (dynamic partition overwrite, emptied dirs
     dropped). Exclusive-writer contract as `compact_partitioned_index`.
     """
-    import os
-    import shutil
+    from chesscom_etl_tableau_spark.util import cluster_for_partitioned_write
 
     idx = spark.read.parquet(index_path).select(id_col, "bucket")
     vecs = corpus.select(id_col, vec_col)
@@ -1773,53 +1775,24 @@ def ivfpq_refit_drifted(
             "rewrite (would drop them from the index). Pass the corpus "
             "the index was encoded from."
         )
-    members = current.where(F.col("bucket").isin(drifted)).localCheckpoint()
-    refit = (
-        micro_mean_centroids(members, vec_col)
-        .select("centroid_id", vec_col)
-        .localCheckpoint()
+    reassigned, updated = _recenter(
+        current.where(F.col("bucket").isin(drifted)), centroids, drifted,
+        id_col, vec_col,
     )
-    reassigned = assign_buckets(
-        members.select(id_col, vec_col), refit, id_col, vec_col
-    )
-    cent = F.broadcast(
-        refit.select(
-            F.col("centroid_id").alias("bucket"),
-            _as_double(F.col(vec_col)).alias("__cvec"),
-        )
-    )
-    res = reassigned.join(cent, "bucket").select(
-        id_col,
-        "bucket",
-        F.zip_with(
-            _as_double(F.col(vec_col)), F.col("__cvec"), lambda x, c: x - c
-        ).alias("__res"),
-    )
+    # reassigned rows carry refit ids only, so joining them to `updated`
+    # picks exactly the refit centroids
     enc = (
-        pq_encode(res, codebooks, id_col=id_col, vec_col="__res", keep=("bucket",))
+        pq_encode(
+            _residuals(reassigned, updated, id_col, vec_col), codebooks,
+            id_col=id_col, vec_col="__res", keep=("bucket",),
+        )
         .select(id_col, "bucket", "codes")
         .localCheckpoint()
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        from chesscom_etl_tableau_spark.util import cluster_for_partitioned_write
-
-        cluster_for_partitioned_write(enc, "bucket").write.mode(
-            "overwrite"
-        ).partitionBy("bucket").parquet(index_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    written = {
-        int(r["bucket"]) for r in enc.select("bucket").distinct().collect()
-    }
-    for b in drifted:
-        if b not in written:
-            shutil.rmtree(
-                os.path.join(index_path, f"bucket={b}"), ignore_errors=True
-            )
-    frozen = centroids.where(~F.col("centroid_id").isin(drifted))
-    updated = frozen.select("centroid_id", vec_col).unionByName(refit)
+    _overwrite_partitions(
+        spark, cluster_for_partitioned_write(enc, "bucket"), index_path,
+        "bucket", drifted,
+    )
     return updated, drifted
 
 
@@ -1843,78 +1816,20 @@ def ivfpq_topk_persisted(
     predicate that lands in PartitionFilters (asserted in tests), ADC
     scores the reconstructed (centroid + decoded residual) vectors,
     and the k*refine_factor candidates re-rank by exact cosine against
-    the float corpus — candidates-only, never a corpus scan."""
-    cent = centroids.select(
-        F.col("centroid_id"), _as_double(F.col(vec_col)).alias("__cvec")
+    the float corpus — candidates-only, never a corpus scan. The IVF-PQ
+    twin of `ivf_topk_persisted`: the same routing and pruned scan,
+    then `ivfpq_topk`'s ADC and refine stages."""
+    probes = _probes(centroids, queries, nprobe, vec_col, query_id_col)
+    probed = _pruned(
+        spark,
+        probes,
+        lambda needed: spark.read.parquet(index_path).where(
+            F.col("bucket").isin(needed)
+        ),
     )
-    q = queries.select(F.col(query_id_col), F.col(vec_col).alias("__qvec"))
-    qc = q.crossJoin(F.broadcast(cent)).select(
-        query_id_col,
-        "__qvec",
-        "centroid_id",
-        cosine(F.col("__qvec"), F.col("__cvec")).alias("__sim"),
-    )
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.round(F.col("__sim"), 6).desc(), F.col("centroid_id").asc()
-    )
-    probes = (
-        qc.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= nprobe)
-        .select(query_id_col, "__qvec", F.col("centroid_id").alias("bucket"))
-    )
-    probe_rows = probes.collect()  # tiny: |queries| x nprobe
-    needed = sorted({r["bucket"] for r in probe_rows})
-
-    index = spark.read.parquet(index_path).where(F.col("bucket").isin(needed))
-    probe_df = spark.createDataFrame(
-        [(r[query_id_col], r["__qvec"], r["bucket"]) for r in probe_rows],
-        f"{query_id_col} long, __qvec array<double>, bucket int",
-    )
-    approx_vec = F.zip_with(
-        pq_decode_expr(F.col("codes"), codebooks), F.col("__cvec"), lambda r, c: r + c
-    )
-    scored = (
-        index.join(F.broadcast(probe_df), "bucket")
-        .join(
-            F.broadcast(
-                centroids.select(
-                    F.col("centroid_id").alias("bucket"),
-                    _as_double(F.col(vec_col)).alias("__cvec"),
-                )
-            ),
-            "bucket",
-        )
-        .where(F.col(id_col) != F.col(query_id_col))
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine(approx_vec, F.col("__qvec")), 6).alias("approx_sim"),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("approx_sim").desc(), F.col(id_col).asc()
-    )
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k * max(refine_factor, 1))
-        .select(query_id_col, id_col)
-    )
-    refined = (
-        cand.join(corpus.select(F.col(id_col), F.col(vec_col).alias("__fvec")), id_col)
-        .join(F.broadcast(q), query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            F.round(cosine(F.col("__fvec"), F.col("__qvec")), 6).alias("cosine_sim"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine_sim").desc(), F.col(id_col).asc()
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
-        .select(query_id_col, id_col, "cosine_sim", "rank")
+    return _adc_topk(
+        probed, centroids, codebooks, corpus, queries, k, refine_factor,
+        id_col, vec_col, query_id_col,
     )
 
 

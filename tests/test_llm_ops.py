@@ -413,6 +413,155 @@ class TestIvfPersisted:
         assert got == want
 
 
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+class TestAnnSearchCoreParity:
+    """Every IVF, PQ and IVF-PQ path against the exact scan, on a corpus
+    with exact duplicate vectors (5 = 9 = 13, 18 = 22 = 26): queries 5
+    and 18 each see two corpus rows at cosine 1.0, so the id tie-break
+    decides the rank."""
+
+    @pytest.fixture(scope="class")
+    def corpus(self, spark):
+        import random
+
+        rng = random.Random(29)
+        vecs = {}
+        for i in range(32):
+            src = {9: 5, 13: 5, 22: 18, 26: 18}.get(i)
+            vecs[i] = vecs[src] if src is not None else [
+                float(rng.gauss(i % 4, 0.4)) for _ in range(8)
+            ]
+        return spark.createDataFrame(
+            sorted(vecs.items()), "vec_id bigint, embedding array<float>"
+        )
+
+    @pytest.fixture(scope="class")
+    def queries(self, corpus):
+        return corpus.where(F.col("vec_id").isin(0, 3, 5, 18)).select(
+            F.col("vec_id").alias("query_id"), "embedding"
+        )
+
+    def test_full_probe_ivf_equals_exact(self, spark, tmp_path, corpus, queries):
+        from chesscom_etl_tableau_spark.operators import index_log as IL
+
+        exact = _rows(SIM.cosine_topk(corpus, queries, k=4))
+        assert sorted((r[3], r[1], r[2]) for r in exact if r[0] == 5)[:2] == [
+            (1, 9, 1.0), (2, 13, 1.0)
+        ]
+        cents = SIM.ivf_build_centroids(corpus, nlist=4, seed=5)
+        path = str(tmp_path / "ivf")
+        SIM.ivf_persist(corpus, cents, path)
+        assert _rows(SIM.ivf_topk(corpus, cents, queries, k=4, nprobe=4)) == exact
+        assert _rows(SIM.ivf_topk_persisted(
+            spark, path, cents, queries, k=4, nprobe=4
+        )) == exact
+        IL.index_log_init(path, "bucket")
+        assert _rows(IL.ivf_topk_generation(
+            spark, path, cents, queries, k=4, nprobe=4
+        )) == exact
+
+    def test_full_refine_pq_equals_exact(self, spark, tmp_path, corpus, queries):
+        # k * refine_factor = 32 >= corpus size: every row is refined
+        exact = _rows(SIM.cosine_topk(corpus, queries, k=4))
+        books = SIM.pq_train(corpus, m=4, k=8, seed=3, dim=8)
+        assert _rows(SIM.pq_topk(
+            corpus, books, queries, k=4, refine_factor=8
+        )) == exact
+        kw = dict(nlist=4, m=4, seed=3, dim=8, corpus_rows=32)
+        assert _rows(SIM.ivfpq_topk(
+            corpus, queries, k=4, nprobe=4, kcode=8, refine_factor=8, **kw
+        )) == exact
+        path = str(tmp_path / "ivfpq")
+        cents, books = SIM.ivfpq_persist(corpus, path, k=8, **kw)
+        assert _rows(SIM.ivfpq_topk_persisted(
+            spark, path, cents, books, corpus, queries, k=4, nprobe=4,
+            refine_factor=8,
+        )) == exact
+
+    def test_persisted_probe_with_wide_centroid_ids(
+        self, spark, tmp_path, corpus, queries
+    ):
+        # centroids drawn from corpus rows carry corpus ids, which may not
+        # fit an int: bucket = 3_000_000_000 + j
+        from chesscom_etl_tableau_spark.operators import index_log as IL
+
+        cents = SIM.ivf_build_centroids(corpus, nlist=4, seed=5).select(
+            (F.col("centroid_id") + F.lit(3_000_000_000)).alias("centroid_id"),
+            "embedding",
+        )
+        path = str(tmp_path / "ivf_wide")
+        SIM.ivf_persist(corpus, cents, path)
+        mem = _rows(SIM.ivf_topk(corpus, cents, queries, k=3, nprobe=2))
+        assert len(mem) == 12
+        assert _rows(SIM.ivf_topk_persisted(
+            spark, path, cents, queries, k=3, nprobe=2
+        )) == mem
+        IL.index_log_init(path, "bucket")
+        assert _rows(IL.ivf_topk_generation(
+            spark, path, cents, queries, k=3, nprobe=2
+        )) == mem
+
+
+class TestRefitTwins:
+    """`similarity.ivf_refit_drifted` (dynamic overwrite) and
+    `index_log.ivf_refit_drifted_log` (additive append + generation)
+    over two copies of one index, with one all-zero baseline."""
+
+    @pytest.mark.parametrize("case", ["clusters", "emptied_bucket"])
+    def test_raw_and_logged_refits_agree(self, spark, tmp_path, case):
+        from chesscom_etl_tableau_spark.operators import index_log as IL
+
+        if case == "clusters":
+            import random
+
+            rng = random.Random(7)
+            corpus = spark.createDataFrame(
+                [(i, [float(rng.gauss(i % 3, 0.5)) for _ in range(4)])
+                 for i in range(24)],
+                "vec_id bigint, embedding array<float>",
+            )
+            cents = SIM.ivf_build_centroids(corpus, nlist=3, seed=2)
+            assigned = SIM.assign_buckets(corpus, cents)
+        else:
+            # both buckets hold the same vector: both refit centroids
+            # coincide and every row moves to bucket 0
+            cents = spark.createDataFrame(
+                [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+                "centroid_id int, embedding array<double>",
+            )
+            assigned = spark.createDataFrame(
+                [(10, [0.7, 0.7], 0), (11, [0.7, 0.7], 1)],
+                "vec_id bigint, embedding array<double>, bucket int",
+            )
+        raw, logged = str(tmp_path / "raw"), str(tmp_path / "logged")
+        for path in (raw, logged):
+            assigned.write.partitionBy("bucket").parquet(path)
+        IL.index_log_init(logged, "bucket")
+        zero = spark.createDataFrame(
+            [], "bucket int, n_vectors long, mean_resid_micro long"
+        )
+
+        upd_raw, drifted_raw = SIM.ivf_refit_drifted(spark, raw, cents, zero)
+        upd_log, drifted_log, _ = IL.ivf_refit_drifted_log(
+            spark, logged, cents, zero
+        )
+        assert drifted_raw and drifted_raw == drifted_log
+        assert _rows(upd_raw) == _rows(upd_log)
+        assert _rows(spark.read.parquet(raw).select("vec_id", "bucket")) == _rows(
+            IL.index_log_read(spark, logged).select("vec_id", "bucket")
+        )
+        raw_buckets = {
+            v for v, fs in SIM.index_partition_files(raw, "bucket").items() if fs
+        }
+        log_buckets = {int(v) for v in IL.index_log_doc(logged)["partitions"]}
+        assert raw_buckets == log_buckets
+        if case == "emptied_bucket":
+            assert raw_buckets == {0}
+
+
 class TestIncrementalDedup:
     """Batch-vs-persisted-corpus dedup (the at-scale ingest pattern)."""
 
