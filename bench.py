@@ -3,14 +3,19 @@
 ONE JSON line: {"metric": ..., "value": headline_total_sec, "unit":
 "sec", "queries": {name: sec}, "sf": ...}.
 
-Default mode times EVERY registry query (r4 verdict ask #5): the 36
+Default mode times EVERY registry query in driver order: the 36
 headline queries with median-of-5 (comparable to BASELINE.md and every
 prior BENCH_r{N}.json — "value" stays the headline subtotal), the rest
 with median-of-3 — for eager pipelines each of the three runs rebuilds
-its own temp-dir pipeline (r13 verdict ask #1b: single-run eager rows
-drew bimodal slow modes that false-flagged the drift gate).
-`--headline` restores the old headline-only run. Per-family subtotals in "families" attribute a drift to the ingest
-path / dedup / ANN / text / visual slice without a profile run.
+its own temp-dir pipeline (single-run eager rows drew bimodal slow
+modes that false-flagged the drift gate). `--headline` runs only the
+headline queries, also in driver order.
+
+Headline membership, the scan_bound/cpu_bound group and the family of
+each query come from its registry record
+(chesscom_etl_tableau_spark/registry/). Per-family subtotals in
+"families" attribute a drift to the ingest path / dedup / ANN / text /
+streaming / visual slice without a profile run.
 
 Each lazy query is executed once as warm-up (JIT/codegen/page cache,
 not counted) then timed; the timed action is a full materialization
@@ -28,120 +33,17 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
+from chesscom_etl_tableau_spark.registry import QUERIES
+from chesscom_etl_tableau_spark.registry.record import HEADLINE_GROUPS
 from chesscom_etl_tableau_spark.session import get_spark
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "j3_star_join",
-    "j4_topn_semi",
-    "a8_count_by_key",
-    "a13_percentiles",
-    "w1_rolling_12d",
-    "w3_session_stats",
-    "f4_top5_by_measure",
-    "t1_flatten_nested",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_incremental_exact",
-    "corpus_source_overlap",
-    "dedup_minhash_lsh",
-    "dedup_embed_cosine",
-    "dedup_embed_lsh",
-    "ann_cosine_topk",
-    "mm_decode_features",
-    "text_token_stats",
-    "text_lang_id",
-    "text_bpe_tokens",
-    "j5_asof_join",
-    "j6_range_join",
-    "w5_cube",
-    "text_winnow",
-    "train_chunks",
-    "train_pack",
-    "text_tfidf_top5",
-    "text_bm25_topk",
-    "text_quality_filter",
-    "a15_funnel",
-    "a16_retention",
-    "w6_pivot",
-    "w7_sliding_windows",
-    "a17_zscore_anomalies",
-    "a18_approx_percentiles",
-]
+HEADLINE = [q.name for q in QUERIES if q.headline]
 
-# Regression attribution (round-3 verdict ask): a scan-bound query that
-# drifts implicates I/O / page cache; a CPU-bound one implicates codegen
-# or the Python worker pool. Group subtotals make a drift attributable
-# from BENCH_r{N}.json alone, without a profile run.
-GROUPS = {
-    # dominated by the parquet scan + one narrow shuffle
-    "scan_bound": [
-        "q1_pricing_summary",
-        "j3_star_join",
-        "j4_topn_semi",
-        "a8_count_by_key",
-        "a13_percentiles",
-        "w1_rolling_12d",
-        "w3_session_stats",
-        "f4_top5_by_measure",
-        "t1_flatten_nested",
-        "dedup_exact",
-        "dedup_incremental_exact",
-        "ann_cosine_topk",
-        "j5_asof_join",
-        "w5_cube",
-        "train_pack",
-        "text_token_stats",
-        "a15_funnel",
-        "a16_retention",
-        "w6_pivot",
-        "w7_sliding_windows",
-        "a17_zscore_anomalies",
-        "a18_approx_percentiles",
-    ],
-    # dominated by expression / HOF / hash CPU (shingles, signatures,
-    # winnowing, tf-idf) or the Arrow Python worker (mm decode)
-    "cpu_bound": [
-        "dedup_ngram_jaccard",
-        "dedup_minhash_lsh",
-        "dedup_embed_cosine",
-        "dedup_embed_lsh",
-        "corpus_source_overlap",
-        "mm_decode_features",
-        "text_lang_id",
-        "text_bpe_tokens",
-        "j6_range_join",
-        "text_winnow",
-        "train_chunks",
-        "text_tfidf_top5",
-        "text_bm25_topk",
-        "text_quality_filter",
-    ],
-}
+# Group subtotals make a drift attributable from BENCH_r{N}.json alone,
+# without a profile run (what each group implicates: registry.record.Query).
+GROUPS = {g: [q.name for q in QUERIES if q.headline == g] for g in HEADLINE_GROUPS}
 
-_FAMILIES = (
-    (re.compile(r"^(s\d|i\d)"), "ingest_surface"),
-    (re.compile(r"^t\d"), "transforms"),
-    (re.compile(r"^j\d"), "joins"),
-    (re.compile(r"^(a\d|w\d)"), "aggregates_windows"),
-    (re.compile(r"^f\d"), "filters_visuals"),
-    (re.compile(r"^q\d"), "pricing_scan"),
-    (re.compile(r"^(dedup|corpus)"), "dedup"),
-    (re.compile(r"^(ann|emb)"), "ann_embeddings"),
-    (re.compile(r"^text"), "text_analysis"),
-    (re.compile(r"^(train|pipeline)"), "training_pipeline"),
-    (re.compile(r"^mm"), "multimodal"),
-    (re.compile(r"^graph"), "graph"),
-)
-
-
-def _family(name: str) -> str:
-    if name.endswith("_sql_surface"):
-        return "sql_surface"
-    for pat, fam in _FAMILIES:
-        if pat.match(name):
-            return fam
-    return "other"
+FAMILY = {q.name: q.family for q in QUERIES}
 
 
 def _median_timing(spark, fn, sf_dir: str, repeats: int, eager: bool) -> float:
@@ -271,7 +173,7 @@ def main() -> None:
         out["full_total"] = round(sum(timings.values()), 3)
         fams: dict[str, float] = {}
         for q, t in timings.items():
-            fams[_family(q)] = round(fams.get(_family(q), 0.0) + t, 3)
+            fams[FAMILY[q]] = round(fams.get(FAMILY[q], 0.0) + t, 3)
         out["families"] = fams
     # The driver captures only the LAST 2000 chars of stdout and parses
     # the JSON it finds there (BENCH_r05 failed with "parsed": null

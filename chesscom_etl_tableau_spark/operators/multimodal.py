@@ -295,21 +295,15 @@ def gif_pixels(data: bytes):
         return None
 
 
-def _gif_pixel_stats(data: bytes):
-    """Palette-resolved pixel stats for GIF — vectorized numpy over the
-    decoded index stream (same columns/rounding as the BMP/PPM path)."""
+def _rgb_stats(r, g, b) -> tuple:
+    """Stats of int64 numpy channel arrays with the same columns and
+    rounding as the BMP/PPM path: per-channel mean (6-dec), global
+    min/max, and the 4-bin integer-luminance histogram."""
     import math
 
     import numpy as np
 
-    decoded = gif_pixels(data)
-    if decoded is None:
-        return _NO_PIXELS
-    w, h, palette, idx = decoded
-    pal = np.frombuffer(palette, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
-    ix = np.asarray(idx, dtype=np.int64)
-    r, g, b = pal[ix, 0], pal[ix, 1], pal[ix, 2]
-    n = w * h
+    n = r.size
     means = [
         math.floor(float(c.sum()) / n * 1000000.0 + 0.5) / 1000000.0
         for c in (r, g, b)
@@ -320,6 +314,20 @@ def _gif_pixel_stats(data: bytes):
     bins = np.minimum(lum // 64, 3)
     hist = [int((bins == i).sum()) for i in range(4)]
     return (*means, mn, mx, *hist)
+
+
+def _gif_pixel_stats(data: bytes):
+    """Palette-resolved pixel stats for GIF — vectorized numpy over the
+    decoded index stream."""
+    import numpy as np
+
+    decoded = gif_pixels(data)
+    if decoded is None:
+        return _NO_PIXELS
+    w, h, palette, idx = decoded
+    pal = np.frombuffer(palette, dtype=np.uint8).reshape(-1, 3).astype(np.int64)
+    ix = np.asarray(idx, dtype=np.int64)
+    return _rgb_stats(pal[ix, 0], pal[ix, 1], pal[ix, 2])
 
 
 def pixel_stats(data: bytes):
@@ -1182,9 +1190,12 @@ def codec_pixel_stats(
             "decode_features/pixel_stats."
         )
 
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(CODEC_STATS_SCHEMA)
+
     def gen(batches):
         import io
-        import math
 
         import numpy as np
         import pyarrow as pa
@@ -1203,43 +1214,13 @@ def codec_pixel_stats(
                             fmt = (im.format or "").lower() or None
                             w, h = im.size
                             arr = np.asarray(im.convert("RGB"), dtype=np.int64)
-                        r, g, b = arr[..., 0].ravel(), arr[..., 1].ravel(), arr[..., 2].ravel()
-                        n = r.size
-                        means = [
-                            math.floor(float(c.sum()) / n * 1000000.0 + 0.5) / 1000000.0
-                            for c in (r, g, b)
-                        ]
-                        mn = int(min(r.min(), g.min(), b.min()))
-                        mx = int(max(r.max(), g.max(), b.max()))
-                        lum = (299 * r + 587 * g + 114 * b) // 1000
-                        bins = np.minimum(lum // 64, 3)
-                        hist = [int((bins == i).sum()) for i in range(4)]
-                        stats = (*means, mn, mx, *hist)
+                        stats = _rgb_stats(*(arr[..., c].ravel() for c in range(3)))
                     except Exception:
                         stats = (None,) * 9
                 row = (int(doc_id), fmt, w, h, *stats)
                 for f, v in zip(CODEC_STATS_SCHEMA.fields, row):
                     out[f.name].append(v)
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema(
-                    [
-                        pa.field("doc_id", pa.int64(), False),
-                        pa.field("format", pa.string()),
-                        pa.field("width", pa.int32()),
-                        pa.field("height", pa.int32()),
-                        pa.field("mean_r", pa.float64()),
-                        pa.field("mean_g", pa.float64()),
-                        pa.field("mean_b", pa.float64()),
-                        pa.field("min_px", pa.int32()),
-                        pa.field("max_px", pa.int32()),
-                        pa.field("lum_b0", pa.int64()),
-                        pa.field("lum_b1", pa.int64()),
-                        pa.field("lum_b2", pa.int64()),
-                        pa.field("lum_b3", pa.int64()),
-                    ]
-                ),
-            )
+            yield pa.RecordBatch.from_pydict(out, schema=arrow_schema)
 
     from chesscom_etl_tableau_spark.util import ensure_parallelism
 

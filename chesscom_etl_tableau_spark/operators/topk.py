@@ -14,10 +14,7 @@ IN filter (Report/Layout visualContainers [7],[14]). The Spark shape:
      broadcasts it for the semi join — no extra shuffle of the fact.
 
 Scale note: the global `row_number` window moves only the aggregated
-keys (not fact rows) to one partition. For very-high-cardinality keys
-(e.g. 1e9 users) swap step 2 for an AQE-friendly two-level top-k:
-per-partition `limit n` then global merge — provided as `topk_keys`
-with `prefilter_partitions=True`.
+keys (not fact rows) to one partition.
 """
 
 from __future__ import annotations

@@ -778,10 +778,16 @@ def _next_manifest(
 
 def _stage(df: DataFrame, staging: list[str], d: str) -> list[str]:
     """Write `df` to staging dir `d`, registered for reaping first so a
-    failed write is reaped too. Returns the staged data files."""
+    failed write is reaped too. Returns the staged data files whose
+    footer has rows (Spark writes a file for partition 0 even when it
+    is empty); if every file is empty the first one stays, so a commit
+    never lists no file (`read_manifest_sink` reads [] as no sink)."""
+    import pyarrow.parquet as pq
+
     staging.append(d)
     df.write.parquet(d)
-    return data_files(d)
+    files = data_files(d)
+    return [f for f in files if pq.read_metadata(f).num_rows] or files[:1]
 
 
 def commit_append_manifest(
@@ -818,7 +824,7 @@ def commit_append_manifest(
     stage_dir = os.path.join(sink_path, "data", f"txn-{txn}")
     log = manifest_log(sink_path)
     with log.reaping([]) as staging:
-        _stage(new_rows, staging, stage_dir)
+        staged_files = _stage(new_rows, staging, stage_dir)
         staged = spark.read.parquet(stage_dir)
         n_staged = staged.count()
         if n_staged == 0:
@@ -842,7 +848,7 @@ def commit_append_manifest(
                 survivors, n_publish = staged, n_staged
             if n_publish == 0:
                 return None, 0
-            new_files = data_files(stage_dir)
+            new_files = staged_files
             if n_publish < n_staged:
                 # subset survived: stage the audited subset as new
                 # immutable files (old staged files stay invisible)
@@ -895,7 +901,7 @@ def commit_merge_manifest(
     stage_dir = os.path.join(sink_path, "data", f"txn-{txn}")
     log = manifest_log(sink_path)
     with log.reaping([]) as staging:
-        _stage(new_rows, staging, stage_dir)
+        staged_files = _stage(new_rows, staging, stage_dir)
         staged = spark.read.parquet(stage_dir)
         n_staged = staged.count()
         if n_staged == 0:
@@ -932,7 +938,7 @@ def commit_merge_manifest(
                         os.path.join(sink_path, "data", f"txn-{txn}-rw{gen}-{i}"),
                     )
             return _next_manifest(
-                spark, gen, doc, txn, carried, rewrite_files + data_files(stage_dir)
+                spark, gen, doc, txn, carried, rewrite_files + staged_files
             ), MergeResult(n_ins, n_upd)
 
         return log.commit(attempt, max_retries, "commit_merge_manifest")
@@ -1410,7 +1416,7 @@ def commit_tables(
             old_files = prior.get(name, {}).get("files", [])
             _assert_compatible_schema(spark, old_files, staged, f"commit_tables[{name}]")
             key = key_cols.get(name)
-            new_files = data_files(stage_dir)
+            new_files = staged_files[name]
             if key and old_files:
                 existing = spark.read.parquet(*old_files).select(key)
                 survivors = staged.join(existing, key, "left_anti")
@@ -1433,8 +1439,10 @@ def commit_tables(
         return manifest, published
 
     with log.reaping([]) as staging:
-        for name, df in tables.items():
-            _stage(df, staging, os.path.join(_data_dir(name), f"txn-{txn}"))
+        staged_files = {
+            name: _stage(df, staging, os.path.join(_data_dir(name), f"txn-{txn}"))
+            for name, df in tables.items()
+        }
         return log.commit(attempt, max_retries, "commit_tables")
 
 

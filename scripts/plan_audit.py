@@ -17,7 +17,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
-from bench import HEADLINE
+from chesscom_etl_tableau_spark.registry import QUERIES
 from chesscom_etl_tableau_spark.session import get_spark
 from chesscom_etl_tableau_spark.util import global_windows
 
@@ -43,7 +43,9 @@ def main() -> None:
     # --all audits every LAZY registry query (eager pipelines run temp-dir
     # ingest loops whose plans are the component plans already audited)
     names = (
-        [n for n in qs if n not in entry_mod.EAGER_QUERIES] if everything else list(HEADLINE)
+        [n for n in qs if n not in entry_mod.EAGER_QUERIES]
+        if everything
+        else [q.name for q in QUERIES if q.headline]
     )
     scope = "all lazy registry queries" if everything else "bench headline queries"
     print(f"# Physical-plan audit — {scope} ({sf_dir})\n")

@@ -147,6 +147,30 @@ class TestColumnStatsPruning:
         assert skipped, "one-day window must skip files outside it"
 
 
+class TestEmptyPartFiles:
+    """Spark writes a part file for partition 0 even when the partition
+    is empty; a commit must list only the files that hold rows."""
+
+    @staticmethod
+    def _half_empty(spark):
+        return spark.range(0, 10, 1, 2).where("id >= 5").select(
+            F.concat(F.lit("k"), F.col("id")).alias("game_url")
+        )
+
+    def test_append_lists_only_files_with_rows(self, spark, tmp_path, no_rename):
+        sink = str(tmp_path / "msink")
+        assert commit_append_manifest(self._half_empty(spark), sink) == 5
+        _, doc = _current_manifest_doc(sink)
+        assert len(doc["files"]) == 1
+        assert read_manifest_sink(spark, sink).count() == 5
+
+    def test_merge_lists_only_files_with_rows(self, spark, tmp_path, no_rename):
+        sink = str(tmp_path / "msink")
+        assert commit_merge_manifest(self._half_empty(spark), sink) == (5, 0)
+        _, doc = _current_manifest_doc(sink)
+        assert len(doc["files"]) == 1
+
+
 class TestDeleteVectors:
     pytestmark = pytest.mark.slow  # heavy suite, default-profile excluded (r16)
     def _seed(self, spark, sink, n=300):

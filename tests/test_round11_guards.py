@@ -16,8 +16,10 @@ from pyspark.sql import functions as F
 from chesscom_etl_tableau_spark.operators.multimodal import (
     CODEC_STATS_SCHEMA,
     MissingCodecError,
+    _rgb_stats,
     codec_available,
     codec_pixel_stats,
+    pixel_stats,
 )
 
 needs_codec = pytest.mark.skipif(
@@ -48,6 +50,30 @@ class TestCodecGate:
             "mean_r", "mean_g", "mean_b", "min_px", "max_px",
             "lum_b0", "lum_b1", "lum_b2", "lum_b3",
         ]
+
+
+    def test_arrow_batch_schema_is_the_spark_schema(self):
+        # the worker's batches are built with to_arrow_schema of the
+        # Spark schema: pin it to the 13 fields, non-nullable doc_id
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        assert to_arrow_schema(CODEC_STATS_SCHEMA) == pa.schema(
+            [pa.field("doc_id", pa.int64(), False), pa.field("format", pa.string())]
+            + [pa.field(n, pa.int32()) for n in ("width", "height")]
+            + [pa.field(n, pa.float64()) for n in ("mean_r", "mean_g", "mean_b")]
+            + [pa.field(n, pa.int32()) for n in ("min_px", "max_px")]
+            + [pa.field(f"lum_b{i}", pa.int64()) for i in range(4)]
+        )
+
+    def test_rgb_stats_match_the_pure_python_raster_path(self):
+        import numpy as np
+
+        w, h = 7, 5
+        px = np.random.default_rng(7).integers(0, 256, (h, w, 3), dtype=np.uint8)
+        ppm = f"P6\n{w} {h}\n255\n".encode() + px.tobytes()
+        arr = px.astype(np.int64)
+        assert _rgb_stats(*(arr[..., c].ravel() for c in range(3))) == pixel_stats(ppm)
 
 
 @needs_codec

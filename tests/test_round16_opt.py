@@ -192,10 +192,10 @@ class TestTaggedJaccardEquivalence:
 
 class TestMultisetMismatchGuard:
     def test_reserved_column_raises_value_error(self, spark):
-        import __spark_entry__ as E
+        from chesscom_etl_tableau_spark.registry.common import _multiset_mismatch
 
         a = spark.createDataFrame([(1, 2)], "x long, __side long")
         with pytest.raises(ValueError, match="reserved column"):
-            E._multiset_mismatch(a, a)
+            _multiset_mismatch(a, a)
         b = spark.createDataFrame([(1,), (1,), (2,)], "x long")
-        assert E._multiset_mismatch(b, b.limit(1)) == 2
+        assert _multiset_mismatch(b, b.limit(1)) == 2

@@ -617,7 +617,7 @@ class TestAttribution:
                 df.write.parquet(os.path.join(out, f"{name}.parquet"))
             got = {
                 r["credit"]: (r["n_conversions"], r["n_users"])
-                for r in M._q_a22_attribution(spark, out).collect()
+                for r in M.queries()["a22_attribution"](spark, out).collect()
             }
         finally:
             shutil.rmtree(out, ignore_errors=True)

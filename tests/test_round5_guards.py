@@ -325,7 +325,7 @@ class TestNtileDeciles:
     def test_band_structure(self, spark):
         import __spark_entry__ as E
 
-        rows = {r["decile"]: r for r in E._q_w8_ntile_deciles(spark, SF_DIR).collect()}
+        rows = {r["decile"]: r for r in E.queries()["w8_ntile_deciles"](spark, SF_DIR).collect()}
         assert set(rows) == set(range(1, 11))
         counts = [rows[d]["n_customers"] for d in range(1, 11)]
         assert max(counts) - min(counts) <= 1  # NTILE balance guarantee
@@ -349,15 +349,15 @@ class TestSqlSurface:
     def test_a1_twin_identical_optimized_plan(self, spark):
         import __spark_entry__ as E
 
-        a = self._canon(E._q_a1_card_measures(spark, SF_DIR))
-        b = self._canon(E._q_a1_sql_surface(spark, SF_DIR))
+        a = self._canon(E.queries()["a1_card_measures"](spark, SF_DIR))
+        b = self._canon(E.queries()["a1_sql_surface"](spark, SF_DIR))
         assert a == b
 
     def test_q1_twin_identical_optimized_plan(self, spark):
         import __spark_entry__ as E
 
-        a = self._canon(E._q_q1_pricing_summary(spark, SF_DIR))
-        b = self._canon(E._q_q1_sql_surface(spark, SF_DIR))
+        a = self._canon(E.queries()["q1_pricing_summary"](spark, SF_DIR))
+        b = self._canon(E.queries()["q1_sql_surface"](spark, SF_DIR))
         assert a == b
 
     def test_j4_twin_same_physical_strategy(self, spark):
@@ -366,7 +366,7 @@ class TestSqlSurface:
         # must run a broadcast semi join, neither a sort-merge join.
         import __spark_entry__ as E
 
-        for df in (E._q_j4_topn_semi(spark, SF_DIR), E._q_j4_sql_surface(spark, SF_DIR)):
+        for df in (E.queries()["j4_topn_semi"](spark, SF_DIR), E.queries()["j4_sql_surface"](spark, SF_DIR)):
             phys = self._physical(df)
             assert "BroadcastHashJoin" in phys and "LeftSemi" in phys
             assert "SortMergeJoin" not in phys
@@ -374,14 +374,14 @@ class TestSqlSurface:
     def test_q6_twin_identical_optimized_plan(self, spark):
         import __spark_entry__ as E
 
-        a = self._canon(E._q_q6_forecast_revenue(spark, SF_DIR))
-        b = self._canon(E._q_q6_sql_surface(spark, SF_DIR))
+        a = self._canon(E.queries()["q6_forecast_revenue"](spark, SF_DIR))
+        b = self._canon(E.queries()["q6_sql_surface"](spark, SF_DIR))
         assert a == b
 
     def test_j3_twin_same_physical_strategy(self, spark):
         import __spark_entry__ as E
 
-        for df in (E._q_j3_star_join(spark, SF_DIR), E._q_j3_sql_surface(spark, SF_DIR)):
+        for df in (E.queries()["j3_star_join"](spark, SF_DIR), E.queries()["j3_sql_surface"](spark, SF_DIR)):
             phys = self._physical(df)
             assert phys.count("BroadcastHashJoin") == 3
             assert "SortMergeJoin" not in phys
@@ -702,7 +702,7 @@ class TestIntervalOverlapJoin:
     def test_no_cartesian_or_bnl_in_plan(self, spark):
         import __spark_entry__ as E
 
-        plan = E._q_j7_overlap_join(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        plan = E.queries()["j7_overlap_join"](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
@@ -752,7 +752,7 @@ class TestCurriculumOrder:
         # over the cells table whose output is then broadcast).
         import __spark_entry__ as E
 
-        plan = E._q_train_curriculum(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        plan = E.queries()["train_curriculum"](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastExchange" in plan  # offsets come back via broadcast
 
 
@@ -760,7 +760,7 @@ class TestGroupingSets:
     def test_gid_semantics(self, spark):
         import __spark_entry__ as E
 
-        rows = E._q_w9_grouping_sets(spark, SF_DIR).collect()
+        rows = E.queries()["w9_grouping_sets"](spark, SF_DIR).collect()
         gids = {r.gid for r in rows}
         assert gids == {0, 1, 3}
         for r in rows:
@@ -972,7 +972,7 @@ class TestHeavyHitters:
 
         got = {
             (r.token, r.support)
-            for r in E._q_a19_heavy_hitters(spark, SF_DIR).collect()
+            for r in E.queries()["a19_heavy_hitters"](spark, SF_DIR).collect()
         }
         toks = (
             load_table(spark, SF_DIR, "documents")
@@ -1587,7 +1587,7 @@ class TestHllUnionRollup:
     def test_estimate_within_bound_and_merge_path(self, spark):
         import __spark_entry__ as E
 
-        rows = E._q_a20_hll_union_rollup(spark, SF_DIR).collect()
+        rows = E.queries()["a20_hll_union_rollup"](spark, SF_DIR).collect()
         assert rows and all(r.union_within_bound for r in rows)
 
     def test_union_bounded_under_any_slicing(self, spark):
