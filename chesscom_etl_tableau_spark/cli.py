@@ -12,7 +12,8 @@ Flow (reference step -> here):
   5. fetch new archives with retry/backoff (S1-S3)
   6. declarative ingest: explode/flatten/dedup/append + audit + state
      (plans/ingest.py)
-  7. status log rows per stage, best-effort (S7/I7)
+  7. status log rows per stage, best-effort (S7/I7), buffered and
+     written once when the run ends, failed or not
 
 Run: `python -m chesscom_etl_tableau_spark "user1,user2" /out/dir`
 """
@@ -87,60 +88,61 @@ def run_pipeline(
     status_path = os.path.join(out_dir, "status")
     state_path = os.path.join(out_dir, "state.json")
 
-    log = StatusLogger(spark, status_path)
     fetcher = RetryingFetcher(transport or urllib_transport(), delay_s=delay_s)
 
-    state = load_state(state_path)
-    if reprocess_last:
-        state = unmark_last_archive(state)
-    processed = {
-        (user, url)
-        for user, entry in state.items()
-        for url in entry.get("processed_archives", [])
-    }
+    # One status write per run, in the block's exit: a failed run still logs.
+    with StatusLogger(spark, status_path) as log:
+        state = load_state(state_path)
+        if reprocess_last:
+            state = unmark_last_archive(state)
+        processed = {
+            (user, url)
+            for user, entry in state.items()
+            for url in entry.get("processed_archives", [])
+        }
 
-    pairs = fetch_archive_lists(fetcher, usernames)
-    for user, status in pairs.failed:
-        log.log(
-            "error_fetch_archives",
-            username=user,
-            http_status=None if status is None else str(status),
+        pairs = fetch_archive_lists(fetcher, usernames)
+        for user, status in pairs.failed:
+            log.log(
+                "error_fetch_archives",
+                username=user,
+                http_status=None if status is None else str(status),
+            )
+        fresh = [(u, a) for u, a in pairs if (u, a) not in processed]
+
+        if distributed:
+            factory = transport_factory or (lambda: urllib_transport())
+            url_df = (
+                spark.createDataFrame(fresh, "username string, archive_url string")
+                .repartition(fetch_partitions)
+                if fresh
+                else spark.createDataFrame([], "username string, archive_url string")
+            )
+            fetched = distributed_fetch_archives(url_df, factory, delay_s=delay_s)
+            archives_df, errors_df = parse_fetched(fetched)
+            errors = [
+                (r["username"], r["archive_url"], r["error"]) for r in errors_df.collect()
+            ]
+        else:
+            archives_df, errors = fetch_archives(spark, fetcher, fresh)
+        for user, url, msg in errors:
+            log.log("error_archive_download", username=user, message=f"{url}: {msg}")
+
+        result = ingest_archives(
+            spark,
+            archives_df,
+            sink_path=sink,
+            audit_path=audit,
+            state_path=state_path,
+            # The fetch list is already state-pruned; ingest re-prunes
+            # idempotently from the state file it owns.
+            reprocess_last=reprocess_last,
+            commit_protocol=commit_protocol,
         )
-    fresh = [(u, a) for u, a in pairs if (u, a) not in processed]
-
-    if distributed:
-        factory = transport_factory or (lambda: urllib_transport())
-        url_df = (
-            spark.createDataFrame(fresh, "username string, archive_url string")
-            .repartition(fetch_partitions)
-            if fresh
-            else spark.createDataFrame([], "username string, archive_url string")
-        )
-        fetched = distributed_fetch_archives(url_df, factory, delay_s=delay_s)
-        archives_df, errors_df = parse_fetched(fetched)
-        errors = [
-            (r["username"], r["archive_url"], r["error"]) for r in errors_df.collect()
-        ]
-    else:
-        archives_df, errors = fetch_archives(spark, fetcher, fresh)
-    for user, url, msg in errors:
-        log.log("error_archive_download", username=user, message=f"{url}: {msg}")
-
-    result = ingest_archives(
-        spark,
-        archives_df,
-        sink_path=sink,
-        audit_path=audit,
-        state_path=state_path,
-        # The fetch list is already state-pruned; ingest re-prunes
-        # idempotently from the state file it owns.
-        reprocess_last=reprocess_last,
-        commit_protocol=commit_protocol,
-    )
-    if result.appended_games:
-        log.log("games_appended", message=str(result.appended_games))
-    else:
-        log.log("no_new_unique_games")
+        if result.appended_games:
+            log.log("games_appended", message=str(result.appended_games))
+        else:
+            log.log("no_new_unique_games")
 
     return RunSummary(
         usernames=usernames,

@@ -68,14 +68,11 @@ def record_linkage(
     set, not a ranking.
     """
     weights = linkage_weights({f: params[f] for f in compare_cols})
-    l = left.select(
-        F.col(id_col).alias("id_l"),
-        *[F.col(c).alias(f"__l_{c}") for c in {*block_cols, *compare_cols}],
-    )
-    r = right.select(
-        F.col(id_col).alias("id_r"),
-        *[F.col(c).alias(f"__r_{c}") for c in {*block_cols, *compare_cols}],
-    )
+    # first-seen order, not set order: the projection (and so the plan)
+    # must not depend on the process's string-hash seed
+    cols = list(dict.fromkeys([*block_cols, *compare_cols]))
+    l = left.select(F.col(id_col).alias("id_l"), *[F.col(c).alias(f"__l_{c}") for c in cols])
+    r = right.select(F.col(id_col).alias("id_r"), *[F.col(c).alias(f"__r_{c}") for c in cols])
     cond = [l[f"__l_{c}"] == r[f"__r_{c}"] for c in block_cols]
     pairs = l.join(r, cond, "inner")
 

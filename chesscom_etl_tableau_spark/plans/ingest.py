@@ -29,19 +29,26 @@ Scale notes:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
+import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 from typing import NamedTuple
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from chesscom_etl_tableau_spark.plans import genlog
 from chesscom_etl_tableau_spark.plans.genlog import data_files, manifest_log, warehouse_log
 from chesscom_etl_tableau_spark.schemas import GAMES_SCHEMA, PROCESSED_ARCHIVES_SCHEMA, enforce_schema
 from chesscom_etl_tableau_spark.sources.archives import flatten_archives
+from chesscom_etl_tableau_spark.util import _append_rows
 
 
 @dataclass
@@ -121,8 +128,9 @@ def dedup_against_sink(
     fetch_and_post.py:352-370) — which also makes a batch run over N
     archives produce exactly what N incremental runs would.
 
-    Pass `existing` to dedup against a non-directory sink (e.g. a
-    manifest sink snapshot from `read_manifest_sink`).
+    Pass `existing` to dedup against a given snapshot of the sink's
+    keys (`ingest_archives` passes the one it records, for either
+    commit protocol).
     """
     spark = flat.sparkSession
     in_batch = first_seen_wins(
@@ -159,11 +167,16 @@ def commit_append(
 
     Protocol:
       1. STAGE   — write `new_rows` to a private staging dir (no lock
-                   held during the expensive write);
+                   held during the expensive write); the staged row
+                   count comes from the files' parquet footers;
       2. LOCK    — take the sink's commit lock via atomic `mkdir`;
-      3. AUDIT   — re-run the key anti-join of the STAGED rows against
-                   the sink as it exists NOW (it may have grown since
-                   the caller's snapshot dedup);
+      3. AUDIT   — anti-join the STAGED keys against the sink files the
+                   caller's dedup did not read. This public entry has
+                   no dedup snapshot, so it audits every sink file;
+                   `ingest_archives` audits only the files published
+                   since its dedup listed the sink, and runs no audit
+                   job when there are none. Sink files are immutable
+                   and only ever added, so both are the same check;
       4. PUBLISH — fast path: if nothing got duplicated underneath us,
                    `rename` the staged part-files into the sink
                    (Spark part names embed a UUID, so no collisions);
@@ -171,10 +184,11 @@ def commit_append(
       5. UNLOCK  + clean staging.
 
     Correctness: duplicates require two writers appending the same key
-    concurrently; the audit under the lock sees every previously
-    PUBLISHED row, so the second writer filters the overlap. A crash
-    mid-publish leaves a PREFIX of unique staged files in the sink —
-    never a duplicate — and the job is idempotent to re-run.
+    concurrently; the audit under the lock sees every row PUBLISHED
+    since the caller's snapshot, so the second writer filters the
+    overlap. A crash mid-publish leaves a PREFIX of unique staged files
+    in the sink — never a duplicate — and the job is idempotent to
+    re-run.
 
     FS constraints (documented, not assumed silently): needs atomic
     `mkdir` (lock) and same-filesystem `rename` (publish) — true for
@@ -190,30 +204,22 @@ def commit_append(
 
     Returns the number of rows actually published.
     """
-    import contextlib
-    import shutil
-    import time
-    import uuid
+    return _append_renamed(
+        new_rows, sink_path, key_col, frozenset(), None, lock_timeout_s, stale_lock_s
+    )[0]
 
-    spark = new_rows.sparkSession
-    txn = uuid.uuid4().hex
-    stage_dir = f"{sink_path}.staging-{txn}"
-    lock_dir = f"{sink_path}.commitlock"
 
-    try:
-        new_rows.write.parquet(stage_dir)
-    except Exception:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        raise
-
-    deadline = time.monotonic() + lock_timeout_s
+def _take_lock(lock_dir: str, timeout_s: float, stale_s: float) -> None:
+    """Take a commit lock by atomic `mkdir`; TimeoutError after
+    `timeout_s` of a live holder."""
+    deadline = time.monotonic() + timeout_s
     while True:
         try:
             os.mkdir(lock_dir)
-            break
+            return
         except FileExistsError:
-            # Break a stale lock (crashed holder) after stale_lock_s.
-            # Reap via an atomic rename to a unique reaper-owned name:
+            # Break a stale lock (crashed holder) after stale_s. Reap
+            # via an atomic rename to a unique reaper-owned name:
             # exactly ONE competing reaper's rename succeeds, so two
             # waiters can never both observe-stale-then-remove (the
             # plain stat+rmdir TOCTOU where the second rmdir deletes a
@@ -221,10 +227,10 @@ def commit_append(
             # rename, re-verify staleness on the reaped dir: if a fresh
             # lock slid under the rename we restore it and back off.
             try:
-                if time.time() - os.stat(lock_dir).st_mtime > stale_lock_s:
+                if time.time() - os.stat(lock_dir).st_mtime > stale_s:
                     reaped = f"{lock_dir}.reaped-{uuid.uuid4().hex}"
                     os.rename(lock_dir, reaped)
-                    if time.time() - os.stat(reaped).st_mtime > stale_lock_s:
+                    if time.time() - os.stat(reaped).st_mtime > stale_s:
                         os.rmdir(reaped)
                     else:
                         # raced a live holder between stat and rename —
@@ -236,59 +242,75 @@ def commit_append(
             except OSError:
                 continue  # lock released/reaped between stat and rename
             if time.monotonic() > deadline:
-                shutil.rmtree(stage_dir, ignore_errors=True)
                 raise TimeoutError(f"commit lock busy: {lock_dir}")
             time.sleep(0.2)
 
-    def _heartbeat() -> None:
-        # Refresh the lock mtime so a long-running (but live) audit or
-        # rewrite is never mistaken for a crashed holder by a reaper.
-        with contextlib.suppress(OSError):
-            os.utime(lock_dir)
 
+def _append_renamed(
+    new_rows: DataFrame,
+    sink_path: str,
+    key_col: str,
+    seen: frozenset[str],
+    tally: Callable[[DataFrame], object] | None = None,
+    lock_timeout_s: float = 120.0,
+    stale_lock_s: float = 600.0,
+) -> tuple[int, object]:
+    """The `commit_append` protocol. `seen` names the sink files (by
+    file name) the caller's dedup already read; the audit skips them.
+    `tally(staged)` runs once over the staged rows, before the lock,
+    and its result is returned with the published count (None when
+    nothing was staged)."""
+    spark = new_rows.sparkSession
+    stage_dir = f"{sink_path}.staging-{uuid.uuid4().hex}"
+    rewrite_dir = f"{stage_dir}-audited"
+    lock_dir = f"{sink_path}.commitlock"
     try:
-        staged = spark.read.parquet(stage_dir)
-        _heartbeat()
-        n_staged = staged.count()
+        staged_files = _stage(new_rows, [], stage_dir)
+        n_staged = _footer_rows(staged_files)
         if n_staged == 0:
-            return 0
-        if os.path.isdir(sink_path):
-            # Sink exists: audit MUST succeed. A transient read failure
-            # here (corrupt footer, lost executor) propagates and aborts
-            # the commit — treating it as "no sink" would publish the
-            # staged rows unaudited and silently insert duplicates.
-            _heartbeat()
-            existing = spark.read.parquet(sink_path).select(key_col)
-            survivors = staged.join(existing, key_col, "left_anti")
-            n_publish = survivors.count()
-        else:  # first commit: sink genuinely does not exist yet
+            return 0, None
+        staged = spark.read.schema(new_rows.schema).parquet(*staged_files)
+        tallied = tally(staged) if tally else None
+        _take_lock(lock_dir, lock_timeout_s, stale_lock_s)
+        try:
+            # A read failure of a landed file propagates and aborts the
+            # commit: skipping it would publish unaudited duplicates.
+            landed = [f for f in data_files(sink_path) if os.path.basename(f) not in seen]
             survivors, n_publish = staged, n_staged
-
-        publish_from = stage_dir
-        if n_publish == 0:
-            return 0
-        if n_publish < n_staged:
-            rewrite_dir = f"{sink_path}.staging-{txn}-audited"
-            _heartbeat()
-            survivors.write.parquet(rewrite_dir)
-            publish_from = rewrite_dir
-        os.makedirs(sink_path, exist_ok=True)
-        for fname in os.listdir(publish_from):
-            if fname.endswith(".parquet"):
-                os.rename(
-                    os.path.join(publish_from, fname),
-                    os.path.join(sink_path, fname),
-                )
-        return n_publish
+            if landed:
+                _heartbeat(lock_dir)
+                survivors = staged.join(_keys_in(spark, landed, staged, key_col), key_col, "left_anti")
+                n_publish = survivors.count()
+            if n_publish == 0:
+                return 0, tallied
+            if n_publish < n_staged:
+                _heartbeat(lock_dir)
+                staged_files = _stage(survivors, [], rewrite_dir)
+            os.makedirs(sink_path, exist_ok=True)
+            for f in staged_files:
+                os.rename(f, os.path.join(sink_path, os.path.basename(f)))
+            return n_publish, tallied
+        finally:
+            # tolerant unlock: a failure here must not mask the real
+            # error (the stale-mtime breaker will reap a leaked lock)
+            with contextlib.suppress(OSError):
+                os.rmdir(lock_dir)
     finally:
-        import contextlib
-
-        # tolerant unlock: a failure here must not mask the real error
-        # (the stale-mtime breaker will reap a leaked lock anyway)
-        with contextlib.suppress(OSError):
-            os.rmdir(lock_dir)
         shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(f"{sink_path}.staging-{txn}-audited", ignore_errors=True)
+        shutil.rmtree(rewrite_dir, ignore_errors=True)
+
+
+def _heartbeat(lock_dir: str) -> None:
+    """Refresh the lock mtime so a long-running (but live) audit or
+    rewrite is never mistaken for a crashed holder by a reaper."""
+    with contextlib.suppress(OSError):
+        os.utime(lock_dir)
+
+
+def _keys_in(spark: SparkSession, files: list[str], staged: DataFrame, key_col: str) -> DataFrame:
+    """The `key_col` column of `files`, read with the staged key's type
+    (a known schema: no footer job)."""
+    return spark.read.schema(StructType([staged.schema[key_col]])).parquet(*files)
 
 
 # ---------------------------------------------------------------------------
@@ -782,12 +804,17 @@ def _stage(df: DataFrame, staging: list[str], d: str) -> list[str]:
     footer has rows (Spark writes a file for partition 0 even when it
     is empty); if every file is empty the first one stays, so a commit
     never lists no file (`read_manifest_sink` reads [] as no sink)."""
-    import pyarrow.parquet as pq
-
     staging.append(d)
     df.write.parquet(d)
     files = data_files(d)
-    return [f for f in files if pq.read_metadata(f).num_rows] or files[:1]
+    return [f for f in files if _footer_rows([f])] or files[:1]
+
+
+def _footer_rows(files: list[str]) -> int:
+    """Rows in parquet `files`, from their footers (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def commit_append_manifest(
@@ -802,6 +829,10 @@ def commit_append_manifest(
 ) -> int:
     """Exactly-once keyed append for object stores: stage, audit against
     the current manifest, publish the next manifest by exclusive create.
+    This public entry audits every file the manifest lists;
+    `ingest_archives` audits only the files listed since the generation
+    its dedup read (the same check: listed files are immutable, and a
+    rewrite lists new files).
 
     `stats_cols` records per-file min/max for those columns in the
     manifest (enabling `read_manifest_pruned` file skipping); once a
@@ -819,35 +850,57 @@ def commit_append_manifest(
     Returns the number of rows actually published. Raises RuntimeError
     after `max_retries` lost generation races (pathological contention).
     """
+    return _append_manifest(
+        new_rows, sink_path, key_col, frozenset(), None, max_retries,
+        stats_cols, bloom_cols, bloom_bits, bloom_hashes,
+    )[0]
+
+
+def _append_manifest(
+    new_rows: DataFrame,
+    sink_path: str,
+    key_col: str,
+    seen: frozenset[str],
+    tally: Callable[[DataFrame], object] | None = None,
+    max_retries: int = 20,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    bloom_bits: int = BLOOM_BITS_DEFAULT,
+    bloom_hashes: int = BLOOM_HASHES_DEFAULT,
+) -> tuple[int, object]:
+    """The `commit_append_manifest` protocol. `seen` names the manifest
+    files the caller's dedup already read; the audit skips them.
+    `tally` as in `_append_renamed`."""
     spark = new_rows.sparkSession
     txn = uuid.uuid4().hex
     stage_dir = os.path.join(sink_path, "data", f"txn-{txn}")
     log = manifest_log(sink_path)
     with log.reaping([]) as staging:
         staged_files = _stage(new_rows, staging, stage_dir)
-        staged = spark.read.parquet(stage_dir)
-        n_staged = staged.count()
+        n_staged = _footer_rows(staged_files)
         if n_staged == 0:
-            return 0
+            return 0, None
+        staged = spark.read.schema(new_rows.schema).parquet(*staged_files)
+        tallied = tally(staged) if tally else None
 
         def attempt(gen: int, doc: dict, _):
             _check_delete_key(doc, key_col, "append")
             files = list(doc.get("files", []))
-            if files:
-                _assert_compatible_schema(spark, files, staged, "commit_append_manifest")
-                # Audit MUST succeed: a read failure of LIVE manifest
-                # files aborts the commit rather than skipping dedup.
-                # Reads through delete vectors: a deleted key is gone,
-                # so re-appending it is a legitimate insert.
+            _assert_compatible_schema(spark, files, staged, "commit_append_manifest")
+            # Audit MUST succeed: a read failure of LIVE manifest
+            # files aborts the commit rather than skipping dedup.
+            # Reads through delete vectors: a deleted key is gone,
+            # so re-appending it is a legitimate insert.
+            landed = [f for f in files if f not in seen]
+            survivors, n_publish = staged, n_staged
+            if landed:
                 existing = _apply_delete_vectors(
-                    spark, spark.read.parquet(*files), doc
-                ).select(key_col)
+                    spark, _keys_in(spark, landed, staged, key_col), doc
+                )
                 survivors = staged.join(existing, key_col, "left_anti")
                 n_publish = survivors.count()
-            else:
-                survivors, n_publish = staged, n_staged
             if n_publish == 0:
-                return None, 0
+                return None, (0, tallied)
             new_files = staged_files
             if n_publish < n_staged:
                 # subset survived: stage the audited subset as new
@@ -859,7 +912,7 @@ def commit_append_manifest(
                 spark, gen, doc, txn, files, new_files,
                 stats_cols=stats_cols, bloom_cols=bloom_cols,
                 bloom_bits=bloom_bits, bloom_hashes=bloom_hashes,
-            ), n_publish
+            ), (n_publish, tallied)
 
         return log.commit(attempt, max_retries, "commit_append_manifest")
 
@@ -937,6 +990,10 @@ def commit_merge_manifest(
                         staging,
                         os.path.join(sink_path, "data", f"txn-{txn}-rw{gen}-{i}"),
                     )
+                    # the batch replaced every row of the affected files:
+                    # list no empty rewrite (the staged batch has rows)
+                    if not _footer_rows(rewrite_files):
+                        rewrite_files = []
             return _next_manifest(
                 spark, gen, doc, txn, carried, rewrite_files + staged_files
             ), MergeResult(n_ins, n_upd)
@@ -1487,6 +1544,57 @@ def warehouse_gc(warehouse_path: str) -> int:
     )
 
 
+_GAME_KEY = StructType([GAMES_SCHEMA["game_url"]])
+
+
+def _no_keys(spark: SparkSession) -> DataFrame:
+    """An empty game-key frame the optimizer can see is empty, so an
+    anti-join against it plans no join (an empty `createDataFrame` is
+    an opaque Python RDD and still plans and runs one)."""
+    return spark.range(0).select(F.lit(None).cast(_GAME_KEY["game_url"].dataType).alias("game_url"))
+
+
+def _renamed_snapshot(spark: SparkSession, sink_path: str) -> tuple[DataFrame, frozenset[str]]:
+    """(game keys, names of the files they come from) of a rename sink.
+    The names are Spark's own listing of the scan, so exactly the files
+    the dedup reads."""
+    if not os.path.isdir(sink_path):
+        return _no_keys(spark), frozenset()
+    keys = spark.read.schema(_GAME_KEY).parquet(sink_path)
+    return keys, frozenset(
+        os.path.basename(unquote(urlparse(u).path)) for u in keys.inputFiles()
+    )
+
+
+def _manifest_snapshot(spark: SparkSession, sink_path: str) -> tuple[DataFrame, frozenset[str]]:
+    """(live game keys, listed files) of a manifest sink's newest
+    generation. A manifest sink's root dir is never readable as bare
+    parquet."""
+    _, doc = _current_manifest_doc(sink_path)
+    files = doc.get("files", [])
+    if not files:
+        return _no_keys(spark), frozenset()
+    _check_delete_key(doc, "game_url", "append")
+    keys = _apply_delete_vectors(spark, spark.read.schema(_GAME_KEY).parquet(*files), doc)
+    return keys, frozenset(files)
+
+
+# commit_protocol -> (dedup snapshot, append core)
+_PROTOCOLS = {
+    "rename": (_renamed_snapshot, _append_renamed),
+    "manifest": (_manifest_snapshot, _append_manifest),
+}
+
+
+def _tally_archives(staged: DataFrame) -> dict[tuple[str, str], tuple[int, int | None]]:
+    """(username, archive_url) -> (staged games, max end_time epoch s),
+    in one aggregate over the staged rows."""
+    rows = staged.groupBy("username", "archive_url").agg(
+        F.count(F.lit(1)), F.max(F.unix_timestamp("end_time_utc"))
+    )
+    return {(u, a): (n, t) for u, a, n, t in rows.collect()}
+
+
 def ingest_archives(
     spark: SparkSession,
     archives: DataFrame,
@@ -1498,106 +1606,76 @@ def ingest_archives(
 ) -> IngestResult:
     """Full incremental ingest run. Returns counts + per-user watermarks.
 
-    `commit_protocol`: "rename" (POSIX/HDFS write-audit-publish via
-    `commit_append`) or "manifest" (object-store-safe generation swap
-    via `commit_append_manifest`; the sink is then manifest-structured
-    and must be read back with `read_manifest_sink`).
+    `commit_protocol`: "rename" (POSIX/HDFS write-audit-publish, the
+    `commit_append` protocol) or "manifest" (object-store-safe
+    generation swap, the `commit_append_manifest` protocol; the sink is
+    then manifest-structured and must be read back with
+    `read_manifest_sink`).
+
+    One flow for both, and the dedup plan runs once: its result is
+    staged straight from the plan (with a `rebalance` hint, so AQE
+    sizes the files: one for a daily delta, several for a backfill),
+    and every count comes from the staged files — the staged total
+    from their footers, the per-archive counts and watermarks from one
+    aggregate over them. The sink files the dedup read are recorded;
+    under the commit the staged keys are audited only against files
+    published since then (none, under the single-writer discipline, so
+    no audit job runs).
     """
-    if commit_protocol not in ("rename", "manifest"):
-        raise ValueError(f"unknown commit_protocol: {commit_protocol!r}")
+    try:
+        snapshot, append = _PROTOCOLS[commit_protocol]
+    except KeyError:
+        raise ValueError(f"unknown commit_protocol: {commit_protocol!r}") from None
     state = load_state(state_path) if state_path else {}
     if reprocess_last:
         state = unmark_last_archive(state)
 
     fresh = prune_processed(archives, state)
-    flat = flatten_archives(fresh)
-    existing = None
-    if commit_protocol == "manifest":
-        # a manifest sink's root dir is never readable as bare parquet —
-        # resolve the snapshot (empty frame when no generation exists)
-        existing = read_manifest_sink(spark, sink_path)
-        if existing is None:
-            existing = spark.createDataFrame([], "game_url string")
-    new_rows = dedup_against_sink(flat, sink_path, existing=existing).persist()
-    try:
-        appended = new_rows.count()
-        if appended:
-            # Write-audit-publish instead of a raw append: under the
-            # single-writer discipline the audit is a no-op re-check,
-            # under a concurrent writer it closes the lost-update
-            # window (see commit_append / commit_append_manifest).
-            committer = (
-                commit_append_manifest if commit_protocol == "manifest" else commit_append
-            )
-            appended = committer(enforce_schema(new_rows, GAMES_SCHEMA), sink_path)
+    existing, seen = snapshot(spark, sink_path)
+    new_rows = dedup_against_sink(flatten_archives(fresh), sink_path, existing=existing)
+    # Write-audit-publish instead of a raw append: under the
+    # single-writer discipline the audit has nothing to read, under a
+    # concurrent writer it closes the lost-update window (see
+    # commit_append / commit_append_manifest).
+    appended, tallied = append(
+        enforce_schema(new_rows, GAMES_SCHEMA).hint("rebalance"),
+        sink_path,
+        "game_url",
+        seen,
+        _tally_archives,
+    )
 
-        # S6 audit records + I1 watermark in one small aggregation pass.
-        # Stats derive from `fresh` itself (not the flatten), so an archive
-        # with ZERO games still gets an audit row and is marked processed —
-        # the reference explicitly records empty archives with game_count=0
-        # (fetch_and_post.py:345-350); a plain explode would drop them and
-        # they would be re-fetched forever. game_count counts APPENDED
-        # (post-dedup) rows, matching the reference's audit semantics
-        # (fetch_and_post.py:390-394 records len(appended rows)), and the
-        # watermark is the max end_time over appended games (:399-407).
-        fetched = fresh.groupBy("username", "archive_url").agg(
-            F.sum(F.coalesce(F.size("games"), F.lit(0))).alias("fetched_count")
-        )
-        appended_per = new_rows.groupBy("username", "archive_url").agg(
-            F.count(F.lit(1)).alias("appended_count"),
-            F.max(F.unix_timestamp("end_time_utc")).alias("max_end_time"),
-        )
-        per_archive = (
-            fetched.join(appended_per, ["username", "archive_url"], "left")
-            .select(
-                "username",
-                "archive_url",
-                F.coalesce("appended_count", F.lit(0)).alias("game_count"),
-                "max_end_time",
-            )
-        )
-        stats = per_archive.collect()  # tiny: one row per (user, archive)
-        if audit_path:
-            # The audit frame IS per_archive (one row per archive, just
-            # collected) — build it from the in-hand rows instead of
-            # re-executing the fetched⋈appended join as a second job.
-            # Timestamp semantics match the reference: processed_at is
-            # the client-observed commit wall clock
-            # (fetch_and_post.py:345-350), not a data-derived value.
-            from datetime import datetime, timezone
+    # S6 audit records + I1 watermark. The archive keys come from
+    # `fresh` itself (not the flatten), so an archive with ZERO games
+    # still gets an audit row and is marked processed — the reference
+    # explicitly records empty archives with game_count=0
+    # (fetch_and_post.py:345-350); a plain explode would drop them and
+    # they would be re-fetched forever. game_count counts STAGED
+    # (post-dedup) rows, matching the reference's audit semantics
+    # (fetch_and_post.py:390-394 records len(appended rows)), and the
+    # watermark is the max end_time over them (:399-407).
+    keys = dict.fromkeys(map(tuple, fresh.select("username", "archive_url").collect()))
+    stats = [(u, a, *(tallied or {}).get((u, a), (0, None))) for u, a in keys]
+    if audit_path:
+        # processed_at is the client-observed commit wall clock, as in
+        # the reference (fetch_and_post.py:345-350), not a data-derived
+        # value; tz-aware, so the instant does not depend on the host's
+        # zone.
+        from datetime import datetime, timezone
 
-            # tz-AWARE on purpose: TimestampType.toInternal converts
-            # aware datetimes via utctimetuple (host-independent), but
-            # interprets NAIVE ones through time.mktime in the system
-            # local zone — a naive utcnow() would shift processed_at by
-            # the host's UTC offset on non-UTC machines.
-            now = datetime.now(timezone.utc)
-            audit_rows = spark.createDataFrame(
-                [
-                    (r["username"], r["archive_url"], now, int(r["game_count"]))
-                    for r in stats
-                ],
-                PROCESSED_ARCHIVES_SCHEMA,
-            )
-            # repartition(1), NOT coalesce(1): one audit file per run
-            # either way, but coalesce folds into the local-relation
-            # stage and measured ~4s of fixed overhead per write where
-            # the round-trip shuffle is ~0.1s on a 1-partition frame.
-            enforce_schema(audit_rows, PROCESSED_ARCHIVES_SCHEMA).repartition(1).write.mode(
-                "append"
-            ).parquet(audit_path)
-    finally:
-        new_rows.unpersist()
+        now = datetime.now(timezone.utc)
+        _append_rows(
+            spark, [(u, a, now, n) for u, a, n, _ in stats], PROCESSED_ARCHIVES_SCHEMA, audit_path
+        )
 
     watermarks: dict[str, int] = {}
     # URL order is month order (see unmark_last_archive)
-    for row in sorted(stats, key=lambda r: r["archive_url"]):
-        user = row["username"]
+    for user, url, _, max_end in sorted(stats, key=lambda r: r[1]):
         entry = state.setdefault(user, {"last_end_time": 0, "processed_archives": []})
-        if row["archive_url"] not in entry["processed_archives"]:
-            entry["processed_archives"].append(row["archive_url"])
-        if row["max_end_time"] and row["max_end_time"] > entry.get("last_end_time", 0):
-            entry["last_end_time"] = int(row["max_end_time"])
+        if url not in entry["processed_archives"]:
+            entry["processed_archives"].append(url)
+        if max_end and max_end > entry.get("last_end_time", 0):
+            entry["last_end_time"] = int(max_end)
         watermarks[user] = entry.get("last_end_time", 0)
     if state_path:
         save_state(state_path, state)

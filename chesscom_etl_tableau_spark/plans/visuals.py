@@ -27,7 +27,7 @@ from chesscom_etl_tableau_spark.functions.derivations import (
 from chesscom_etl_tableau_spark.functions.measures import draw_cond, loss_cond, measure_exprs, win_cond
 from chesscom_etl_tableau_spark.functions.pgn import pgn_eco
 from chesscom_etl_tableau_spark.functions.time_control import time_control_bucket
-from chesscom_etl_tableau_spark.operators.topk import semi_join_topn, topn_by_count
+from chesscom_etl_tableau_spark.operators.topk import topk_keys
 from chesscom_etl_tableau_spark.operators.windows import rolling_ratio_by_day
 
 
@@ -95,14 +95,18 @@ def rolling_winrate_line(games: DataFrame, days: int = 12, slicers: Slicers | No
 
 def top_opponents_pivot(games: DataFrame, n: int = 10, slicers: Slicers | None = None) -> DataFrame:
     """Visual [7]: per-opponent W/L/D for the top-n opponents by game
-    count (F3 Top-N subquery + J4 semi join), sorted by losses desc (F5)."""
+    count (F3 Top-N), sorted by losses desc (F5). One aggregate carries
+    every measure and is ranked in place, with no semi-join back to the
+    fact. The IN-subquery never matches a NULL key, so a NULL opponent
+    ranked into the top n is dropped after ranking (n-1 rows)."""
     df = _filtered(games, slicers)
-    topn = topn_by_count(df, ["opponent_username"], n)
-    scoped = semi_join_topn(df, topn, ["opponent_username"])
     m = measure_exprs(F.col("result"), F.col("user_color"))
+    per_opponent = df.groupBy("opponent_username").agg(
+        m["total_games"], m["total_wins"], m["total_losses"], m["total_draws"]
+    )
     return (
-        scoped.groupBy("opponent_username")
-        .agg(m["total_games"], m["total_wins"], m["total_losses"], m["total_draws"])
+        topk_keys(per_opponent, ["opponent_username"], "total_games", n)
+        .where(F.col("opponent_username").isNotNull())
         .orderBy(F.col("total_losses").desc(), F.col("opponent_username").asc())
     )
 
@@ -141,17 +145,15 @@ def winrate_by_bucket_color(games: DataFrame, slicers: Slicers | None = None) ->
 
 def top_openings_bar(games: DataFrame, n: int = 5, slicers: Slicers | None = None) -> DataFrame:
     """Visual [14]: win rate for the top-n ECO openings by game count
-    (F4 Top-N by measure + A7 per-opening win rate)."""
+    (F4 Top-N by measure + A7 per-opening win rate), from one ranked
+    aggregate like `top_opponents_pivot`."""
     df = _filtered(games, slicers).where(F.col("eco").isNotNull())
-    topn = topn_by_count(df, ["eco"], n)
-    scoped = semi_join_topn(df, topn, ["eco"])
     wins = F.count_if(win_cond(F.col("result"), F.col("user_color")))
     total = F.count(F.lit(1))
-    return (
-        scoped.groupBy("eco")
-        .agg(
-            total.alias("total_games"),
-            F.round(F.try_divide(wins, total), 6).alias("win_rate"),
-        )
-        .orderBy(F.col("win_rate").desc(), F.col("eco").asc())
+    per_eco = df.groupBy("eco").agg(
+        total.alias("total_games"),
+        F.round(F.try_divide(wins, total), 6).alias("win_rate"),
+    )
+    return topk_keys(per_eco, ["eco"], "total_games", n).orderBy(
+        F.col("win_rate").desc(), F.col("eco").asc()
     )

@@ -68,8 +68,8 @@ def _ingest_fixture(spark, sf_dir):
     )
     # Materialize once (optimization r15, guide §5): every consumer is
     # an EAGER ingest fixture that evaluates the archive frame several
-    # times per run (ingest_archives reads it for new_rows AND for the
-    # audit stats; i5 runs four ingests) — without the pin the
+    # times per run (ingest_archives reads it for the staged rows AND for
+    # the audit's archive keys; i5 runs four ingests) — without the pin the
     # orders-scan + double-groupBy fixture build re-ran up to 8x. The
     # frame is ~60 rows.
     return arch.unionByName(empty).localCheckpoint()

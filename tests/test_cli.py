@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -296,3 +297,85 @@ class TestRunPipelineFaults:
         assert rows["https://game/3"]["end_time_utc"] is not None
         state = json.loads((tmp_path / "out" / "state.json").read_text())
         assert state["alice"]["last_end_time"] == 1704070800
+
+
+def _jobs_in(spark, fn) -> int:
+    """Spark jobs `fn()` runs, counted through a job group and the
+    status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestDailyRunCost:
+    def test_two_day_job_budget(self, spark, tmp_path):
+        """The daily run is a fixed, small number of Spark jobs: the
+        dedup plan runs once (staged straight from the plan), counts
+        come from the staged files, no audit job runs when nothing
+        landed since the dedup, and status rows are written once."""
+        users = ["alice", "bob", "carol"]
+        base = "https://api.chess.com/pub/player"
+        archives = {u: [f"{base}/{u}/games/2024/0{m}" for m in (1, 2, 3)] for u in users}
+        games = {
+            url: [_game(f"{u}-{m}-{i}", 1704067200 + 86400 * (31 * m + i)) for i in range(5)]
+            for u in users
+            for m, url in enumerate(archives[u])
+        }
+        out = str(tmp_path / "out")
+
+        def run():
+            return run_pipeline(
+                spark, users, out, transport=_scripted_transport(archives, games), delay_s=0.0
+            )
+
+        assert _jobs_in(spark, run) <= 10  # day 0: backfill of 45 games
+        # day 1: a late game in each open month plus a new month
+        for u in users:
+            games[archives[u][-1]] = games[archives[u][-1]] + [_game(f"{u}-late", 1711900000)]
+            archives[u] = archives[u] + [f"{base}/{u}/games/2024/04"]
+            games[archives[u][-1]] = [_game(f"{u}-new", 1712000000)]
+        assert _jobs_in(spark, run) <= 12
+        sunk = spark.read.parquet(f"{out}/games")
+        assert sunk.count() == sunk.select("game_url").distinct().count() == 51
+        files = [f for f in os.listdir(f"{out}/games") if f.endswith(".parquet")]
+        assert len(files) == 2  # one file per append
+        assert len([f for f in os.listdir(f"{out}/status") if f.endswith(".parquet")]) == 2
+
+    def test_failed_run_still_logs(self, spark, tmp_path, monkeypatch):
+        from functools import partial
+
+        from chesscom_etl_tableau_spark import cli
+        from chesscom_etl_tableau_spark.sources.rest import RetryingFetcher
+
+        monkeypatch.setattr(
+            cli, "RetryingFetcher", partial(RetryingFetcher, sleep=lambda s: None)
+        )
+        inner = _scripted_transport(
+            {"alice": ["https://a/2024/01"]}, {"https://a/2024/01": [_game(1)]}
+        )
+
+        def transport(url):
+            if url == "https://api.chess.com/pub/player/bob/games/archives":
+                return 503, ""
+            return inner(url)
+
+        def failing_ingest(*a, **k):
+            raise RuntimeError("ingest failed")
+
+        monkeypatch.setattr(cli, "ingest_archives", failing_ingest)
+        out = str(tmp_path / "out")
+        with pytest.raises(RuntimeError, match="ingest failed"):
+            run_pipeline(spark, ["alice", "bob"], out, transport=transport, delay_s=0.0)
+        rows = spark.read.parquet(f"{out}/status").collect()
+        assert [(r["stage"], r["username"], r["http_status"]) for r in rows] == [
+            ("error_fetch_archives", "bob", "503")
+        ]
+        assert rows[0]["timestamp_utc"] is not None

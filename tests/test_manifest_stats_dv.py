@@ -170,6 +170,19 @@ class TestEmptyPartFiles:
         _, doc = _current_manifest_doc(sink)
         assert len(doc["files"]) == 1
 
+    def test_merge_replacing_a_whole_file_lists_no_empty_rewrite(self, spark, tmp_path, no_rename):
+        sink = str(tmp_path / "msink")
+        rows = spark.range(5).select(
+            F.concat(F.lit("k"), F.col("id")).alias("game_url"), F.col("id").alias("payload")
+        ).coalesce(1)
+        assert commit_append_manifest(rows, sink) == 5
+        upsert = rows.withColumn("payload", F.col("payload") + 100)
+        assert commit_merge_manifest(upsert, sink) == (0, 5)
+        _, doc = _current_manifest_doc(sink)
+        assert len(doc["files"]) == 1
+        got = sorted(r["payload"] for r in read_manifest_sink(spark, sink).collect())
+        assert got == [100, 101, 102, 103, 104]
+
 
 class TestDeleteVectors:
     pytestmark = pytest.mark.slow  # heavy suite, default-profile excluded (r16)

@@ -156,6 +156,59 @@ class TestCommitProtocol:
         # the second committer's audit dropped exactly the overlap
         assert n_b == new_b.count() - overlap.select("game_url").distinct().count()
 
+    @pytest.mark.parametrize("protocol", ["rename", "manifest"])
+    def test_rival_landing_after_dedup_snapshot_is_audited(
+        self, spark, archives_df, tmp_path, monkeypatch, protocol
+    ):
+        """A rival commit lands between ingest's dedup snapshot and its
+        commit. The incremental audit reads only the files published
+        since the snapshot — the rival's — and drops their keys."""
+        from chesscom_etl_tableau_spark.plans import ingest as ING
+        from chesscom_etl_tableau_spark.sources.archives import flatten_archives
+
+        sink = str(tmp_path / "sink")
+        commit = ING.commit_append if protocol == "rename" else ING.commit_append_manifest
+
+        def sink_files():
+            if protocol == "rename":
+                return set(ING.data_files(sink))
+            return set(ING._current_manifest_doc(sink)[1].get("files", []))
+
+        flat = flatten_archives(archives_df)
+        seed = ING.first_seen_wins(
+            flat.where(F.col("archive_url").endswith("player0/2024/01")), ["game_url"], ["game_url"]
+        )
+        rival = ING.first_seen_wins(
+            flat.where(F.col("username") == "player1"), ["game_url"], ["game_url"]
+        ).localCheckpoint()
+        n_seed, n_rival = commit(seed, sink), rival.count()
+        rival_files: set[str] = set()
+        audited: list[str] = []
+        tally, keys_in = ING._tally_archives, ING._keys_in
+
+        def tally_then_rival(staged):
+            out = tally(staged)
+            before = sink_files()
+            assert commit(rival, sink) == n_rival
+            rival_files.update(sink_files() - before)
+            audited.clear()  # the rival's own audit read the seed file
+            return out
+
+        def recording_keys_in(spark_, files, *a):
+            audited.extend(files)
+            return keys_in(spark_, files, *a)
+
+        monkeypatch.setattr(ING, "_tally_archives", tally_then_rival)
+        monkeypatch.setattr(ING, "_keys_in", recording_keys_in)
+        r = ING.ingest_archives(
+            spark, archives_df, sink, reprocess_last=False, commit_protocol=protocol
+        )
+        assert rival_files and set(audited) == rival_files
+        sunk = spark.read.parquet(sink) if protocol == "rename" else ING.read_manifest_sink(spark, sink)
+        distinct = flat.select("game_url").distinct().count()
+        assert sunk.count() == sunk.select("game_url").distinct().count() == distinct
+        assert r.appended_games == distinct - n_seed - n_rival
+
     def test_threaded_writers_serialize(self, spark, tmp_path):
         import threading
 

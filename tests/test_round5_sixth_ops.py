@@ -303,6 +303,25 @@ class TestRecordLinkage:
         # possible_threshold
         assert (1, 12) not in rows and (2, 11) not in rows
 
+    def test_side_projections_in_first_seen_order(self, spark):
+        """The __l_*/__r_* projections list block then compare columns
+        in first-seen order, so the plan does not vary with the
+        process's string-hash seed."""
+        import re
+
+        from chesscom_etl_tableau_spark.operators.linkage import record_linkage
+
+        cols = ["c7", "c2", "c5", "c0", "c3", "c6", "c1", "c4"]
+        df = spark.createDataFrame([], "id long, " + ", ".join(f"{c} string" for c in cols))
+        out = record_linkage(
+            df, df, block_cols=cols[:3], compare_cols=cols[2:],
+            params={c: (0.9, 0.1) for c in cols[2:]},
+        )
+        plan = out._jdf.queryExecution().analyzed().toString()
+        for side in ("l", "r"):
+            proj = next(ln for ln in plan.splitlines() if f"AS id_{side}#" in ln)
+            assert re.findall(rf"AS __{side}_(\w+)#", proj) == cols
+
     def test_null_fields_compare_nullsafe(self, spark):
         from chesscom_etl_tableau_spark.operators.linkage import record_linkage
 

@@ -67,6 +67,27 @@ class TestTopN:
         losses = [r["total_losses"] for r in out]
         assert losses == sorted(losses, reverse=True)
 
+    def test_null_opponent_ranked_then_dropped(self, spark):
+        """A NULL opponent ranked into the top n leaves n-1 rows: the
+        Top-N IN-subquery never matches a NULL key, so the one-pass
+        form ranks first and drops NULL after."""
+        rows = [
+            ("player0", "a", f"u{opp}{i}", "600", None, "2024-01-01", "player0", 1500, opp, 1500, "0-1", "")
+            for opp, k in [(None, 5), ("opp_a", 4), ("opp_b", 3), ("opp_c", 2)]
+            for i in range(k)
+        ]
+        df = spark.createDataFrame(
+            rows,
+            "username string, archive_url string, game_url string, time_control string, "
+            "end_time_utc timestamp, date_ymd string, white_username string, white_rating int, "
+            "black_username string, black_rating int, result string, pgn string",
+        ).withColumn("date_ymd", F.to_date("date_ymd"))
+        out = top_opponents_pivot(enrich_games(df), n=3).collect()
+        assert [(r["opponent_username"], r["total_games"], r["total_losses"]) for r in out] == [
+            ("opp_a", 4, 4),
+            ("opp_b", 3, 3),
+        ]
+
     def test_top_openings(self, games_df):
         out = top_openings_bar(user_games(games_df), n=2).collect()
         assert 0 < len(out) <= 2
