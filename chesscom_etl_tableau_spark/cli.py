@@ -41,6 +41,7 @@ from chesscom_etl_tableau_spark.sources.rest import (
     parse_fetched,
     urllib_transport,
 )
+from chesscom_etl_tableau_spark.util import local_frame
 
 
 def parse_usernames(raw: str | None) -> list[str]:
@@ -112,12 +113,9 @@ def run_pipeline(
 
         if distributed:
             factory = transport_factory or (lambda: urllib_transport())
-            url_df = (
-                spark.createDataFrame(fresh, "username string, archive_url string")
-                .repartition(fetch_partitions)
-                if fresh
-                else spark.createDataFrame([], "username string, archive_url string")
-            )
+            url_df = local_frame(
+                spark, fresh, "username string, archive_url string"
+            ).repartition(fetch_partitions)
             fetched = distributed_fetch_archives(url_df, factory, delay_s=delay_s)
             archives_df, errors_df = parse_fetched(fetched)
             errors = [

@@ -37,7 +37,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from chesscom_etl_tableau_spark.util import ensure_parallelism
+from chesscom_etl_tableau_spark.util import ensure_parallelism, local_frame
 
 
 def _as_double(vec: Column) -> Column:
@@ -437,10 +437,7 @@ def with_rp_signature(
     n_literals = len(planes) * (len(planes[0]) if planes else 0)
     if n_literals <= RP_LITERAL_LIMIT and not force_broadcast:
         return df.withColumn(out_col, rp_signature(F.col(vec_col), planes))
-    spark = df.sparkSession
-    prow = spark.createDataFrame(
-        [(planes,)], "__planes array<array<double>>"
-    )
+    prow = local_frame(df.sparkSession, [(planes,)], "__planes array<array<double>>")
     return (
         df.crossJoin(F.broadcast(prow))
         .withColumn(
@@ -746,7 +743,7 @@ def _pruned(spark, probes: DataFrame, scan) -> DataFrame:
     rows = probes.collect()
     index = scan(sorted({r["bucket"] for r in rows}))
     return index.join(
-        F.broadcast(spark.createDataFrame(rows, probes.schema)), "bucket"
+        F.broadcast(local_frame(spark, rows, probes.schema)), "bucket"
     )
 
 
@@ -1118,8 +1115,8 @@ def ivf_build_centroids(
     centers = [
         (i, [float(v) for v in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    return corpus.sparkSession.createDataFrame(
-        centers, "centroid_id int, embedding array<double>"
+    return local_frame(
+        corpus.sparkSession, centers, "centroid_id int, embedding array<double>"
     )
 
 
@@ -1927,9 +1924,7 @@ def mmr_rerank(
                 best = (key, cid, score)
         chosen.add(best[1])
         selected.append((best[1], rank, best[2]))
-    return spark.createDataFrame(
-        selected, f"{id_col} bigint, rank int, mmr_score double"
-    )
+    return local_frame(spark, selected, f"{id_col} bigint, rank int, mmr_score double")
 
 
 def cosine_range_search(
@@ -2099,8 +2094,8 @@ def whitening_contract(
     n, s, g = _cov_partials(out, "whitened", dim)
     mean = s / n
     cov = g / n - np.outer(mean, mean)
-    spark = emb.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        emb.sparkSession,
         [
             (
                 int(n),

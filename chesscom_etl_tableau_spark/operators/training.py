@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from chesscom_etl_tableau_spark.operators.text import word_tokens
+from chesscom_etl_tableau_spark.util import local_frame
 
 # Knuth multiplicative hash constant (2^32 / phi). Portable: plain
 # bigint multiply + mod, identical in any engine — unlike xxhash64/md5
@@ -818,8 +819,8 @@ def bpe_merge_table(
     """`bpe_learn_merges` surfaced as a DataFrame:
     (rank, left, right, pair_count) — the learned merge table a
     tokenizer would persist."""
-    spark = docs.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        docs.sparkSession,
         bpe_learn_merges(docs, k=k, text_col=text_col, id_col=id_col),
         "rank bigint, left string, right string, pair_count bigint",
     )

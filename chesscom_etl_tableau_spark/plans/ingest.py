@@ -48,7 +48,7 @@ from chesscom_etl_tableau_spark.plans import genlog
 from chesscom_etl_tableau_spark.plans.genlog import data_files, manifest_log, warehouse_log
 from chesscom_etl_tableau_spark.schemas import GAMES_SCHEMA, PROCESSED_ARCHIVES_SCHEMA, enforce_schema
 from chesscom_etl_tableau_spark.sources.archives import flatten_archives
-from chesscom_etl_tableau_spark.util import _append_rows
+from chesscom_etl_tableau_spark.util import _append_rows, local_frame
 
 
 @dataclass
@@ -95,18 +95,29 @@ def unmark_last_archive(state: dict) -> dict:
 def prune_processed(archives: DataFrame, state: dict) -> DataFrame:
     """J2: skip archives already marked processed (set-difference).
 
-    The processed set is tiny (months x users) — broadcast anti-join.
+    The processed set is tiny (months x users), so it goes into the
+    plan as one literal (a JSON array the optimizer parses once), not as
+    a frame to join: over a local archives frame (what `fetch_archives`
+    returns) the filter folds into the relation and evaluating the
+    result runs no job. The plan stays a few nodes however many
+    archives are processed. An archive with a NULL username or URL
+    never matches and stays, as under an anti-join.
     """
-    spark = archives.sparkSession
-    rows = [
-        (user, url)
+    processed = [
+        {"username": user, "archive_url": url}
         for user, entry in state.items()
         for url in entry.get("processed_archives", [])
     ]
-    if not rows:
+    if not processed:
         return archives
-    processed = spark.createDataFrame(rows, "username string, archive_url string")
-    return archives.join(F.broadcast(processed), ["username", "archive_url"], "left_anti")
+    known = F.from_json(
+        F.lit(json.dumps(processed)), "array<struct<username: string, archive_url: string>>"
+    )
+    return archives.where(
+        F.col("username").isNull()
+        | F.col("archive_url").isNull()
+        | ~F.array_contains(known, F.struct("username", "archive_url"))
+    )
 
 
 def first_seen_wins(df: DataFrame, key_cols: list[str], order_cols: list) -> DataFrame:
@@ -662,23 +673,33 @@ def read_manifest_pruned(
     return _apply_delete_vectors(spark, df, doc)
 
 
-def _assert_compatible_schema(spark, files: list[str], staged, where: str) -> None:
+def _assert_compatible_schema(files: list[str], staged, where: str) -> None:
     """Commit-time schema fence: a staged column that REUSES an existing
     column's name with a different type would publish a table whose
     reads flake on parquet file order (schema inference samples one
     footer; the vectorized reader then throws on the other physical
     type). Table formats reject this at commit; so do we. New columns
     are fine — that's union-by-name evolution, which reads handle via
-    merge_schema."""
+    merge_schema. The stored schema comes from one file's footer, read
+    driver-side without a Spark job: the Spark schema a Spark writer
+    records there, else the footer's Arrow schema. Types compare
+    without nullability, as a read (which makes every field nullable)
+    sees them."""
     if not files:
         return
-    existing = {f.name: f.dataType for f in spark.read.parquet(files[0]).schema.fields}
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    footer = pq.read_schema(files[0])
+    written = (footer.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    stored = StructType.fromJson(json.loads(written)) if written else from_arrow_schema(footer)
+    existing = {f.name: f.dataType.simpleString() for f in stored.fields}
     for f in staged.schema.fields:
         have = existing.get(f.name)
-        if have is not None and have != f.dataType:
+        if have is not None and have != f.dataType.simpleString():
             raise ValueError(
                 f"{where}: staged column {f.name!r} is {f.dataType.simpleString()} "
-                f"but the table stores {have.simpleString()} — cast before "
+                f"but the table stores {have} — cast before "
                 "committing (same-name type conflicts break parquet reads)"
             )
 
@@ -886,7 +907,7 @@ def _append_manifest(
         def attempt(gen: int, doc: dict, _):
             _check_delete_key(doc, key_col, "append")
             files = list(doc.get("files", []))
-            _assert_compatible_schema(spark, files, staged, "commit_append_manifest")
+            _assert_compatible_schema(files, staged, "commit_append_manifest")
             # Audit MUST succeed: a read failure of LIVE manifest
             # files aborts the commit rather than skipping dedup.
             # Reads through delete vectors: a deleted key is gone,
@@ -1254,7 +1275,7 @@ def manifest_change_feed(
     a = _side(doc_a, side_files_a)
     b = _side(doc_b, side_files_b)
     if a is None and b is None:
-        return spark.createDataFrame([], f"change_type string, `{key_col}` string")
+        return local_frame(spark, [], f"change_type string, `{key_col}` string")
     out_cols = [f.name for f in (b.schema if b is not None else a.schema).fields]
     data_cols = [c for c in out_cols if c != key_col]
 
@@ -1471,7 +1492,7 @@ def commit_tables(
             stage_dir = os.path.join(_data_dir(name), f"txn-{txn}")
             staged = spark.read.parquet(stage_dir)
             old_files = prior.get(name, {}).get("files", [])
-            _assert_compatible_schema(spark, old_files, staged, f"commit_tables[{name}]")
+            _assert_compatible_schema(old_files, staged, f"commit_tables[{name}]")
             key = key_cols.get(name)
             new_files = staged_files[name]
             if key and old_files:
@@ -1547,19 +1568,12 @@ def warehouse_gc(warehouse_path: str) -> int:
 _GAME_KEY = StructType([GAMES_SCHEMA["game_url"]])
 
 
-def _no_keys(spark: SparkSession) -> DataFrame:
-    """An empty game-key frame the optimizer can see is empty, so an
-    anti-join against it plans no join (an empty `createDataFrame` is
-    an opaque Python RDD and still plans and runs one)."""
-    return spark.range(0).select(F.lit(None).cast(_GAME_KEY["game_url"].dataType).alias("game_url"))
-
-
 def _renamed_snapshot(spark: SparkSession, sink_path: str) -> tuple[DataFrame, frozenset[str]]:
     """(game keys, names of the files they come from) of a rename sink.
     The names are Spark's own listing of the scan, so exactly the files
     the dedup reads."""
     if not os.path.isdir(sink_path):
-        return _no_keys(spark), frozenset()
+        return local_frame(spark, [], _GAME_KEY), frozenset()
     keys = spark.read.schema(_GAME_KEY).parquet(sink_path)
     return keys, frozenset(
         os.path.basename(unquote(urlparse(u).path)) for u in keys.inputFiles()
@@ -1573,7 +1587,7 @@ def _manifest_snapshot(spark: SparkSession, sink_path: str) -> tuple[DataFrame, 
     _, doc = _current_manifest_doc(sink_path)
     files = doc.get("files", [])
     if not files:
-        return _no_keys(spark), frozenset()
+        return local_frame(spark, [], _GAME_KEY), frozenset()
     _check_delete_key(doc, "game_url", "append")
     keys = _apply_delete_vectors(spark, spark.read.schema(_GAME_KEY).parquet(*files), doc)
     return keys, frozenset(files)

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chesscom_etl_tableau_spark.plans import genlog
+from chesscom_etl_tableau_spark.util import local_frame
 
 METADATA_FORMAT = "spark-graft-manifest/1"
 
@@ -285,9 +286,7 @@ def _footer_rows(spark: SparkSession, files: list[str], io=None) -> dict[str, in
     # serializing through one task (matters at 10^5 files / object
     # store latency; harmless locally).
     nparts = min(len(files), spark.sparkContext.defaultParallelism)
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        nparts
-    )
+    fdf = local_frame(spark, [(f,) for f in files], "path string").repartition(nparts)
     out = fdf.mapInPandas(read_footers, "path string, n_rows long").collect()
     return {r["path"]: int(r["n_rows"]) for r in out}
 
@@ -350,9 +349,8 @@ def snapshot_log(
         "snapshot_id bigint, n_data_files bigint, n_delete_files bigint, "
         "total_records bigint, protocol bigint, is_current boolean"
     )
-    if not summaries:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 s["snapshot_id"],

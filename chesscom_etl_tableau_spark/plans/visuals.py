@@ -112,7 +112,9 @@ def top_opponents_pivot(games: DataFrame, n: int = 10, slicers: Slicers | None =
 
 
 def result_donut(games: DataFrame, slicers: Slicers | None = None) -> DataFrame:
-    """Visual [11]: win/loss/draw breakdown from the user's perspective."""
+    """Visual [11]: win/loss/draw breakdown from the user's perspective.
+    At most four rows, so they are sorted in one partition: the global
+    sort then needs no range-partition sampling job."""
     df = _filtered(games, slicers)
     outcome = (
         F.when(win_cond(F.col("result"), F.col("user_color")), "win")
@@ -123,12 +125,15 @@ def result_donut(games: DataFrame, slicers: Slicers | None = None) -> DataFrame:
     return (
         df.groupBy(outcome.alias("outcome"))
         .agg(F.count(F.lit(1)).alias("games"))
+        .coalesce(1)
         .orderBy(F.col("games").desc(), F.col("outcome").asc())
     )
 
 
 def winrate_by_bucket_color(games: DataFrame, slicers: Slicers | None = None) -> DataFrame:
-    """Visual [12]: win rate by time_control_bucket x user_color (A6)."""
+    """Visual [12]: win rate by time_control_bucket x user_color (A6).
+    At most 6 buckets x 2 colours, sorted in one partition like
+    `result_donut`."""
     df = _filtered(games, slicers)
     wins = F.count_if(win_cond(F.col("result"), F.col("user_color")))
     total = F.count(F.lit(1))
@@ -139,6 +144,7 @@ def winrate_by_bucket_color(games: DataFrame, slicers: Slicers | None = None) ->
             wins.alias("total_wins"),
             F.round(F.try_divide(wins, total), 6).alias("win_rate"),
         )
+        .coalesce(1)
         .orderBy(F.col("win_rate").desc(), F.col("time_control_bucket"), F.col("user_color"))
     )
 

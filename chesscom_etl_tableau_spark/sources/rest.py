@@ -42,6 +42,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from chesscom_etl_tableau_spark.schemas import ARCHIVE_SCHEMA
+from chesscom_etl_tableau_spark.util import local_frame
 
 RETRY_STATUSES = frozenset({429, 500, 502, 503, 504})
 DEFAULT_MAX_RETRIES = 3
@@ -169,11 +170,13 @@ def fetch_archives(
     """S2 driver-side: fetch each archive's games JSON -> archives frame.
 
     Returns (archives_df, errors) where errors = (user, url, message).
-    Suitable for small fetch sets; use `distributed_fetch_archives` for
-    wide fan-out.
+    The fetched records reach the JVM as one Arrow batch (`local_frame`),
+    so the frame is a local relation: no job over it starts a Python
+    worker, and a filter over it folds into the relation. Suitable for
+    small fetch sets; use `distributed_fetch_archives` for wide fan-out.
     """
     records = list(_fetch_records(fetcher, user_archives))
-    archives_df, _ = parse_fetched(spark.createDataFrame(records, _FETCHED_SCHEMA))
+    archives_df, _ = parse_fetched(local_frame(spark, records, _FETCHED_SCHEMA))
     errors = [(user, url, err) for user, url, _, err in records if err is not None]
     return archives_df, errors
 

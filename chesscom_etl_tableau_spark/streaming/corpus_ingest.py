@@ -63,6 +63,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chesscom_etl_tableau_spark.util import local_frame
+
 
 def _state_dir(ivf_path: str) -> str:
     # underscore prefix: invisible to Spark's file listing, like the
@@ -200,7 +202,7 @@ def corpus_ingest_batch(
     index_frame = (
         registry.select("fingerprint")
         if registry is not None
-        else spark.createDataFrame([], "fingerprint string")
+        else local_frame(spark, [], "fingerprint string")
     )
     fresh = incremental_exact_dedup(
         batch, index_frame, text_col, id_col

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chesscom_etl_tableau_spark.sources.sinks import _hadoop_fs
+from chesscom_etl_tableau_spark.util import local_frame
 
 
 def _latest_state_dir(spark, state_path: str, before_batch: int) -> str | None:
@@ -104,11 +105,7 @@ def streaming_heavy_hitters(
             ]
         else:
             survivors = [(r["key"], r["count_lo"]) for r in rows]
-        out = spark.createDataFrame(
-            survivors or [(None, 0)], "key string, count_lo long"
-        )
-        if not survivors:
-            out = out.where(F.col("key").isNotNull())
+        out = local_frame(spark, survivors, "key string, count_lo long")
         out.write.mode("overwrite").parquet(
             state_path.rstrip("/") + f"/batch-{batch_id}"
         )
@@ -125,7 +122,7 @@ def read_heavy_state(spark, state_path: str) -> DataFrame:
     """The newest persisted candidate set: (key, count_lo), count desc."""
     d = _latest_state_dir(spark, state_path, before_batch=1 << 62)
     if d is None:
-        return spark.createDataFrame([], "key string, count_lo long")
+        return local_frame(spark, [], "key string, count_lo long")
     return spark.read.parquet(d).orderBy(
         F.col("count_lo").desc(), F.col("key").asc()
     )

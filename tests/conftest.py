@@ -35,6 +35,27 @@ def spark() -> SparkSession:
     yield s
 
 
+@pytest.fixture
+def count_jobs(spark):
+    """`count_jobs(fn)`: the Spark jobs `fn()` runs, counted through a
+    job group and the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
+
+
 def make_game(
     url: str,
     end_time: int | None = 1700000000,

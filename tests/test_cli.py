@@ -299,24 +299,8 @@ class TestRunPipelineFaults:
         assert state["alice"]["last_end_time"] == 1704070800
 
 
-def _jobs_in(spark, fn) -> int:
-    """Spark jobs `fn()` runs, counted through a job group and the
-    status tracker."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 class TestDailyRunCost:
-    def test_two_day_job_budget(self, spark, tmp_path):
+    def test_two_day_job_budget(self, spark, tmp_path, count_jobs):
         """The daily run is a fixed, small number of Spark jobs: the
         dedup plan runs once (staged straight from the plan), counts
         come from the staged files, no audit job runs when nothing
@@ -336,13 +320,13 @@ class TestDailyRunCost:
                 spark, users, out, transport=_scripted_transport(archives, games), delay_s=0.0
             )
 
-        assert _jobs_in(spark, run) <= 10  # day 0: backfill of 45 games
+        assert count_jobs(run) <= 8  # day 0: backfill of 45 games
         # day 1: a late game in each open month plus a new month
         for u in users:
             games[archives[u][-1]] = games[archives[u][-1]] + [_game(f"{u}-late", 1711900000)]
             archives[u] = archives[u] + [f"{base}/{u}/games/2024/04"]
             games[archives[u][-1]] = [_game(f"{u}-new", 1712000000)]
-        assert _jobs_in(spark, run) <= 12
+        assert count_jobs(run) <= 10
         sunk = spark.read.parquet(f"{out}/games")
         assert sunk.count() == sunk.select("game_url").distinct().count() == 51
         files = [f for f in os.listdir(f"{out}/games") if f.endswith(".parquet")]

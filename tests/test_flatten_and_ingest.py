@@ -17,6 +17,7 @@ from chesscom_etl_tableau_spark.plans.ingest import (
 )
 from chesscom_etl_tableau_spark.schemas import GAMES_SCHEMA
 from chesscom_etl_tableau_spark.sources.archives import flatten_archives
+from chesscom_etl_tableau_spark.util import local_frame
 
 
 class TestFlatten:
@@ -131,3 +132,19 @@ def test_unmark_reopens_latest_month_of_out_of_order_list():
     state = {"u": {"last_end_time": 5, "processed_archives": pa}}
     kept = unmark_last_archive(state)["u"]["processed_archives"]
     assert kept == [base + m for m in ("2024/03", "2024/01", "2024/02")]
+
+
+def test_prune_processed_keeps_null_keys(spark, count_jobs):
+    """A NULL username or URL never matches the processed set (as
+    with an anti-join), and over a local frame the prune runs no
+    job."""
+    archives = local_frame(
+        spark,
+        [("alice", "u1"), ("alice", None), (None, "u1"), ("bob", "u1"), ("alice", "u2")],
+        "username string, archive_url string",
+    )
+    state = {"alice": {"processed_archives": ["u1", None]}, "carol": {}}
+    pruned = prune_processed(archives, state)
+    got = []
+    assert count_jobs(lambda: got.extend(map(tuple, pruned.collect()))) == 0
+    assert got == [("alice", None), (None, "u1"), ("bob", "u1"), ("alice", "u2")]

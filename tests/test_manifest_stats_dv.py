@@ -946,6 +946,30 @@ class TestSchemaFence:
         with pytest.raises(ValueError, match="user_id.*int"):
             commit_append_manifest(bad.localCheckpoint(), sink)
 
+    def test_fence_reads_the_footer_without_a_job(self, spark, tmp_path, no_rename, count_jobs):
+        """The stored schema comes from one footer, driver-side: the
+        fence runs no Spark job, so an append over a non-empty sink runs
+        one job fewer than a schema inference would cost. Nested types
+        that differ only in nullability do not conflict."""
+        from chesscom_etl_tableau_spark.plans.ingest import (
+            _assert_compatible_schema,
+            _current_manifest_doc,
+        )
+
+        sink = str(tmp_path / "msink")
+        first = spark.range(3).select(
+            F.col("id").alias("game_url"),
+            F.array(F.col("id").cast("double")).alias("vec"),
+            F.timestamp_seconds("id").cast("timestamp_ntz").alias("seen"),
+        )
+        commit_append_manifest(first.localCheckpoint(), sink)
+        files = _current_manifest_doc(sink)[1]["files"]
+        staged = spark.read.schema(first.schema).parquet(*files)
+        assert count_jobs(lambda: _assert_compatible_schema(files, staged, "t")) == 0
+        bad = staged.select("game_url", F.col("vec").cast("array<float>").alias("vec"))
+        with pytest.raises(ValueError, match="'vec' is array<float>.*array<double>"):
+            _assert_compatible_schema(files, bad, "t")
+
     def test_new_columns_still_allowed(self, spark, tmp_path, no_rename):
         from chesscom_etl_tableau_spark.plans.ingest import read_manifest_sink
 

@@ -105,3 +105,12 @@ class TestDonutAndBuckets:
         assert all(0.0 <= r["win_rate"] <= 1.0 for r in out if r["win_rate"] is not None)
         seen = {(r["time_control_bucket"], r["user_color"]) for r in out}
         assert len(seen) == len(out)  # one row per group
+
+    def test_bounded_aggregates_sort_without_range_exchange(self, games_df):
+        """Both aggregates are bounded (4 outcomes; 6 buckets x 2
+        colours), so each is sorted in one partition: no range-partition
+        exchange, and no sampling job for its bounds."""
+        g = user_games(games_df)
+        for df in (result_donut(g), winrate_by_bucket_color(g)):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "rangepartitioning" not in plan, plan
