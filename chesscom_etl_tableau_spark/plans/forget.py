@@ -60,6 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chesscom_etl_tableau_spark.plans import genlog
+from chesscom_etl_tableau_spark.plans import ingest as ING
 
 PROTOCOL = genlog.PROTOCOL
 
@@ -106,7 +107,6 @@ def _apply_surfaces(
     a surface that already forgot these ids publishes nothing and
     keeps its generation."""
     from chesscom_etl_tableau_spark.operators import index_log as IL
-    from chesscom_etl_tableau_spark.plans import ingest as ING
 
     ids = spark.read.parquet(doc["ids_dir"]).localCheckpoint()
     id_col = doc["id_col"]
@@ -154,9 +154,7 @@ def forget_ids(
     intents = genlog.intent_log(root)
     txn = uuid.uuid4().hex
     ids_dir = os.path.join(intents.dir, f"ids-{txn}")
-    doomed = ids.select(id_col).distinct()
-    doomed.write.parquet(ids_dir)
-    n_ids = spark.read.parquet(ids_dir).count()
+    n_ids = ING._stage_batch(ids.select(id_col).distinct(), [], ids_dir).rows
     doc = {
         "protocol": PROTOCOL,
         "txn": txn,

@@ -1,5 +1,6 @@
 """The generation log (plans/genlog.py): naming, the protocol fence on
-every read, the retry loop, and every commit kind's lost-race path.
+every read, the retry loop, every commit kind's lost-race path, and the
+published doc format.
 
 The lost-race tests let a rival win generation g+1 BETWEEN a commit's
 read of generation g and its exclusive create, through the module's one
@@ -10,15 +11,23 @@ current and never conflicts).
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import sys
 
-import pytest
-from pyspark.sql import functions as F
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DOC_GOLDEN = os.path.join(ROOT, "tests", "golden", "doc_format.json")
+sys.path.insert(0, ROOT)
 
-from chesscom_etl_tableau_spark.operators import index_log as IL
-from chesscom_etl_tableau_spark.plans import forget as FG
-from chesscom_etl_tableau_spark.plans import genlog
-from chesscom_etl_tableau_spark.plans import ingest as ING
+import pytest  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from chesscom_etl_tableau_spark.operators import index_log as IL  # noqa: E402
+from chesscom_etl_tableau_spark.plans import forget as FG  # noqa: E402
+from chesscom_etl_tableau_spark.plans import genlog  # noqa: E402
+from chesscom_etl_tableau_spark.plans import ingest as ING  # noqa: E402
+from chesscom_etl_tableau_spark.util import local_frame  # noqa: E402
 
 
 class TestLogFormat:
@@ -381,3 +390,81 @@ def test_max_retries_lost_races_raise(spark, tmp_path, monkeypatch, kind):
     if kind != "index_append":  # index appends write into the live layout
         assert c.clean() == 0
 
+
+def doc_format_snapshot(spark, root: str) -> dict:
+    """Every doc one scripted sequence publishes, per log: an append
+    with stats and blooms, a merge, a delete vector, two view refreshes,
+    a copy-on-write delete, a compaction, two warehouse txns and a
+    forget. Key frames are local relations and every rewrite touches
+    one file, so file layouts do not depend on runtime join choices."""
+    sink, view, wh, corpus = (os.path.join(root, n) for n in ("sink", "view", "wh", "corpus"))
+
+    def rows(lo, hi, parts=2, payload=0):
+        return spark.range(lo, hi, numPartitions=parts).select(
+            F.col("id").alias("game_url"),
+            (F.col("id") % 3).alias("grp"),
+            (F.col("id") + payload).alias("payload"),
+        ).localCheckpoint()
+
+    def keys(*ids, col="game_url"):
+        return local_frame(spark, [(i,) for i in ids], f"{col} long")
+
+    ING.commit_append_manifest(rows(0, 20), sink, stats_cols=["payload"], bloom_cols=["game_url"])
+    ING.refresh_incremental_agg(spark, sink, view, "grp", "payload")
+    ING.commit_merge_manifest(rows(5, 8, 1, 100).union(rows(25, 26, 1)).coalesce(1), sink)
+    ING.commit_delete_vector(keys(12), sink)
+    ING.refresh_incremental_agg(spark, sink, view, "grp", "payload")
+    ING.commit_delete_manifest(keys(15), sink)
+    ING.commit_compact_manifest(spark, sink, target_files=1)
+    facts = {"facts": "game_url"}
+    dim = local_frame(spark, [(0, "a"), (1, "b")], "grp long, name string")
+    ING.commit_tables({"facts": rows(0, 10, 1), "dim": dim}, wh, key_cols=facts)
+    ING.commit_tables({"facts": rows(5, 15, 1)}, wh, key_cols=facts)
+    ING.commit_append_manifest(
+        spark.range(10, numPartitions=1).select(F.col("id").alias("doc_id")).localCheckpoint(),
+        corpus, key_col="doc_id",
+    )
+    FG.forget_ids(keys(3, col="doc_id"), corpus)
+    logs = {
+        "sink": genlog.manifest_log(sink), "view": genlog.manifest_log(view),
+        "warehouse": genlog.warehouse_log(wh), "corpus": genlog.manifest_log(corpus),
+        "forget": genlog.intent_log(corpus), "forget_done": genlog.done_log(corpus),
+    }
+    return {name: [log.doc(n) for n in log.generations()] for name, log in logs.items()}
+
+
+def mask_docs(docs: dict, root: str) -> dict:
+    """`docs` with the root, txn ids (32-hex tokens, numbered by first
+    appearance in key-sorted JSON; bloom bitsets are longer hex runs and
+    stay) and Spark's part-file ids masked."""
+    text = json.dumps(docs, sort_keys=True).replace(root, "<root>")
+    text = re.sub(r"(part-\d{5})-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", r"\1-<id>", text)
+    txns: dict[str, str] = {}
+    text = re.sub(r"(?<![0-9a-f])[0-9a-f]{32}(?![0-9a-f])", lambda m: txns.setdefault(m[0], f"<txn{len(txns)}>"), text)
+    return json.loads(text)
+
+
+def test_published_docs_match_the_golden(spark, tmp_path):
+    """Every doc the commits publish, compared as parsed JSON with
+    `tests/golden/doc_format.json`. Regenerate with
+    `python tests/test_genlog.py` and say why in CHANGES.md."""
+    root = str(tmp_path)
+    got = mask_docs(doc_format_snapshot(spark, root), root)
+    with open(DOC_GOLDEN) as f:
+        want = json.load(f)
+    assert sorted(got) == sorted(want)
+    for name in want:
+        assert got[name] == want[name], name
+
+
+if __name__ == "__main__":
+    import tempfile
+
+    from chesscom_etl_tableau_spark.session import get_spark
+
+    with tempfile.TemporaryDirectory() as d:
+        docs = mask_docs(doc_format_snapshot(get_spark("tests", shuffle_partitions=4), d), d)
+    with open(DOC_GOLDEN, "w") as f:
+        json.dump(docs, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(f"wrote {DOC_GOLDEN}")

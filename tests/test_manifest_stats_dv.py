@@ -183,6 +183,26 @@ class TestEmptyPartFiles:
         got = sorted(r["payload"] for r in read_manifest_sink(spark, sink).collect())
         assert got == [100, 101, 102, 103, 104]
 
+    def test_cow_delete_of_a_whole_file_lists_no_empty_rewrite(self, spark, tmp_path, no_rename):
+        sink = str(tmp_path / "msink")
+        for lo in (0, 5):
+            rows = spark.range(lo, lo + 5).select(
+                F.concat(F.lit("k"), F.col("id")).alias("game_url")
+            ).coalesce(1)
+            assert commit_append_manifest(rows, sink) == 5
+        _, before = _current_manifest_doc(sink)
+        doomed = spark.range(5).select(F.concat(F.lit("k"), F.col("id")).alias("game_url"))
+        assert commit_delete_manifest(doomed, sink) == 5
+        _, doc = _current_manifest_doc(sink)
+        assert doc["files"] == before["files"][1:]
+        # emptying the whole sink keeps one empty file: the sink reads
+        # as empty, not as absent
+        rest = spark.range(5, 10).select(F.concat(F.lit("k"), F.col("id")).alias("game_url"))
+        assert commit_delete_manifest(rest, sink) == 5
+        _, doc = _current_manifest_doc(sink)
+        assert len(doc["files"]) == 1
+        assert read_manifest_sink(spark, sink).count() == 0
+
 
 class TestDeleteVectors:
     pytestmark = pytest.mark.slow  # heavy suite, default-profile excluded (r16)
@@ -569,13 +589,8 @@ class TestWarehouseTransactions:
     def test_commit_after_rival_generation_reads_its_state(
         self, spark, tmp_path, no_rename
     ):
-        import os as _os
-
-        from chesscom_etl_tableau_spark.plans.ingest import (
-            _warehouse_mdir,
-            commit_tables,
-            read_warehouse_table,
-        )
+        from chesscom_etl_tableau_spark.plans import genlog
+        from chesscom_etl_tableau_spark.plans.ingest import commit_tables, read_warehouse_table
 
         wh = str(tmp_path / "wh")
         facts, dim = self._batch(spark, 0, 10)
@@ -583,8 +598,7 @@ class TestWarehouseTransactions:
         # another writer published generation 2 BEFORE this commit
         # starts, so the commit reads it as current and never loses a
         # race (tests/test_genlog.py races between read and create)
-        mdir = _warehouse_mdir(wh)
-        with open(_os.path.join(mdir, f"txn-{2:012d}.json"), "x") as fh:
+        with open(genlog.warehouse_log(wh).path(2), "x") as fh:
             fh.write('{"generation": 2, "tables": {"facts": {"files": []}}}')
         out = commit_tables({"dim": dim.localCheckpoint()}, wh)
         assert out == {"dim": 10}
@@ -628,11 +642,9 @@ class TestWarehouseTransactions:
 
 class TestProtocolFence:
     def test_future_protocol_refused_single_table(self, spark, tmp_path, no_rename):
-        import os as _os
-
+        from chesscom_etl_tableau_spark.plans import genlog
         from chesscom_etl_tableau_spark.plans.ingest import (
             ManifestProtocolError,
-            _manifest_dir,
             read_manifest_sink,
         )
 
@@ -642,9 +654,7 @@ class TestProtocolFence:
             sink,
         )
         # a future writer publishes generation 2 under protocol 99
-        with open(
-            _os.path.join(_manifest_dir(sink), f"manifest-{2:012d}.json"), "x"
-        ) as fh:
+        with open(genlog.manifest_log(sink).path(2), "x") as fh:
             fh.write('{"generation": 2, "protocol": 99, "files": []}')
         with pytest.raises(ManifestProtocolError, match="protocol 99"):
             read_manifest_sink(spark, sink)
@@ -669,10 +679,8 @@ class TestProtocolFence:
         import json as _json
         import os as _os
 
-        from chesscom_etl_tableau_spark.plans.ingest import (
-            _manifest_dir,
-            read_manifest_sink,
-        )
+        from chesscom_etl_tableau_spark.plans import genlog
+        from chesscom_etl_tableau_spark.plans.ingest import read_manifest_sink
 
         sink = str(tmp_path / "msink")
         commit_append_manifest(
@@ -680,7 +688,7 @@ class TestProtocolFence:
             sink,
         )
         # strip the stamp (a pre-versioning writer's doc)
-        mpath = _os.path.join(_manifest_dir(sink), f"manifest-{1:012d}.json")
+        mpath = genlog.manifest_log(sink).path(1)
         with open(mpath) as fh:
             doc = _json.load(fh)
         doc.pop("protocol")
@@ -970,6 +978,21 @@ class TestSchemaFence:
         with pytest.raises(ValueError, match="'vec' is array<float>.*array<double>"):
             _assert_compatible_schema(files, bad, "t")
 
+    def test_merge_rejects_type_conflict(self, spark, tmp_path, no_rename):
+        sink = str(tmp_path / "msink")
+        commit_append_manifest(
+            spark.range(2).select(F.col("id").alias("game_url"), F.col("id").alias("v")),
+            sink,
+        )
+        gen, _ = _current_manifest_doc(sink)
+        bad = spark.range(1, 3).select(
+            F.col("id").alias("game_url"), F.col("id").cast("string").alias("v")
+        )
+        with pytest.raises(ValueError, match=r"commit_merge_manifest.*'v' is string.*bigint"):
+            commit_merge_manifest(bad, sink)
+        assert _current_manifest_doc(sink)[0] == gen
+        assert sorted(r["v"] for r in read_manifest_sink(spark, sink).collect()) == [0, 1]
+
     def test_new_columns_still_allowed(self, spark, tmp_path, no_rename):
         from chesscom_etl_tableau_spark.plans.ingest import read_manifest_sink
 
@@ -1058,3 +1081,52 @@ class TestWarehouseRetention:
         (stage / "part-0.parquet").write_bytes(b"not live")
         assert warehouse_gc(wh) == 1
         assert not stage.exists() or not list(stage.iterdir())
+
+
+class TestCommitJobBudget:
+    """Spark jobs per commit. Every commit counts its staged rows from
+    the footers and reads its staging with the staged schema, so none
+    pays a footer-inference or a count job for its own batch; a
+    copy-on-write counts matched rows and names the affected files in
+    one job. Key frames are local relations, so join strategies (and
+    with them the counts) do not depend on runtime statistics."""
+
+    @staticmethod
+    def _keys(spark, lo, hi):
+        return spark.range(lo, hi, numPartitions=2).select(
+            F.col("id").alias("game_url"), F.lit(0).cast("long").alias("payload")
+        ).localCheckpoint()
+
+    def test_commit_job_counts(self, spark, tmp_path, count_jobs):
+        from chesscom_etl_tableau_spark.plans.ingest import commit_tables
+        from chesscom_etl_tableau_spark.util import local_frame
+
+        def jobs(fn, *args, **kw):
+            return count_jobs(lambda: fn(*args, **kw))
+
+        got = {}
+        wh, keyed = str(tmp_path / "wh"), {"facts": "game_url"}
+        commit_tables({"facts": self._keys(spark, 0, 10)}, wh, key_cols=keyed)
+        got["tables"] = jobs(commit_tables, {"facts": self._keys(spark, 5, 20)}, wh, key_cols=keyed)
+        merge = str(tmp_path / "merge")
+        commit_append_manifest(self._keys(spark, 0, 10), merge)
+        got["merge"] = jobs(commit_merge_manifest, self._keys(spark, 5, 15), merge)
+        dv = str(tmp_path / "dv")
+        commit_append_manifest(self._keys(spark, 0, 10), dv)
+        doomed = local_frame(spark, [(3,), (7,)], "game_url long")
+        got["delete_vector"] = jobs(commit_delete_vector, doomed, dv)
+        sink = str(tmp_path / "sink")
+        commit_append_manifest(self._keys(spark, 0, 10), sink)
+        got["append"] = jobs(commit_append_manifest, self._keys(spark, 10, 20), sink)
+        got["append_audited"] = jobs(commit_append_manifest, self._keys(spark, 15, 30), sink)
+        commit_delete_vector(doomed, sink)
+        got["cow_delete"] = jobs(
+            commit_delete_manifest, local_frame(spark, [(1,), (12,)], "game_url long"), sink
+        )
+        got["compact"] = jobs(commit_compact_manifest, spark, sink, target_files=1)
+        # measured at local[4], 4 shuffle partitions
+        budget = {
+            "tables": 6, "merge": 10, "delete_vector": 4, "append": 4,
+            "append_audited": 6, "cow_delete": 15, "compact": 6,
+        }
+        assert {k: v for k, v in got.items() if v > budget[k]} == {}, got
